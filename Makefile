@@ -2,8 +2,9 @@
 
 .PHONY: test bench scaling submit-demo package clean
 
+# the Tier-1 command from ROADMAP.md, verbatim (make turns $$ into $)
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	python bench.py

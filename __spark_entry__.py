@@ -65,8 +65,9 @@ def _tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def q_lww_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3/A3: last-writer-wins winner per key by (ts, seq) — the engine's
-    core LWW operator (partial-aggregable max_by, operators/lww.py)."""
+    """J3/A3: last-writer-wins winner per key by (ts, seq), as one
+    partial-aggregable ``max_by`` (the merge's pandas equivalent is
+    operators/merge.py::lww_last)."""
     ev = _t(spark, sf_dir, "events")
     payload = F.struct("ts", "event_id", "event_type", "value")
     order = F.struct("ts", "event_id")

@@ -7,7 +7,8 @@ deterministic, pure, *vectorized* transform: a chain of pandas ``.str``
 regex operations over Arrow record batches — no per-row Python, no network.
 
 The SAME series functions are used by:
-  * the Spark `pandas_udf`s (`extract_text_udf`, `detect_lang_udf`), and
+  * the merge's bucket-local transform (``plans.replay.pages_pandas_transform``,
+    run by ``merge_batch`` inside ``mapInPandas`` on final winners only), and
   * the single-threaded pandas oracle in tests (`tests/oracle.py`),
 so extracted text is byte-identical between engine and oracle by
 construction (BASELINE.json input_hint: "byte-identical extracted text per
@@ -17,8 +18,6 @@ url").
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # --- extraction -----------------------------------------------------------
 
@@ -85,15 +84,3 @@ def detect_lang_series(text: pd.Series) -> pd.Series:
     best = df.idxmax(axis=1)
     best = best.where(df.max(axis=1) > 0, "und")  # undetermined
     return best.astype(object).where(text.notna(), None)
-
-
-# --- Spark pandas_udf wrappers -------------------------------------------
-
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return extract_text_series(html)
-
-
-@F.pandas_udf(T.StringType())
-def detect_lang_udf(text: pd.Series) -> pd.Series:
-    return detect_lang_series(text)

@@ -5,15 +5,7 @@ idiomatic Catalyst-optimizable DataFrame transformation — declarative plans,
 partial aggregation, broadcast/bucket pruning — never driver-side loops.
 """
 
-from opengin_ingestion_spark.operators.lww import (  # noqa: F401
-    lww_winners,
-    lww_winners_semi,
-    lww_winners_window,
-)
-from opengin_ingestion_spark.operators.salt import (  # noqa: F401
-    ensure_min_parallelism,
-    salted_repartition,
-)
+from opengin_ingestion_spark.operators.salt import ensure_min_parallelism  # noqa: F401
 from opengin_ingestion_spark.operators.schema_map import (  # noqa: F401
     SchemaMapping,
     apply_schema_mapping,

@@ -14,12 +14,8 @@ Physical strategy (the scale story — each step sized for 10^10 events):
    write needs anyway, so it is the merge's only exchange. LWW,
    tombstoning and the vectorized transform all run partition-locally in
    one ``mapInPandas`` pass with zero further exchanges, no broadcast
-   build, no driver involvement. (This replaced an earlier design that
-   pre-winnowed the batch with a key-only winner semi-join,
-   ``lww_winners_semi``: the winnow's per-merge broadcast of winner-key
-   sets was measured to anti-scale at high thread counts; the
-   transform-after-winnow saving is preserved — the transform still runs
-   after the partition-local LWW, on final winners only.)
+   build, no driver involvement. The transform runs after the
+   partition-local LWW, on final winners only.
 3. **Memory invariant** (the cost of having no pre-winnow): ALL of a
    batch's revisions of a url cross the shuffle and land in one pandas
    partition alongside that bucket's target rows, so
@@ -92,6 +88,23 @@ class MergeResult:
     skipped: bool
     version: int | None = None
     metrics: dict[str, Any] = field(default_factory=dict)
+
+
+def lww_last(pdf, key: str, ts: str):
+    """Last-writer-wins over a pandas frame: the whole row with the largest
+    (ts, _seq, _from_target) per key.
+
+    Duplicate delivery → the redelivered copy ties the target row on
+    (ts, _seq); the target sorts LAST (False < True) so keep='last' picks
+    the already-applied copy. That keeps derived light columns (lang)
+    without recomputation AND — because target rows carry null heavy
+    payloads — nothing is re-appended to the heavy family: the
+    at-most-one-heavy-row-per-_seq manifest invariant
+    (gintable.heavy_seq_unique) that lets reads skip the whole-family
+    dropDuplicates."""
+    return pdf.sort_values(
+        [ts, SEQ_COL, FROM_TARGET_COL], kind="mergesort"
+    ).drop_duplicates(subset=[key], keep="last")
 
 
 def merge_batch(
@@ -171,10 +184,6 @@ def _merge_once(
     transform_fields: list[T.StructField] | None,
     hot_key_prereduce: bool = False,
 ) -> MergeResult:
-    import os as _os
-
-    _dbg = _os.environ.get("OPENGIN_MERGE_DEBUG")
-
     snap = table.current_snapshot()
     if table.is_batch_applied(batch_id, snap):
         return MergeResult(skipped=True, version=snap["version"])
@@ -219,8 +228,7 @@ def _merge_once(
         )
         .collect()
     )
-    if _dbg:
-        print(f"[merge {batch_id}] action1_stats: {time.time()-t_start:.2f}s", flush=True)
+    stats_s = round(time.time() - t_start, 3)
     touched = {r[BUCKET_COL] for r in in_stats}
     events_in = sum(r["events"] for r in in_stats)
     bytes_in = sum(r["bytes"] or 0 for r in in_stats)
@@ -289,9 +297,7 @@ def _merge_once(
     # One payload shuffle total (it is required for the bucketed write
     # anyway); LWW, tombstoning and the vectorized transform then all run
     # partition-locally with zero further exchanges, no broadcast build, no
-    # driver involvement. (Replaces the earlier winnow-join + max_by design,
-    # whose per-action broadcast of large winner-key sets was measured to
-    # anti-scale at high thread counts.)
+    # driver involvement.
     combined = target.select(*updates.columns).unionByName(updates)
     combined = combined.withColumn(BUCKET_COL, table.bucket_expr(key, snap))
     if hot_key_prereduce:
@@ -302,14 +308,9 @@ def _merge_once(
         pre_schema = combined.schema
 
         def partial_lww(batches):
-            import pandas as pd  # executor-side
-
             for pdf in batches:
-                if pdf.empty:
-                    continue
-                yield pdf.sort_values(
-                    [ts, SEQ_COL, FROM_TARGET_COL], kind="mergesort"
-                ).drop_duplicates(subset=[key], keep="last")
+                if not pdf.empty:
+                    yield lww_last(pdf, key, ts)
 
         combined = combined.mapInPandas(partial_lww, schema=pre_schema)
     bucketed = combined.repartition(len(touched), F.col(BUCKET_COL))
@@ -334,18 +335,7 @@ def _merge_once(
         pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
         if pdf.empty:
             return
-        # partition-local LWW: whole-row winner per key by (ts, seq).
-        # Duplicate delivery → the redelivered copy ties the target row on
-        # (ts, seq); the target sorts LAST (False < True) so keep='last'
-        # picks the already-applied copy. That keeps derived light columns
-        # (lang) without recomputation AND — because target rows carry null
-        # heavy payloads — nothing is re-appended to the heavy family: the
-        # at-most-one-heavy-row-per-_seq manifest invariant
-        # (gintable.heavy_seq_unique) that lets reads skip the whole-family
-        # dropDuplicates.
-        pdf = pdf.sort_values(
-            [ts, SEQ_COL, FROM_TARGET_COL], kind="mergesort"
-        ).drop_duplicates(subset=[key], keep="last")
+        pdf = lww_last(pdf, key, ts)
         deleted = pdf[OP_COL].to_numpy() == "D"
         pdf = pdf.copy()
         pdf[DELETED_COL] = deleted
@@ -370,8 +360,7 @@ def _merge_once(
     new_files = table.write_split_data_files(
         merged, snap["version"] + 1, schema_version, n_partitions=None
     )
-    if _dbg:
-        print(f"[merge {batch_id}] action2_write: {time.time()-t_w:.2f}s", flush=True)
+    write_s = round(time.time() - t_w, 3)
 
     lineage = [
         {
@@ -392,6 +381,10 @@ def _merge_once(
         "heavy_bytes_written": sum(f.bytes for f in new_files if f.family == "heavy"),
         "buckets_rewritten": len(touched),
         "merge_seconds": round(time.time() - t_start, 3),
+        # time in the merge's two Spark actions: the input-stats
+        # aggregation and the data-file write (which runs LWW + transform)
+        "stats_s": stats_s,
+        "write_s": write_s,
         "lag_seconds": (
             round(time.time() - max_ts.timestamp(), 3) if max_ts is not None else None
         ),

@@ -1,26 +1,11 @@
-"""Salted repartitioning — defeat hot-key skew in the vectorized UDF stage.
-
-The change log's urls are zipfian (a few urls dominate). A plain
-``repartition(P, "url")`` would send a hot url's entire event stream to one
-task; the Arrow-batched pandas UDFs downstream would then run on one core
-while 31 idle. Salting the partitioning key with a deterministic hash of a
-unique column spreads each hot url over ``salt_buckets`` sub-partitions.
-
-The salt is DERIVED (``pmod(xxhash64(seq), S)``), not ``F.rand()`` —
-deterministic under task retry, which Structured Streaming requires for
-exactly-once replays.
-
-De-salting is implicit: the LWW aggregation (operators/lww.py) groups by
-bare ``url`` again, and because it is partial-aggregable the post-salt
-shuffle moves at most ``salt_buckets`` pre-aggregated rows per url —
-the skew never reaches the reduce side. (north_rule: "salted
-repartitioning to defeat hot-url skew".)
+"""Parallelism floor for compute-heavy stages: ``ensure_min_parallelism``
+spreads a few-split input across the session's cores before expensive
+per-row expressions run (see its docstring).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def _parse_bytes(conf: str, default: int) -> int:
@@ -81,15 +66,3 @@ def ensure_min_parallelism(df: DataFrame, min_partitions: int | None = None) -> 
     if est >= max(1, target // 2):
         return df
     return df.repartition(target)
-
-
-def salted_repartition(
-    df: DataFrame,
-    num_partitions: int,
-    key: str = "url",
-    salt_from: str = "seq",
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Hash-repartition on (key, salt) where salt = xxhash64(salt_from) % S."""
-    salt = F.pmod(F.xxhash64(F.col(salt_from)), F.lit(salt_buckets))
-    return df.repartition(num_partitions, F.col(key), salt)

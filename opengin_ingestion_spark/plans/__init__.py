@@ -9,5 +9,4 @@ Catalyst owns physical planning; the engine owns only the commit protocol.
 from opengin_ingestion_spark.plans.replay import (  # noqa: F401
     PAGES_SCHEMA,
     replay_changelog,
-    transform_changes,
 )

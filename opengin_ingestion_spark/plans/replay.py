@@ -1,10 +1,12 @@
-"""Batch replay: change log → transform → MERGE → `pages` GinTable.
+"""Batch replay: change log → MERGE (with transform) → `pages` GinTable.
 
 The end-to-end slice of SURVEY.md §7 Phase 2. One logical plan per batch:
 
-    read(log) → salted repartition (hot-url skew)
-              → extract_text / detect_lang (Arrow-vectorized pandas UDFs)
-              → MERGE (LWW, bucket-pruned copy-on-write, exactly-once)
+    read(log) → MERGE: bucket shuffle → partition-local LWW
+                       → extract_text / detect_lang on final winners only
+                         (``pages_pandas_transform`` inside the merge's
+                         ``mapInPandas``)
+                       → bucket-pruned copy-on-write, exactly-once commit
 
 Reference analog: scan (scanner.py:55-102) + aggregate (aggregator.py:24-104)
 + export (exporter.py:28-103), collapsed into one declarative pipeline —
@@ -16,13 +18,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
-from opengin_ingestion_spark.functions.extract import detect_lang_udf, extract_text_udf
 from opengin_ingestion_spark.operators.merge import MergeResult, merge_batch
-from opengin_ingestion_spark.operators.salt import salted_repartition
 from opengin_ingestion_spark.sources.gintable import GinTable
 from opengin_ingestion_spark.sources.reader import read_changelog
 
@@ -64,40 +63,6 @@ def pages_pandas_transform(pdf):
     if need_lang.any():
         pdf.loc[need_lang, "lang"] = detect_lang_series(pdf.loc[need_lang, "text"])
     return pdf
-
-
-def transform_changes(
-    df: DataFrame,
-    shuffle_partitions: int | None = None,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """The vectorized schema-mapping/validation stage.
-
-    * salted repartition spreads hot urls across tasks BEFORE the pandas
-      UDFs. (When called on raw events this is what defeats zipf skew in
-      the UDF stage; called post-winnow by merge_batch it simply levels
-      batch sizes — the winnow's key-only partial aggregation has already
-      absorbed the hot-url skew map-side.)
-    * `text` = extract_text(html) — Arrow-batched, byte-deterministic,
-    * `lang` = input lang if the (evolved) log carries one, else detected,
-    * deletes skip extraction (`html` payload is irrelevant for a 'D').
-    """
-    n = shuffle_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    df = salted_repartition(df, int(n), key="url", salt_from="seq", salt_buckets=salt_buckets)
-    df = df.withColumn(
-        "text",
-        F.when(F.col("op") == "D", F.lit(None).cast("string")).otherwise(
-            extract_text_udf(F.col("html"))
-        ),
-    )
-    lang_in = F.col("lang") if "lang" in df.columns else F.lit(None).cast("string")
-    df = df.withColumn(
-        "lang",
-        F.when(F.col("op") == "D", F.lit(None).cast("string")).otherwise(
-            F.coalesce(lang_in, detect_lang_udf(F.col("text")))
-        ),
-    )
-    return df
 
 
 def estimate_dir_bytes(log_dir: str) -> int:

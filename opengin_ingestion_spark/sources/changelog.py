@@ -6,8 +6,9 @@ Models a binlog/WAL of Common-Crawl-style page changes per FIXTURES.md F2:
           warc_ts timestamp, html binary, content_len int|bigint,
           [lang string])
 
-* urls follow a zipfian distribution (hot-url skew — exercises salted
-  repartitioning and AQE skew joins),
+* urls follow a zipfian distribution (hot-url skew — exercises the
+  merge's bucket-local LWW under a concentrated partition and AQE skew
+  joins),
 * warc_ts carries out-of-order jitter (exercises LWW ordering),
 * html is a pure function of (url, seq) so the oracle can derive the
   expected extracted text independently,

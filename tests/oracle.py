@@ -3,7 +3,7 @@
 Implements the SAME logical semantics as the engine (LWW by (warc_ts, seq),
 I/U upsert, D delete, lang = given-else-detected) with none of the engine's
 machinery — plain pandas over pyarrow reads. Text extraction calls the very
-same `extract_text_series` the engine's pandas UDF uses, which is what makes
+same `extract_text_series` the engine's merge transform uses, which is what makes
 "byte-identical extracted text per url" checkable.
 
 Mirrors the reference's golden-replay strategy

@@ -15,7 +15,6 @@ from opengin_ingestion_spark.plans.replay import (
     TRANSFORM_FIELDS,
     pages_pandas_transform,
     replay_changelog,
-    transform_changes,
 )
 from opengin_ingestion_spark.sources.changelog import ChangeLogSpec, generate_changelog
 from opengin_ingestion_spark.sources.gintable import GinTable

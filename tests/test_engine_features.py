@@ -1,5 +1,5 @@
-"""Round-2 engine features: auto bucket sizing + rebucket, LWW broadcast
-auto-switch, declarative schema mapping (renames), tail maintenance hooks."""
+"""Round-2 engine features: auto bucket sizing + rebucket, declarative
+schema mapping (renames), tail maintenance hooks."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from opengin_ingestion_spark.operators.compact import rebucket
-from opengin_ingestion_spark.operators.lww import lww_winners, lww_winners_semi
 from opengin_ingestion_spark.operators.merge import merge_batch
 from opengin_ingestion_spark.operators.schema_map import (
     SchemaMapping,
@@ -19,9 +18,10 @@ from opengin_ingestion_spark.operators.schema_map import (
 )
 from opengin_ingestion_spark.plans.replay import (
     PAGES_SCHEMA,
+    TRANSFORM_FIELDS,
     estimate_dir_bytes,
+    pages_pandas_transform,
     replay_changelog,
-    transform_changes,
 )
 from opengin_ingestion_spark.sources.changelog import ChangeLogSpec, generate_changelog
 from opengin_ingestion_spark.sources.gintable import GinTable, choose_n_buckets
@@ -97,7 +97,10 @@ def test_rebucket_preserves_state_and_updates_pruning(spark, tiny_log, tmp_path)
     assert chk.filter(F.col("_b") != b).count() == 0
     # a further merge works against the new bucket count
     files = sorted(glob.glob(os.path.join(tiny_log["dir"], "*.parquet")))
-    res = merge_batch(table, transform_changes(spark.read.parquet(files[0])), batch_id=0)
+    res = merge_batch(
+        table, spark.read.parquet(files[0]), batch_id=0,
+        pandas_transform=pages_pandas_transform, transform_fields=TRANSFORM_FIELDS,
+    )
     assert res.skipped  # batch 0 already applied — idempotence survives rebucket
 
 
@@ -117,42 +120,6 @@ def test_rebucket_rejects_carried_files(spark, tmp_path):
     t.commit(files, set(), [0])
     with pytest.raises(ValueError, match="n_buckets change"):
         t.commit([], set(), [], new_n_buckets=8)
-
-
-# --- LWW broadcast auto-switch -----------------------------------------------
-
-@pytest.mark.parametrize("est_keys", [100, 10**9])
-def test_lww_semi_auto_broadcast_both_sides(spark, est_keys):
-    """Same result on both sides of the auto-switch; the plan contains a
-    broadcast join only under the limit."""
-    rows = [(f"u{i%7}", i, i * 10) for i in range(50)]
-    df = spark.createDataFrame(rows, "url string, _seq long, v long").withColumn(
-        "warc_ts", F.timestamp_seconds(F.col("_seq"))
-    )
-    out = lww_winners_semi(df, est_keys=est_keys)
-    expect = lww_winners(df)
-    cols = sorted(out.columns)
-    got = sorted(map(tuple, out.select(*cols).collect()))
-    want = sorted(map(tuple, expect.select(*cols).collect()))
-    assert got == want
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    if est_keys <= 20_000_000:
-        assert "Broadcast" in plan
-    else:
-        assert "BroadcastHashJoin" not in plan
-
-
-def test_lww_semi_auto_no_estimate_is_unhinted_and_correct(spark):
-    """Without an estimate the auto mode spends NO extra action (no
-    count()) and leaves the join to AQE; results still correct."""
-    rows = [(f"u{i%3}", i, i) for i in range(30)]
-    df = spark.createDataFrame(rows, "url string, _seq long, v long").withColumn(
-        "warc_ts", F.timestamp_seconds(F.col("_seq"))
-    )
-    out = lww_winners_semi(df)
-    assert out.count() == 3
-    static_plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "AdaptiveSparkPlan" in static_plan  # AQE owns the join strategy
 
 
 # --- declarative schema mapping ------------------------------------------------
@@ -180,20 +147,23 @@ def test_schema_mapping_rules(spark):
         apply_schema_mapping(df, {"renames": {"language": "tmp", "tmp": "lang"}})
 
 
-def test_midstream_rename_lands_in_existing_column(spark, tiny_log, tmp_path):
+def test_midstream_rename_lands_in_existing_column(spark, evolving_log, tmp_path):
     """An upstream era that renames `lang` → `language` merges into the
     SAME table column under a mapping spec: no variant fork, no old-null
-    split, LWW state identical to the unrenamed replay."""
-    files = sorted(glob.glob(os.path.join(tiny_log["dir"], "*.parquet")))
+    split, LWW state identical to the unrenamed replay. The evolving log
+    carries an upstream `lang` from batch ``evolution_k`` on; those eras
+    arrive renamed."""
+    files = sorted(glob.glob(os.path.join(evolving_log["dir"], "*.parquet")))
+    k = evolving_log["spec"].evolution_k
     table = GinTable.create(
         spark, str(tmp_path / "pages"), PAGES_SCHEMA, n_buckets=8
     )
     mapping = SchemaMapping(renames={"language": "lang"})
-    from opengin_ingestion_spark.plans.replay import TRANSFORM_FIELDS, pages_pandas_transform
 
     for i, f in enumerate(files):
-        df = transform_changes(spark.read.parquet(f))
-        if i >= len(files) // 2:  # later eras arrive renamed
+        df = spark.read.parquet(f)
+        if i >= k:  # later eras arrive renamed
+            assert "lang" in df.columns
             df = df.withColumnRenamed("lang", "language")
         merge_batch(
             table, df, batch_id=i,
@@ -205,7 +175,7 @@ def test_midstream_rename_lands_in_existing_column(spark, tiny_log, tmp_path):
     assert "lang" in names and "language" not in names
     assert_states_equal(
         table.read(include_internal=True).toPandas(),
-        oracle_final_state(tiny_log["dir"]),
+        oracle_final_state(evolving_log["dir"]),
     )
 
 

@@ -15,7 +15,11 @@ from opengin_ingestion_spark.operators.evolution import (
     evolve_schema,
 )
 from opengin_ingestion_spark.operators.merge import merge_batch
-from opengin_ingestion_spark.plans.replay import transform_changes
+from opengin_ingestion_spark.plans.replay import (
+    PAGES_SCHEMA,
+    TRANSFORM_FIELDS,
+    pages_pandas_transform,
+)
 from opengin_ingestion_spark.sources.gintable import GinTable
 from tests.oracle import assert_states_equal, oracle_final_state
 
@@ -76,12 +80,13 @@ def test_poison_batch_fails_fast_before_any_action(spark, tiny_log, tmp_path):
     Spark CAST_INVALID_INPUT instead (found by an end-to-end probe)."""
     import glob as _glob
 
-    from opengin_ingestion_spark.plans.replay import PAGES_SCHEMA, transform_changes
-
     table_path = str(tmp_path / "pages")
     files = sorted(_glob.glob(os.path.join(tiny_log["dir"], "*.parquet")))
     table = GinTable.create(spark, table_path, PAGES_SCHEMA, n_buckets=8)
-    merge_batch(table, transform_changes(spark.read.parquet(files[0])), batch_id=0)
+    merge_batch(
+        table, spark.read.parquet(files[0]), batch_id=0,
+        pandas_transform=pages_pandas_transform, transform_fields=TRANSFORM_FIELDS,
+    )
     v0 = table.current_version()
     rows0 = table.read().count()
 
@@ -110,15 +115,14 @@ def test_midstream_evolution_full_pipeline(spark, evolving_log, tmp_path):
         for f in os.listdir(evolving_log["dir"])
         if f.endswith(".parquet")
     )
-    table = None
+    table = GinTable.create(spark, table_path, PAGES_SCHEMA, n_buckets=16)
     versions = []
     for i, f in enumerate(files):
-        df = transform_changes(spark.read.parquet(f))  # per-file (era) schema
-        if table is None:
-            from opengin_ingestion_spark.plans.replay import PAGES_SCHEMA
-
-            table = GinTable.create(spark, table_path, PAGES_SCHEMA, n_buckets=16)
-        merge_batch(table, df, batch_id=i)
+        merge_batch(
+            table, spark.read.parquet(f), batch_id=i,  # per-file (era) schema
+            pandas_transform=pages_pandas_transform,
+            transform_fields=TRANSFORM_FIELDS,
+        )
         versions.append(table.current_snapshot()["schema_version"])
 
     # schema version bumped at batch 0 (adds text/lang/content_len over the

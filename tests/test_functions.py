@@ -1,16 +1,15 @@
 """Unit tests for the vectorized extraction/detection functions —
-determinism + engine-vs-oracle byte identity (the per-row invariant)."""
+determinism — and the plan check that the merge running them is
+Arrow-vectorized. (Engine-vs-oracle byte identity of extracted text is
+asserted by the replay-oracle tests, tests/oracle.py::assert_states_equal.)"""
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from opengin_ingestion_spark.functions.extract import (
     detect_lang_series,
-    detect_lang_udf,
     extract_text_series,
-    extract_text_udf,
 )
 from opengin_ingestion_spark.sources.changelog import make_html
 
@@ -55,27 +54,39 @@ def test_detect_lang():
     assert out[4] is None
 
 
-def test_udf_matches_series_byte_identical(spark):
-    """Engine pandas UDF output must be byte-identical to the oracle series
-    function on the same HTML (BASELINE.json input_hint invariant)."""
-    rows = [(f"https://s.com/{i}", make_html(f"https://s.com/{i}", i)) for i in range(200)]
-    df = spark.createDataFrame(rows, ["url", "html"])
-    got = (
-        df.withColumn("text", extract_text_udf("html"))
-        .withColumn("lang", detect_lang_udf("text"))
-        .orderBy("url")
-        .toPandas()
+def test_merge_runs_vectorized(spark, tiny_log, tmp_path):
+    """The shipped transform path — merge_batch with the pages transform —
+    runs its Python as MapInPandas (Arrow batches), never BatchEvalPython
+    (per-row): 'no per-row Python' is a spec rule. Checked on the plans of
+    the SQL executions the merge actually ran."""
+    from opengin_ingestion_spark.operators.merge import merge_batch
+    from opengin_ingestion_spark.plans.replay import (
+        PAGES_SCHEMA,
+        TRANSFORM_FIELDS,
+        pages_pandas_transform,
     )
-    expected_text = extract_text_series(pd.Series([r[1] for r in sorted(rows)], dtype=object))
-    expected_lang = detect_lang_series(expected_text)
-    assert list(got["text"]) == list(expected_text)
-    assert list(got["lang"]) == list(expected_lang)
+    from opengin_ingestion_spark.sources.gintable import GinTable
+    from opengin_ingestion_spark.sources.reader import read_changelog
 
+    store = spark._jsparkSession.sharedState().statusStore()
 
-def test_udf_is_arrow_vectorized(spark):
-    """The plan must use ArrowEvalPython (vectorized), not BatchEvalPython
-    (per-row) — 'no per-row Python' is a spec rule."""
-    df = spark.range(10).withColumn("h", F.lit(b"<p>x</p>"))
-    plan = df.withColumn("t", extract_text_udf("h"))._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan
-    assert "BatchEvalPython" not in plan
+    def executions():
+        seq = store.executionsList()
+        return [seq.apply(i) for i in range(seq.size())]
+
+    seen = max((e.executionId() for e in executions()), default=-1)
+    table = GinTable.create(
+        spark, str(tmp_path / "pages"), PAGES_SCHEMA, n_buckets=8,
+        heavy_columns=("html", "text"),
+    )
+    res = merge_batch(
+        table, read_changelog(spark, tiny_log["dir"]), batch_id=0,
+        pandas_transform=pages_pandas_transform, transform_fields=TRANSFORM_FIELDS,
+    )
+    assert not res.skipped
+    plans = [
+        e.physicalPlanDescription() for e in executions() if e.executionId() > seen
+    ]
+    assert plans, "the merge ran no SQL execution"
+    assert any("MapInPandas" in p for p in plans)
+    assert not any("BatchEvalPython" in p for p in plans)

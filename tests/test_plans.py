@@ -74,7 +74,9 @@ def test_no_rowwise_python_anywhere(spark):
     batches), never BatchEvalPython (pickled row-at-a-time)."""
     for name, q in entry_mod.queries().items():
         if name == "cdc_replay_pages":
-            continue  # materializes a table; covered by merge plan tests
+            # materializes a table; the merge's plan is checked by
+            # test_functions.py::test_merge_runs_vectorized
+            continue
         plan = _plan(q(spark, SF_DIR))
         assert "BatchEvalPython" not in plan, f"{name} uses row-wise Python"
 
@@ -199,34 +201,6 @@ def test_gap_sessions_single_shuffle(spark):
     fmt = _formatted(entry_mod.queries()["event_sessions"](spark, SF_DIR))
     assert fmt.count("hashpartitioning") == 1, fmt[:2000]
     assert "Window" in fmt and "HashAggregate" in fmt
-
-
-def test_salted_repartition_balances_hot_keys(spark, tiny_log):
-    """north_rule: salted repartitioning defeats hot-url skew — with the
-    zipfian log, plain url-partitioning concentrates rows on few
-    partitions; the salted variant spreads them near-uniformly."""
-    import numpy as np
-
-    from opengin_ingestion_spark.operators.salt import salted_repartition
-    from opengin_ingestion_spark.sources.reader import read_changelog
-
-    df = read_changelog(spark, tiny_log["dir"])
-    n = 16
-
-    def partition_sizes(d):
-        return [
-            r["n"]
-            for r in d.withColumn("p", F.spark_partition_id())
-            .groupBy("p").agg(F.count(F.lit(1)).alias("n")).collect()
-        ]
-
-    plain = partition_sizes(df.repartition(n, F.col("url")))
-    salted = partition_sizes(salted_repartition(df, n, salt_buckets=16))
-    total = sum(plain)
-    # hot url holds >5% of all events; salted max partition must be close
-    # to the uniform share, and strictly better balanced than plain
-    assert max(salted) <= 0.8 * max(plain)  # materially better balanced
-    assert max(salted) <= 1.6 * total / n  # near-uniform (tiny-data variance)
 
 
 def test_fetch_urls_is_data_parallel_arrow_stage(spark, tmp_path):

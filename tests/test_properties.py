@@ -135,11 +135,55 @@ def test_evolution_associative_when_defined(a, b, c):
         }
 
 
-# --- one Spark-backed property (sampled: Spark runs are slow) --------------
+# --- the shipped LWW (merge.lww_last) against the fold -------------------
+
+def _lww_frame(rows: list[tuple], from_target: list[bool]) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            "url": [r[0] for r in rows],
+            "ts": [r[1] for r in rows],
+            "_seq": [r[2] for r in rows],
+            "op": [r[3] for r in rows],
+            "payload": [r[4] for r in rows],
+            "_from_target": from_target,
+        }
+    )
+
+
+@given(events_st, st.data(), st.randoms())
+@settings(max_examples=200)
+def test_lww_last_matches_fold(events, data, rnd):
+    """merge.lww_last (the one LWW sort the merge runs, partition-local and
+    in hot_key_prereduce) keeps exactly the fold's winners — under any row
+    order and any redelivery of events."""
+    from opengin_ingestion_spark.operators.merge import lww_last
+
+    dup = data.draw(st.lists(st.sampled_from(events), max_size=10)) if events else []
+    rows = events + dup
+    rnd.shuffle(rows)
+    out = lww_last(_lww_frame(rows, [False] * len(rows)), "url", "ts")
+    assert out["url"].is_unique
+    got = {
+        u: (ts, seq, op, p)
+        for u, ts, seq, op, p in zip(
+            out["url"], out["ts"], out["_seq"], out["op"], out["payload"]
+        )
+        if op != "D"
+    }
+    assert got == _lww_fold(events)
+
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_spark_lww_matches_fold(spark, seed):
+    """lww_last run the way merge_batch runs it in Spark — an optional
+    map-side partial pass over arbitrary input splits, then a hash
+    exchange on the key and a partition-local final pass — keeps exactly
+    the fold's winners (sampled: Spark runs are slow)."""
     import random
+
+    from pyspark.sql import functions as F
+
+    from opengin_ingestion_spark.operators.merge import lww_last
 
     rnd = random.Random(seed)
     events = [
@@ -152,27 +196,52 @@ def test_spark_lww_matches_fold(spark, seed):
         )
         for seq in range(120)
     ]
-    rnd.shuffle(events)
-    from pyspark.sql import functions as F
-
-    from opengin_ingestion_spark.operators.lww import (
-        lww_winners,
-        lww_winners_semi,
-        lww_winners_window,
-    )
-
+    rows = events + rnd.sample(events, 20)  # redelivered copies
+    rnd.shuffle(rows)
     df = spark.createDataFrame(
-        [(u, ts, seq, op, p) for (u, ts, seq, op, p) in events],
-        "url string, ts long, _seq long, op string, payload long",
-    )
+        [(u, ts, seq, op, p, False) for (u, ts, seq, op, p) in rows],
+        "url string, ts long, _seq long, op string, payload long, "
+        "_from_target boolean",
+    ).repartition(4)
+    schema = df.schema
+
+    def lww(batches):
+        import pandas as pd
+
+        pdfs = [pdf for pdf in batches if not pdf.empty]
+        if pdfs:
+            yield lww_last(pd.concat(pdfs, ignore_index=True), "url", "ts")
+
     expect = _lww_fold(events)
-    for impl in (lww_winners, lww_winners_window, lww_winners_semi):
+    for pre in (False, True):
+        staged = df.mapInPandas(lww, schema=schema) if pre else df
+        out = staged.repartition(3, F.col("url")).mapInPandas(lww, schema=schema)
+        winners = out.collect()
+        assert len({r["url"] for r in winners}) == len(winners), pre
         got = {
             r["url"]: (r["ts"], r["_seq"], r["op"], r["payload"])
-            for r in impl(df, key="url", ts="ts", seq="_seq").collect()
+            for r in winners
             if r["op"] != "D"
         }
-        assert got == expect, impl.__name__
+        assert got == expect, pre
+
+
+def test_lww_last_prefers_target_on_tie():
+    """A redelivered batch row ties the already-applied target row on
+    (ts, _seq): the target row wins whatever the input order, so the
+    merge never re-appends its payload (gintable.heavy_seq_unique)."""
+    from opengin_ingestion_spark.operators.merge import lww_last
+
+    target = ("u0", 5, 7, "I", "applied")
+    batch = ("u0", 5, 7, "U", "redelivered")
+    older = ("u0", 4, 9, "U", "older")
+    for rows, flags in (
+        ([target, batch, older], [True, False, False]),
+        ([batch, older, target], [False, False, True]),
+    ):
+        out = lww_last(_lww_frame(rows, flags), "url", "ts")
+        assert out["payload"].tolist() == ["applied"]
+        assert out["_from_target"].tolist() == [True]
 
 
 # --- heavy-family _seq uniqueness under ANY delivery schedule (round 3) ----
