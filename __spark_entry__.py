@@ -516,7 +516,7 @@ def q_embedding_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs. DuckDB-oracled since round 5: the
-    default md5 signature scheme (min of md5(md5(shingle)||':i') hex
+    md5 signature scheme (min of md5(md5(shingle)||':i') hex
     strings, md5 band buckets) is reproduced hash-for-hash by
     _minhash_oracle_sql — candidates, bucket cap, and est_jaccard all
     match exactly. Recall vs the exact-Jaccard operator is additionally
@@ -1055,7 +1055,7 @@ def _minhash_oracle_sql(
     n_hashes: int = 32, bands: int = 8, threshold: float = 0.5,
     max_bucket_size: int = 5000,
 ) -> str:
-    """Exact DuckDB twin of minhash_lsh_pairs(scheme="md5").
+    """Exact DuckDB twin of minhash_lsh_pairs.
 
     Reproducible because every hash in the pipeline is md5 over identical
     byte strings: the i-th minhash is min(md5(md5(shingle)||':i')) (binary

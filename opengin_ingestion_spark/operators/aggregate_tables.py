@@ -89,9 +89,8 @@ def gap_sessions(
     """Batch gap-sessionization: consecutive events of a key closer than
     ``gap_seconds`` form one session. The classic two-window formulation —
     lag() flags session starts, a running sum numbers them, one aggregate
-    collapses each — both shuffles on the (uniform) key. This is the exact
-    batch ORACLE for streaming/windows.py::sessionize (same semantics,
-    bounded state there)."""
+    collapses each — both shuffles on the (uniform) key. The
+    ``event_sessions`` contract query runs it."""
     w = Window.partitionBy(key_col).orderBy(ts_col, seq_col)
     prev_ts = F.lag(ts_col).over(w)
     # integer microseconds on both engines (unix_micros / epoch_us) — a

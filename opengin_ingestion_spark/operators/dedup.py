@@ -11,9 +11,8 @@ table. Scale posture:
   signature aggregation and the band-bucket self-join, both on uniformly
   hashed keys (no skew). Candidate pairs are verified by estimated Jaccard
   (signature agreement) — at 100 TB you'd gate a final exact check on the
-  candidates only. The default md5 hash scheme is chosen to be
-  reproducible in any SQL engine (the driver's DuckDB oracle recomputes
-  the whole pipeline); a cheaper Spark-internal scheme is one flag away.
+  candidates only. Hashes are md5, chosen to be reproducible in any SQL
+  engine (the driver's DuckDB oracle recomputes the whole pipeline).
 * SimHash: 64-bit signature via a vectorized pandas UDF (numpy bit ops
   over md5-derived word hashes — same cross-engine reproducibility),
   near-dup = signatures within Hamming distance k, found by pigeonhole
@@ -31,6 +30,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from opengin_ingestion_spark.operators.salt import ensure_min_parallelism
+from opengin_ingestion_spark.sources.gintable import write_json_atomic
+
+# the one signature/band hash scheme; persisted indexes record it
+MINHASH_SCHEME = "md5"
 
 
 def cap_key_frequency(
@@ -101,7 +104,6 @@ def minhash_signatures(
     id_col: str = "doc_id",
     n_hashes: int = 32,
     shingle_k: int = 3,
-    scheme: str = "md5",
 ) -> DataFrame:
     """One row per doc: ``sig`` = array of n_hashes minhash values.
 
@@ -111,67 +113,45 @@ def minhash_signatures(
     insensitive to duplicate shingles, so the per-doc distinct shuffle is
     skipped entirely.
 
-    Two hash schemes, identical LSH properties:
-
-    * ``"md5"`` (default) — the i-th minhash is the lexicographic min of
-      ``md5(md5(shingle) || ':' || i)`` hex strings. md5 is a uniform
-      family available verbatim in DuckDB/Trino/Snowflake, so the WHOLE
-      pair computation is reproducible in an independent SQL engine —
-      that's what backs the exact driver oracle (CORRECTNESS gate). The
-      variable-length shingle is digested once; the n seeded re-hashes run
-      over a fixed 35-byte input (one md5 compression round each,
-      JVM-side, inside codegen). Lexicographic min over equal-length
-      lowercase-hex is binary-collation min in both engines.
-    * ``"fast"`` — xxhash64(shingle) once, then n seeded murmur3 re-hashes
-      of the 8-byte long (~2-3× cheaper; Spark-internal hashes, so no
-      cross-engine oracle). Use at the 100 TB tier when reproducibility
-      outside Spark isn't needed; band/est-jaccard semantics are identical.
+    The i-th minhash is the lexicographic min of
+    ``md5(md5(shingle) || ':' || i)`` hex strings. md5 is a uniform family
+    available verbatim in DuckDB/Trino/Snowflake, so the WHOLE pair
+    computation is reproducible in an independent SQL engine — that's what
+    backs the exact driver oracle (CORRECTNESS gate). The variable-length
+    shingle is digested once; the n seeded re-hashes run over a fixed
+    35-byte input (one md5 compression round each, JVM-side, inside
+    codegen). Lexicographic min over equal-length lowercase-hex is
+    binary-collation min in both engines.
     """
-    if scheme not in ("md5", "fast"):
-        raise ValueError(f"unknown minhash scheme {scheme!r}")
     df = ensure_min_parallelism(df)
     sh = word_shingles(df, text_col, id_col, k=shingle_k, distinct=False)
-    if scheme == "md5":
-        # NOTE (r6): computing the n seeded re-hashes once per DISTINCT
-        # shingle digest and joining back was tried and measured SLOWER
-        # (8.2s vs 4.3s at sf1.0): the join ships 32 hex strings (~1 KB)
-        # per shingle occurrence through an exchange, which costs more
-        # than the md5s it saves. The inline form keeps everything in one
-        # codegen'd partial-aggregating stage.
-        hashed = sh.select(id_col, F.md5("shingle").alias("_h"))
-        sig = hashed.groupBy(id_col).agg(
-            *[
-                F.min(F.md5(F.concat(F.col("_h"), F.lit(f":{i}")))).alias(f"h{i}")
-                for i in range(n_hashes)
-            ]
-        )
-    else:
-        hashed = sh.select(id_col, F.xxhash64("shingle").alias("_h"))
-        sig = hashed.groupBy(id_col).agg(
-            *[
-                F.min(F.hash(F.col("_h"), F.lit(i))).alias(f"h{i}")
-                for i in range(n_hashes)
-            ]
-        )
+    # NOTE (r6): computing the n seeded re-hashes once per DISTINCT
+    # shingle digest and joining back was tried and measured SLOWER
+    # (8.2s vs 4.3s at sf1.0): the join ships 32 hex strings (~1 KB)
+    # per shingle occurrence through an exchange, which costs more
+    # than the md5s it saves. The inline form keeps everything in one
+    # codegen'd partial-aggregating stage.
+    hashed = sh.select(id_col, F.md5("shingle").alias("_h"))
+    sig = hashed.groupBy(id_col).agg(
+        *[
+            F.min(F.md5(F.concat(F.col("_h"), F.lit(f":{i}")))).alias(f"h{i}")
+            for i in range(n_hashes)
+        ]
+    )
     return sig.select(
         id_col, F.array(*[F.col(f"h{i}") for i in range(n_hashes)]).alias("sig")
     )
 
 
 def _minhash_band_rows(
-    sig: DataFrame, id_col: str, n_hashes: int, bands: int, scheme: str
+    sig: DataFrame, id_col: str, n_hashes: int, bands: int
 ) -> DataFrame:
     """(id, sig, band, bucket) rows — the LSH banding shared by the
     self-join pair finder and the persisted corpus index."""
     r = n_hashes // bands
-    if scheme == "md5":
-        bucket_of = lambda b: F.md5(  # noqa: E731
-            F.concat(*[F.col("sig")[i] for i in range(b * r, (b + 1) * r)])
-        )
-    else:
-        bucket_of = lambda b: F.hash(  # noqa: E731
-            *[F.col("sig")[i] for i in range(b * r, (b + 1) * r)]
-        )
+    bucket_of = lambda b: F.md5(  # noqa: E731
+        F.concat(*[F.col("sig")[i] for i in range(b * r, (b + 1) * r)])
+    )
     return sig.select(
         F.col(id_col),
         F.col("sig"),
@@ -210,7 +190,6 @@ def minhash_lsh_pairs(
     shingle_k: int = 3,
     threshold: float = 0.7,
     max_bucket_size: int = 5000,
-    scheme: str = "md5",
 ) -> DataFrame:
     """Near-duplicate candidate pairs (id_a < id_b, est_jaccard ≥ threshold).
 
@@ -218,11 +197,10 @@ def minhash_lsh_pairs(
     docs sharing ANY band hash are candidates (classic MinHash-LSH, e.g.
     Leskovec et al., Mining of Massive Datasets ch.3 — public knowledge).
 
-    Under the default ``scheme="md5"`` the band bucket is
-    ``md5(concat(band slice))`` — reproducible in DuckDB, so candidate
-    generation (including any astronomically-unlikely md5 bucket collision)
-    is IDENTICAL in the oracle: both engines compute the same bucket for the
-    same band values. ``scheme="fast"`` uses Spark-internal murmur3.
+    The band bucket is ``md5(concat(band slice))`` — reproducible in
+    DuckDB, so candidate generation (including any astronomically-unlikely
+    md5 bucket collision) is IDENTICAL in the oracle: both engines compute
+    the same bucket for the same band values.
 
     Degenerate buckets (boilerplate / empty docs collapsing to one band
     hash) are dropped above ``max_bucket_size`` members — a bucket that
@@ -231,13 +209,13 @@ def minhash_lsh_pairs(
     connected components anyway. Dropped counts are observable
     (``minhash_band_cap``), never silent.
     """
-    sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_k, scheme)
+    sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_k)
     # lineage barrier before the band self-join (avoids recomputing the
     # shingle explode + n_hashes aggregation once per join side)
     sig = sig.localCheckpoint(eager=True)
-    band_rows = _minhash_band_rows(sig, id_col, n_hashes, bands, scheme)
+    band_rows = _minhash_band_rows(sig, id_col, n_hashes, bands)
     # SLIM self-join: the signature arrays (n_hashes × 32-char hex ≈ 1 KB
-    # per row under the md5 scheme) never enter the band join or the pair
+    # per row) never enter the band join or the pair
     # dedup exchange — candidates are found on (id, band, bucket) alone
     # and the two signatures are re-attached to the (tiny) deduped pair
     # set afterwards (guide §2.3: shuffle keys, not payloads; sig rows are
@@ -285,7 +263,6 @@ def build_minhash_index(
     n_hashes: int = 32,
     bands: int = 8,
     shingle_k: int = 3,
-    scheme: str = "md5",
 ) -> dict:
     """Persist the corpus's LSH band rows — the production incremental-
     dedup pattern: dedup each NEW crawl batch against the EXISTING corpus
@@ -293,7 +270,7 @@ def build_minhash_index(
     everything every run; at a growing corpus that is quadratic over
     time). Layout: (id, sig, band, bucket) parquet partitioned by
     ``band`` + a ``meta.json`` commit marker recording the parameters, so
-    a query can never silently mix incompatible schemes. Work per query
+    a query can never silently mix incompatible hashing. Work per query
     batch = hash the batch + one shuffle join against the (slim) band
     rows; the corpus's text is never touched again.
 
@@ -301,11 +278,10 @@ def build_minhash_index(
     see ``append_to_minhash_index``); for in-place rewrite semantics use
     a fresh path and atomic-rename like the IVF generations.
     """
-    import json as _json
     import os as _os
 
-    sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_k, scheme)
-    rows = _minhash_band_rows(sig, id_col, n_hashes, bands, scheme)
+    sig = minhash_signatures(df, text_col, id_col, n_hashes, shingle_k)
+    rows = _minhash_band_rows(sig, id_col, n_hashes, bands)
     _os.makedirs(index_path, exist_ok=True)
     (
         rows.repartition(F.col("band"))
@@ -318,12 +294,27 @@ def build_minhash_index(
         "n_hashes": n_hashes,
         "bands": bands,
         "shingle_k": shingle_k,
-        "scheme": scheme,
+        "scheme": MINHASH_SCHEME,
     }
-    tmp = _os.path.join(index_path, "meta.json.tmp")
-    with open(tmp, "w") as fh:  # commit marker LAST (same as IVF)
-        _json.dump(meta, fh)
-    _os.replace(tmp, _os.path.join(index_path, "meta.json"))
+    # commit marker LAST (same as IVF)
+    write_json_atomic(_os.path.join(index_path, "meta.json"), meta)
+    return meta
+
+
+def _load_minhash_meta(index_path: str) -> dict:
+    """Read a persisted index's parameters. The index may come from
+    outside this program, so a hash scheme this module cannot reproduce
+    is an error — never silently re-hashed with md5."""
+    import json as _json
+    import os as _os
+
+    with open(_os.path.join(index_path, "meta.json")) as fh:
+        meta = _json.load(fh)
+    if meta.get("scheme") != MINHASH_SCHEME:
+        raise ValueError(
+            f"minhash index {index_path!r} uses scheme {meta.get('scheme')!r}; "
+            f"only {MINHASH_SCHEME!r} is supported"
+        )
     return meta
 
 
@@ -334,18 +325,13 @@ def append_to_minhash_index(
     (the cheap growth path — the caller guarantees ids are fresh; re-
     appending an id simply yields duplicate candidates, filtered by the
     pair aggregation)."""
-    import json as _json
     import os as _os
 
-    with open(_os.path.join(index_path, "meta.json")) as fh:
-        meta = _json.load(fh)
+    meta = _load_minhash_meta(index_path)
     sig = minhash_signatures(
-        df, text_col, meta["id_col"], meta["n_hashes"], meta["shingle_k"],
-        meta["scheme"],
+        df, text_col, meta["id_col"], meta["n_hashes"], meta["shingle_k"]
     )
-    rows = _minhash_band_rows(
-        sig, meta["id_col"], meta["n_hashes"], meta["bands"], meta["scheme"]
-    )
+    rows = _minhash_band_rows(sig, meta["id_col"], meta["n_hashes"], meta["bands"])
     (
         rows.repartition(F.col("band"))
         .write.mode("append")
@@ -373,20 +359,15 @@ def minhash_index_neardup(
     slim rows, never corpus text; band partitioning keeps the scan
     aligned with the join key space.
     """
-    import json as _json
     import os as _os
 
-    with open(_os.path.join(index_path, "meta.json")) as fh:
-        meta = _json.load(fh)
+    meta = _load_minhash_meta(index_path)
     id_col = meta["id_col"]
     spark = new_docs.sparkSession
     sig_new = minhash_signatures(
-        new_docs, text_col, id_col, meta["n_hashes"], meta["shingle_k"],
-        meta["scheme"],
+        new_docs, text_col, id_col, meta["n_hashes"], meta["shingle_k"]
     ).localCheckpoint(eager=True)
-    rows_new = _minhash_band_rows(
-        sig_new, id_col, meta["n_hashes"], meta["bands"], meta["scheme"]
-    )
+    rows_new = _minhash_band_rows(sig_new, id_col, meta["n_hashes"], meta["bands"])
     idx = spark.read.parquet(_os.path.join(index_path, "bands")).select(
         F.col(id_col).alias("id_indexed"),
         F.col("sig").alias("sig_b"),
@@ -670,22 +651,6 @@ def dedup_groups(
     return labels.select("node", F.col("label").alias("group"))
 
 
-def dedup_keep_exemplars(
-    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Drop every duplicate except one exemplar per transitive group (the
-    smallest id — deterministic). Rows never appearing in ``pairs`` are
-    kept untouched. The anti-join's build side is (id) only — AQE
-    broadcasts it when it fits and falls back to a key-only shuffle join
-    when the duplicate set is genuinely huge (no forced broadcast: at
-    corpus scale most of a crawl can be duplicates)."""
-    groups = dedup_groups(pairs)
-    losers = groups.filter(F.col("node") != F.col("group")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(losers, id_col, "left_anti")
-
-
 # --- exact n-gram Jaccard -------------------------------------------------------
 
 def _ngram_pairs_inworker(
@@ -941,8 +906,7 @@ def ngram_jaccard_pairs(
     # NO broadcast hint: the sizes frame has one row per input document —
     # forcing it through the driver OOMs at corpus scale. It is a slim
     # (long, int) frame, so AQE broadcasts it when it fits and falls back
-    # to a shuffle join when the corpus is genuinely huge (same reasoning
-    # as dedup_keep_exemplars below).
+    # to a shuffle join when the corpus is genuinely huge.
     jac = (
         inter.join(sa, "id_a")
         .join(sb, "id_b")

@@ -358,7 +358,7 @@ def _merge_once(
     # the isNotNull family filter selects exactly the new payloads) --------
     t_w = time.time()
     new_files = table.write_split_data_files(
-        merged, snap["version"] + 1, schema_version, n_partitions=None
+        merged, snap["version"] + 1, schema_version
     )
     write_s = round(time.time() - t_w, 3)
 
@@ -440,11 +440,15 @@ def expire_tombstones(table: GinTable, watermark_ts) -> dict:
         table.read(snap, buckets=touched, include_internal=True)
         .filter(~expirable)
         .withColumn(BUCKET_COL, table.bucket_expr(snap=snap))
+        # one task per bucket, so one file per bucket and family; done
+        # before the split writer's checkpoint so both family writes reuse
+        # the one shuffle
+        .repartition(len(touched), F.col(BUCKET_COL))
     )
     # full rewrite: both families replaced — this also purges the expired
     # tombstones' (and any superseded winners') stale heavy rows
     new_files = table.write_split_data_files(
-        kept, snap["version"] + 1, snap["schema_version"], n_partitions=len(touched)
+        kept, snap["version"] + 1, snap["schema_version"]
     )
     return table.commit(
         new_files,

@@ -1,18 +1,29 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, as a training-data pipeline needs at different scales:
+Exact paths, the accuracy baselines:
 
-* ``brute_force_topk`` — exact cosine top-k. The dot product is a built-in
-  expression chain (``zip_with`` + ``aggregate``) so it stays JVM-side and
-  codegen'd; the N×M pair space is a broadcast-join of the (small) query
-  set against the corpus — at 100 TB the corpus side streams, nothing
-  shuffles. This is the accuracy baseline.
-* ``lsh_ann_topk`` — random-hyperplane LSH (SimHash-for-vectors): H
-  deterministic hyperplanes → sign-bit bucket; candidates = same bucket
-  (multi-probe: exact bucket plus 1-bit flips); exact cosine re-rank within
-  candidates. Bucketing is a vectorized pandas UDF (one matrix multiply per
-  Arrow batch); candidate-join keys are uniform hashes → no skew. This is
-  the scale path: pair space shrinks from N·M to N·M/2^H per probe.
+* ``brute_force_topk`` (top-k) and ``exact_neardup_pairs`` (all pairs over
+  a cosine threshold) — the query set is broadcast in bounded chunks and
+  scored against the streaming corpus by a block matmul per Arrow batch;
+  the corpus never shuffles, and the pair space is never materialized.
+
+Scale paths:
+
+* ``lsh_ann_topk`` and ``embedding_neardup_pairs`` — random-hyperplane LSH
+  (SimHash-for-vectors): H deterministic hyperplanes → sign-bit bucket;
+  candidates = same bucket (multi-probe: exact bucket plus 1-bit flips);
+  exact cosine re-rank within candidates. Bucketing is a vectorized pandas
+  UDF (one matrix multiply per Arrow batch); candidate-join keys are
+  uniform hashes → no skew. Pair space shrinks from N·M to N·M/2^H per
+  probe.
+* IVF — ``build_ivf_index`` trains a k-means coarse quantizer and persists
+  the corpus partitioned by home cell; ``ivf_search`` probes a query
+  batch's ``n_probe`` nearest cells only, with data-adaptive cells (better
+  recall than hyperplanes on clustered embeddings). ``update_ivf_index``
+  maintains the index from a CDC delta, one atomic generation at a time.
+
+The LSH and IVF paths score candidates JVM-side in double precision:
+``_dot`` over norms precomputed once per vector (``_norm``).
 """
 
 from __future__ import annotations
@@ -26,6 +37,7 @@ from pyspark.sql.window import Window
 
 from opengin_ingestion_spark.operators.dedup import cap_key_frequency
 from opengin_ingestion_spark.operators.salt import ensure_min_parallelism
+from opengin_ingestion_spark.sources.gintable import write_json_atomic
 
 
 def _dot(a_col: str, b_col: str) -> F.Column:
@@ -38,7 +50,14 @@ def _dot(a_col: str, b_col: str) -> F.Column:
 
 
 def _norm(c: str | F.Column) -> F.Column:
-    """Exact double-precision L2 norm of an array column, JVM-side."""
+    """Exact double-precision L2 norm of an array column, JVM-side.
+
+    The candidate-scoring paths precompute it once per VECTOR and score a
+    pair as ``_dot / (nrm_a * nrm_b)`` — bit-identical to computing both
+    norms per pair (the same expression over the same array, the same
+    final division), but each of the millions of candidate pairs pays one
+    array fold (the dot), not three (guide §1.2 step 2: per-task work,
+    after the plan shape is right)."""
     return F.sqrt(
         F.aggregate(
             F.transform(c, lambda x: x.cast("double") * x.cast("double")),
@@ -46,19 +65,6 @@ def _norm(c: str | F.Column) -> F.Column:
             lambda acc, v: acc + v,
         )
     )
-
-
-def _cosine(a_col: str, b_col: str) -> F.Column:
-    """Exact cosine similarity between two array<float/double> columns,
-    computed in double precision, JVM-side.
-
-    The candidate-scoring paths below do NOT call this per pair: they
-    precompute ``_norm`` once per VECTOR (bit-identical — the same
-    expression over the same array, the same final division) so each of
-    the millions of candidate pairs pays one array fold (the dot), not
-    three (guide §1.2 step 2: per-task work, after the plan shape is
-    right)."""
-    return _dot(a_col, b_col) / (_norm(a_col) * _norm(b_col))
 
 
 def _safe_normalize(m: np.ndarray) -> np.ndarray:
@@ -263,7 +269,7 @@ def embedding_neardup_pairs(
     corpus = ensure_min_parallelism(corpus)
     bucketed = corpus.select(
         F.col(id_col), F.col(vec_col),
-        _norm(F.col(vec_col)).alias("_nrm"),  # once per vector, see _cosine
+        _norm(F.col(vec_col)).alias("_nrm"),  # once per vector, see _norm
         _bucket_udf(planes)(F.col(vec_col)).alias("b"),
     ).localCheckpoint(eager=True)
     bucketed = cap_key_frequency(bucketed, ["b"], max_bucket_size, "embedding_bucket")
@@ -339,7 +345,7 @@ def lsh_ann_topk(
     planes = make_hyperplanes(dim, n_planes, seed)
     corpus = ensure_min_parallelism(corpus)
     # _nrm precomputed once per vector (20k folds), not once per candidate
-    # pair (14M at sf1.0) — see _cosine
+    # pair (14M at sf1.0) — see _norm
     bucketed = corpus.select(
         F.col(id_col), F.col(vec_col),
         _norm(F.col(vec_col)).alias("_nrm"),
@@ -463,7 +469,7 @@ def build_ivf_index(
     home-cell assignments carrying the vectors (Parquet, partitioned by
     cell so a probe reads only its cells' files). Amortizes the quantizer
     training and the full-corpus assignment scan across every subsequent
-    ``ivf_ann_topk(..., index_path=...)`` call — the analog of the
+    ``ivf_search`` call — the analog of the
     reference persisting each pipeline stage so work is never redone
     (reference orchestrator.py:137-153).
 
@@ -548,13 +554,9 @@ def build_ivf_index(
 def _commit_ivf_meta(index_path: str, meta: dict) -> None:
     """Atomically publish ``meta.json`` — the index's commit pointer:
     written only after the generation's cells layout is fully on disk."""
-    import json as _json
     import os as _os
 
-    tmp = _os.path.join(index_path, "meta.json.tmp")
-    with open(tmp, "w") as fh:
-        _json.dump(meta, fh)
-    _os.replace(tmp, _os.path.join(index_path, "meta.json"))
+    write_json_atomic(_os.path.join(index_path, "meta.json"), meta)
 
 
 def _gc_ivf_generations(index_path: str, keep: set) -> None:
@@ -868,8 +870,9 @@ def ivf_search(
     (cell-partition pruning on the index layout). Pair space =
     |queries| × (n_probe/C) × |corpus|.
 
-    ``exclude_self`` drops candidate == query id matches (self-search
-    convention, same as ivf_ann_topk).
+    ``exclude_self`` drops candidate == query id matches (the self-search
+    convention: searching the corpus itself finds each vector's neighbors,
+    not the vector).
 
     ONE meta.json read pins this call to one index generation: the files
     it scans are immutable for that generation's lifetime (current + one
@@ -880,7 +883,7 @@ def ivf_search(
     q = queries.select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_nrm"),  # once per query, see _cosine
+        _norm(F.col(vec_col)).alias("q_nrm"),  # once per query, see _norm
         F.explode(
             _ivf_assign_udf(centroids, n_probe)(F.col(vec_col))
         ).alias("cell"),
@@ -925,90 +928,3 @@ def ivf_search(
         )
     )
 
-
-def ivf_ann_topk(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    train_sample: int = 4096,
-    max_cell_size: int = 100_000,
-    index_path: str | None = None,
-) -> DataFrame:
-    """IVF approximate self-search top-k — the second scale path next to
-    ``lsh_ann_topk``: a k-means coarse quantizer partitions the corpus into
-    cells; each query compares only against its ``n_probe`` nearest cells,
-    exact cosine re-rank inside. Pair space shrinks from N² to
-    ~N²·n_probe/C with data-adaptive cells (better recall than
-    data-oblivious hyperplanes on clustered embeddings — the realistic
-    case). Cells above ``max_cell_size`` are dropped from the CANDIDATE
-    side only (degenerate-cell guard, observable metric ``ivf_cell_cap``).
-
-    ``index_path`` (from ``build_ivf_index``) reuses the persisted
-    quantizer and candidate assignments: no centroid retraining, no
-    corpus-wide assignment pass — only the query side runs the (cheap)
-    probe matmul. Results are identical to the inline path by construction
-    (same seed/sample ⇒ same centroids).
-    """
-    if index_path is not None:
-        meta = load_ivf_meta(index_path)
-        centroids = np.asarray(meta["centroids"], dtype=np.float64)
-
-        spark = corpus.sparkSession
-        home = spark.read.parquet(ivf_cells_path(index_path, meta)).select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            F.col("cell").cast("int").alias("cell"),
-        )
-    else:
-        centroids = train_centroids(
-            corpus, id_col, vec_col, n_centroids, train_sample, seed=seed
-        )
-        home = None
-    corpus = ensure_min_parallelism(corpus)
-    probed = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        _norm(F.col(vec_col)).alias("_nrm"),  # once per vector, see _cosine
-        _ivf_assign_udf(centroids, n_probe)(F.col(vec_col)).alias("cells"),
-    ).localCheckpoint(eager=True)  # UDF evaluated once; self-joined below
-    if home is None:
-        home = probed.select(
-            F.col(id_col).alias("c_id"),
-            F.col(vec_col).alias("c_vec"),
-            F.col("_nrm").alias("c_nrm"),
-            F.col("cells")[0].alias("cell"),  # a vector is INDEXED in its home cell
-        )
-    else:
-        home = home.withColumn("c_nrm", _norm(F.col("c_vec")))
-    home = cap_key_frequency(home, ["cell"], max_cell_size, "ivf_cell")
-    queries = probed.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col("_nrm").alias("q_nrm"),
-        F.explode("cells").alias("cell"),  # ...but PROBES n_probe cells
-    )
-    # same at-most-one-match argument as ivf_search: home cell is unique
-    # per candidate, probe cells are distinct per query — score at the
-    # join, shuffle scalars into the window
-    scored = (
-        queries.join(home, "cell")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select(
-            "q_id", "c_id",
-            (_dot("q_vec", "c_vec") / (F.col("q_nrm") * F.col("c_nrm"))).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("q_id").alias(id_col),
-            F.col("c_id").alias("neighbor_id"),
-            F.col("rank"),
-        )
-    )

@@ -64,6 +64,21 @@ class CommitConflict(Exception):
     """Another writer committed the same version first — retry on top."""
 
 
+def write_json_atomic(path: str, obj) -> None:
+    """Publish ``obj`` as JSON at ``path`` durably and atomically: write a
+    per-process temp file, fsync it, then ``os.replace`` it over ``path``.
+    A reader sees the old file or the new one, never a torn one, and a
+    crash after the replace cannot surface an empty file. The commit
+    pointer of every index and checkpoint goes through here."""
+    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+    tmp = f"{path}.tmp-{os.getpid()}"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.replace(tmp, path)
+
+
 def choose_n_buckets(
     est_table_bytes: int,
     target_bucket_bytes: int = 64 * 1024 * 1024,
@@ -568,8 +583,7 @@ class GinTable:
     # -- write path ----------------------------------------------------------
 
     def write_split_data_files(
-        self, df: DataFrame, version: int, schema_version: int,
-        n_partitions: int | None = None,
+        self, df: DataFrame, version: int, schema_version: int
     ) -> list[DataFile]:
         """Write a full-row frame (carrying BUCKET_COL) as BOTH column
         families: light columns → "base", heavy columns (rows with any
@@ -579,39 +593,35 @@ class GinTable:
         write when the table has no split."""
         heavy_cols = self.heavy_columns()
         if not heavy_cols:
-            return self.write_data_files(df, version, schema_version, n_partitions)
+            return self.write_data_files(df, version, schema_version)
         # localCheckpoint, not persist(): the SQL cache columnar-compresses
         # the binary payload (measured 2× slower than the write itself);
         # checkpoint blocks are row-serialized and cheap, and both family
         # writes read the single materialization
         df = df.localCheckpoint(eager=True)
         base = df.drop(*heavy_cols)
-        files = self.write_data_files(
-            base, version, schema_version, n_partitions, family="base"
-        )
+        files = self.write_data_files(base, version, schema_version, family="base")
         present = None
         for c in heavy_cols:
             cond = F.col(c).isNotNull()
             present = cond if present is None else (present | cond)
         heavy = df.filter(present).select(BUCKET_COL, SEQ_COL, *heavy_cols)
-        files += self.write_data_files(
-            heavy, version, schema_version, n_partitions, family="heavy"
-        )
+        files += self.write_data_files(heavy, version, schema_version, family="heavy")
         return files
 
     def write_data_files(
         self, df: DataFrame, version: int, schema_version: int,
-        n_partitions: int | None = None,
         family: str = "base",
         folded: bool = False,
     ) -> list[DataFile]:
         """Write ``df`` (must carry BUCKET_COL) as bucketed Parquet files
         under a commit-scoped directory; returns manifest entries.
 
-        ``n_partitions`` (pass the touched-bucket count) repartitions by
-        bucket first so each bucket is written by one task as one file —
-        measured 3× faster than every task opening a writer per bucket,
-        and it keeps file counts O(buckets), not O(buckets × tasks).
+        Callers hash-partition ``df`` by BUCKET_COL first (the merge's
+        bucket exchange, or ``repartition(len(touched), BUCKET_COL)``) so
+        each bucket is written by one task as one file — measured 3× faster
+        than every task opening a writer per bucket, and it keeps file
+        counts O(buckets), not O(buckets × tasks).
 
         Files land before the manifest is committed — a crashed commit
         leaves only unreferenced files (GC'able), never a torn table.
@@ -621,8 +631,6 @@ class GinTable:
             DATA_DIR, f"commit-{version:08d}-{fam_tag}-{uuid.uuid4().hex[:8]}"
         )
         commit_dir = os.path.join(self.path, commit_dir_rel)
-        if n_partitions:
-            df = df.repartition(n_partitions, F.col(BUCKET_COL))
         (
             df.write.mode("error")
             .partitionBy(BUCKET_COL)

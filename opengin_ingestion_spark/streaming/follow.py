@@ -26,9 +26,10 @@ table size — a quiet table costs one manifest read per poll.
 from __future__ import annotations
 
 import json
-import os
 import time
 from collections.abc import Callable
+
+from opengin_ingestion_spark.sources.gintable import write_json_atomic
 
 
 def _read_checkpoint(path: str) -> int | None:
@@ -40,13 +41,7 @@ def _read_checkpoint(path: str) -> int | None:
 
 
 def _write_checkpoint(path: str, version: int) -> None:
-    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-    tmp = f"{path}.tmp-{os.getpid()}"
-    with open(tmp, "w") as fh:
-        json.dump({"version": version}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, path)
+    write_json_atomic(path, {"version": version})
 
 
 def follow_changes(

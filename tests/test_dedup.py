@@ -171,21 +171,6 @@ def test_dedup_groups_nonconvergence_raises(spark):
         dedup_groups(pdf, max_iter=3, driver_edge_limit=0)
 
 
-def test_dedup_keep_exemplars(spark, corpus):
-    """End-to-end: LSH pairs → transitive groups → one exemplar survives
-    per group, singletons untouched."""
-    from opengin_ingestion_spark.operators.dedup import dedup_keep_exemplars
-
-    pairs = minhash_lsh_pairs(corpus, threshold=0.5)
-    kept = dedup_keep_exemplars(corpus, pairs, "doc_id")
-    ids = {r["doc_id"] for r in kept.collect()}
-    # family A {0,1,2} (near-dups) and family B {3,4} (exact dups) each
-    # collapse to their smallest id; the 20 unique docs all survive
-    assert 0 in ids and 3 in ids
-    assert 4 not in ids
-    assert all(i in ids for i in range(5, 25))
-
-
 def test_shingle_df_cap_drops_stop_shingles(spark):
     """ngram_jaccard with a document-frequency cap: a shingle shared by
     every doc stops producing pairs; pairs from rarer shingles survive."""
@@ -285,3 +270,25 @@ def test_minhash_index_incremental_neardup(spark, corpus, tmp_path):
         for r in minhash_index_neardup(later, idx, threshold=0.5).collect()
     }
     assert (200, 100) in got2 and (200, 0) in got2
+
+
+def test_minhash_index_rejects_foreign_scheme(tmp_path):
+    """Spark-free: a persisted index whose meta.json names a hash scheme
+    other than md5 (an index written outside this program) is refused by
+    both readers before any hashing — never silently re-hashed with md5."""
+    import json
+
+    from opengin_ingestion_spark.operators.dedup import (
+        append_to_minhash_index,
+        minhash_index_neardup,
+    )
+
+    idx = tmp_path / "mh_idx"
+    idx.mkdir()
+    meta = {"id_col": "doc_id", "n_hashes": 32, "bands": 8, "shingle_k": 3}
+    for scheme in ("fast", None):
+        (idx / "meta.json").write_text(json.dumps({**meta, "scheme": scheme}))
+        with pytest.raises(ValueError, match="scheme"):
+            append_to_minhash_index(None, str(idx))
+        with pytest.raises(ValueError, match="scheme"):
+            minhash_index_neardup(None, str(idx))

@@ -285,3 +285,75 @@ def test_read_ts_range_prunes_files_from_manifest(spark, tiny_log, tmp_path):
     assert ranged_files < all_files, (
         f"range read must scan fewer files ({ranged_files} vs {all_files})"
     )
+
+
+def _spy_commits(monkeypatch):
+    """Record fsync(fd) and replace(src, dst) calls by inode, so a test can
+    tell which file was fsynced before which replace."""
+    import os
+
+    events = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        events.append(("fsync", os.fstat(fd).st_ino))
+        return real_fsync(fd)
+
+    def replace(src, dst):
+        events.append(("replace", os.stat(src).st_ino, os.path.basename(dst)))
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    return events
+
+
+def _assert_fsynced_then_replaced(events, dst_name):
+    at = [i for i, e in enumerate(events) if e[0] == "replace" and e[2] == dst_name]
+    assert len(at) == 1, f"{dst_name} must be published by one replace: {events}"
+    tmp_ino = events[at[0]][1]
+    assert ("fsync", tmp_ino) in events[: at[0]], (
+        f"the tmp file replacing {dst_name} was not fsynced first: {events}"
+    )
+
+
+def test_commit_pointers_fsync_before_replace(tmp_path, monkeypatch):
+    """Spark-free: the IVF meta commit, the MinHash index meta commit and
+    the follow_changes checkpoint each fsync their tmp file before
+    os.replace publishes it, and leave no tmp file behind."""
+    import json
+    import os
+    from unittest import mock
+
+    from opengin_ingestion_spark.operators import dedup
+    from opengin_ingestion_spark.operators.similarity import _commit_ivf_meta
+    from opengin_ingestion_spark.streaming.follow import (
+        _read_checkpoint,
+        _write_checkpoint,
+    )
+
+    ivf = tmp_path / "ivf"
+    ivf.mkdir()
+    events = _spy_commits(monkeypatch)
+    _commit_ivf_meta(str(ivf), {"generation": 3})
+    _assert_fsynced_then_replaced(events, "meta.json")
+    assert json.loads((ivf / "meta.json").read_text()) == {"generation": 3}
+
+    # build_minhash_index with its Spark work stubbed out: only the
+    # commit-marker write is real
+    events.clear()
+    for name in ("minhash_signatures", "_minhash_band_rows", "F"):
+        monkeypatch.setattr(dedup, name, mock.MagicMock())
+    mh = tmp_path / "mh"
+    meta = dedup.build_minhash_index(mock.MagicMock(), str(mh))
+    _assert_fsynced_then_replaced(events, "meta.json")
+    assert json.loads((mh / "meta.json").read_text()) == meta
+
+    events.clear()
+    ckpt = tmp_path / "follow" / "ckpt.json"
+    _write_checkpoint(str(ckpt), 7)
+    _assert_fsynced_then_replaced(events, "ckpt.json")
+    assert _read_checkpoint(str(ckpt)) == 7
+
+    for d in (ivf, mh, ckpt.parent):
+        assert not [f for f in os.listdir(d) if ".tmp" in f]

@@ -109,8 +109,10 @@ def test_deletes_apply(spark, tiny_log, tmp_path):
 
 def test_expire_tombstones(spark, tiny_log, tmp_path):
     """Tombstones past the event-time watermark are physically dropped;
-    the user-visible state is unchanged."""
+    the user-visible state is unchanged; each rewritten bucket is written
+    as one base file and at most one heavy file."""
     import datetime
+    from collections import Counter
 
     from opengin_ingestion_spark.operators.merge import expire_tombstones
 
@@ -119,10 +121,23 @@ def test_expire_tombstones(spark, tiny_log, tmp_path):
     n_tomb = internal.filter(F.coalesce(F.col("_deleted"), F.lit(False))).count()
     assert n_tomb > 0
     user_before = sorted(table.read().collect())
-    expire_tombstones(table, datetime.datetime(2100, 1, 1, tzinfo=datetime.timezone.utc))
+    snap = expire_tombstones(
+        table, datetime.datetime(2100, 1, 1, tzinfo=datetime.timezone.utc)
+    )
     internal_after = table.read(include_internal=True)
     assert internal_after.filter(F.coalesce(F.col("_deleted"), F.lit(False))).count() == 0
     assert sorted(table.read().collect()) == user_before
+
+    written = [
+        f for f in snap["files"] if f"commit-{snap['version']:08d}-" in f["path"]
+    ]
+    base = Counter(f["bucket"] for f in written if f["family"] == "base")
+    heavy = Counter(f["bucket"] for f in written if f["family"] == "heavy")
+    assert len(base) == snap["metrics"]["buckets_rewritten"] > 0
+    assert set(base.values()) == {1}, f"base files per bucket: {base}"
+    assert set(heavy) <= set(base) and set(heavy.values()) <= {1}, (
+        f"heavy files per bucket: {heavy}"
+    )
 
 
 def test_merge_hot_url_batch(spark, tmp_path):

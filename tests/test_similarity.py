@@ -123,10 +123,14 @@ def test_exact_neardup_pairs_matches_numpy(vecs):
     assert got_chunked == expect
 
 
-def test_ivf_ann_recall_on_clustered_data(spark):
-    """IVF with data-adaptive centroids: recall@5 vs brute force on
-    clustered embeddings; deterministic across invocations."""
-    from opengin_ingestion_spark.operators.similarity import ivf_ann_topk
+def test_ivf_ann_recall_on_clustered_data(spark, tmp_path):
+    """IVF with data-adaptive centroids, as a self-search through the
+    persisted index: recall@5 vs brute force on clustered embeddings, and
+    deterministic — two builds at the same seed search identically."""
+    from opengin_ingestion_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_search,
+    )
 
     rng = np.random.RandomState(7)
     centers = rng.standard_normal((8, 16)) * 4
@@ -136,10 +140,15 @@ def test_ivf_ann_recall_on_clustered_data(spark):
         rows.append((i, [float(x) for x in (c + 0.3 * rng.standard_normal(16))]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     exact = {(r["vec_id"], r["neighbor_id"]) for r in brute_force_topk(df, k=5).collect()}
-    a = {(r["vec_id"], r["neighbor_id"], r["rank"])
-         for r in ivf_ann_topk(df, k=5, n_centroids=8, n_probe=2).collect()}
-    b = {(r["vec_id"], r["neighbor_id"], r["rank"])
-         for r in ivf_ann_topk(df, k=5, n_centroids=8, n_probe=2).collect()}
+    runs = []
+    for name in ("ivf_a", "ivf_b"):
+        idx = str(tmp_path / name)
+        build_ivf_index(df, idx, n_centroids=8, seed=42)
+        runs.append({
+            (r["vec_id"], r["neighbor_id"], r["rank"])
+            for r in ivf_search(df, idx, k=5, n_probe=2).collect()
+        })
+    a, b = runs
     assert a == b, "IVF must be deterministic"
     approx = {(q, n) for q, n, _ in a}
     recall = len(exact & approx) / len(exact)
@@ -177,28 +186,29 @@ def test_ivf_search_batch_recall(spark, tmp_path):
 
 
 def test_ivf_persisted_index_matches_inline(spark, tmp_path):
-    """build_ivf_index persists quantizer + assignments; querying through
-    the index returns exactly the inline (train-per-call) result, and the
-    persisted centroids round-trip bit-for-bit (determinism across
-    sessions — the JSON float repr is exact)."""
+    """build_ivf_index persists quantizer + assignments deterministically:
+    two builds at the same seed give identical ``ivf_search`` output, and
+    the persisted centroids round-trip bit-for-bit against a fresh
+    training (determinism across sessions — the JSON float repr is
+    exact)."""
     import numpy as np
 
     from opengin_ingestion_spark.operators.similarity import (
         build_ivf_index,
-        ivf_ann_topk,
+        ivf_search,
         load_ivf_centroids,
         train_centroids,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    idx = str(tmp_path / "ivf")
-    meta = build_ivf_index(emb, idx, n_centroids=8, seed=42)
-    assert meta["n_centroids"] == 8 and meta["dim"] == 64
-    inline = sorted(
-        map(tuple, ivf_ann_topk(emb, k=5, n_centroids=8, seed=42).collect())
-    )
-    indexed = sorted(map(tuple, ivf_ann_topk(emb, k=5, index_path=idx).collect()))
-    assert inline == indexed
+    results = []
+    for name in ("ivf_a", "ivf_b"):
+        idx = str(tmp_path / name)
+        meta = build_ivf_index(emb, idx, n_centroids=8, seed=42)
+        assert meta["n_centroids"] == 8 and meta["dim"] == 64
+        results.append(sorted(map(tuple, ivf_search(emb, idx, k=5).collect())))
+    assert results[0] == results[1]
+    assert len(results[0]) == 5 * emb.count()
     cent = load_ivf_centroids(idx)
     fresh = train_centroids(emb, n_centroids=8, seed=42)
     assert cent.shape == (8, 64)

@@ -1,5 +1,6 @@
 """Streaming tests: AvailableNow replay, kill/resume from checkpoint,
-exactly-once across restart, dead-letter split (SURVEY.md §5)."""
+exactly-once across restart, dead-letter split, mid-stream schema drift
+(SURVEY.md §5)."""
 
 from __future__ import annotations
 
@@ -9,8 +10,6 @@ import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-import pytest
-from pyspark.sql import functions as F
 
 from opengin_ingestion_spark.sources.gintable import GinTable
 from opengin_ingestion_spark.streaming.tail import tail_changelog
@@ -86,35 +85,6 @@ def test_streaming_resume_from_checkpoint(spark, tiny_log, tmp_path):
         if s["metrics"].get("batch_id") is not None
     ]
     assert len(bids) == len(set(bids))
-
-
-def test_stream_dedup_within_watermark(spark, tiny_log, tmp_path):
-    """dropDuplicatesWithinWatermark over a log with duplicated events:
-    each seq is emitted exactly once; state is watermark-bounded."""
-    from opengin_ingestion_spark.sources.changelog import make_duplicated_variant
-    from opengin_ingestion_spark.sources.reader import read_changelog_stream
-    from opengin_ingestion_spark.streaming.dedup import dedup_stream
-
-    dup_dir = str(tmp_path / "dup_log")
-    make_duplicated_variant(tiny_log["dir"], dup_dir, dup_batches=[0, 3])
-    stream = read_changelog_stream(spark, dup_dir, max_files_per_trigger=4)
-    deduped = dedup_stream(stream, keys=["seq"], ts_col="warc_ts", lateness="2 hours")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300)
-    out = spark.sql("SELECT seq, count(*) n FROM dedup_out GROUP BY seq")
-    dup_emitted = out.filter(F.col("n") > 1).count()
-    total = out.count()
-    n_src = spark.read.parquet(tiny_log["dir"]).select("seq").distinct().count()
-    assert total == n_src, "every distinct event exactly once"
-    assert dup_emitted == 0
-    spark.catalog.dropTempView("dedup_out")
 
 
 def test_dead_letter_split(spark, tiny_log, tmp_path):
@@ -227,164 +197,3 @@ def test_supervised_tail_restarts_on_midstream_schema_drift(
     assert_states_equal(engine, oracle_final_state(live))
     # post-evolution winners carry their log-provided lang
     assert table.read().filter("lang is not null").count() > 0
-
-
-def test_windowed_event_counts_match_batch(spark, tmp_path):
-    """Streaming watermarked tumbling-window counts == the same aggregation
-    run in batch over the whole log (completeness under in-bound lateness).
-
-    Lateness must exceed the CROSS-BATCH disorder (2x the generator's
-    jitter: a previous batch's max ts vs a later batch's min ts), so a
-    dedicated low-jitter log is used — tiny_log's ±1h jitter would need
-    >2h lateness, longer than the log itself."""
-    from opengin_ingestion_spark.sources.changelog import (
-        ChangeLogSpec,
-        generate_changelog,
-    )
-    from opengin_ingestion_spark.sources.reader import read_changelog_stream
-    from opengin_ingestion_spark.streaming.windows import windowed_event_counts
-
-    d = str(tmp_path / "wlog")
-    generate_changelog(
-        d, ChangeLogSpec(n_events=4_000, n_urls=400, n_batches=8, seed=17,
-                         jitter_us=300_000_000)  # ±5 min
-    )
-    stream = read_changelog_stream(spark, d, max_files_per_trigger=2)
-    agg = windowed_event_counts(stream, window="10 minutes", lateness="11 minutes")
-    q = (
-        agg.writeStream.format("memory").queryName("win_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(300)
-    got = {
-        (r["window_start"], r["op"]): r["n_events"]
-        for r in spark.sql("SELECT * FROM win_out").collect()
-    }
-    batch = spark.read.parquet(d)
-    expect = {
-        (r["w"]["start"], r["op"]): r["n"]
-        for r in batch.groupBy(
-            F.window("warc_ts", "10 minutes").alias("w"), "op"
-        ).agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    # append mode only emits windows the final watermark passed; every
-    # emitted window must match the batch aggregation exactly
-    assert len(got) >= 5, f"too few emitted windows: {len(got)}"
-    assert all(expect[k] == v for k, v in got.items())
-    spark.catalog.dropTempView("win_out")
-
-
-def test_sessionize_gap_sessions(spark, tmp_path):
-    """applyInPandasWithState sessionization: gap splits sessions (data
-    path), idle keys close via event-time timeout (timeout path)."""
-    import pyarrow as pa
-
-    from opengin_ingestion_spark.sources.reader import read_changelog_stream
-    from opengin_ingestion_spark.streaming.windows import sessionize
-
-    t0 = 1_700_000_000_000_000  # us
-    HOUR = 3_600_000_000
-
-    def write(path, rows, mtime):
-        tbl = pa.table(
-            {
-                "op": pa.array([r[0] for r in rows]),
-                "seq": pa.array([r[1] for r in rows], pa.int64()),
-                "url": pa.array([r[2] for r in rows]),
-                "warc_ts": pa.array(
-                    [r[3] for r in rows], pa.timestamp("us", tz="UTC")
-                ),
-                "html": pa.array([b"<html/>"] * len(rows), pa.binary()),
-                "content_len": pa.array([7] * len(rows), pa.int64()),
-            }
-        )
-        pq.write_table(tbl, path)
-        os.utime(path, (mtime, mtime))
-
-    d = tmp_path / "slog"
-    d.mkdir()
-    # file 1: A has 2 close events; B and C one each
-    write(
-        str(d / "batch_00000.parquet"),
-        [("U", 1, "A", t0), ("U", 2, "A", t0 + 10_000_000),
-         ("U", 3, "B", t0), ("U", 4, "C", t0)],
-        mtime=1_000_000,
-    )
-    # file 2 (processed later): A and B again 2h later; C idle
-    write(
-        str(d / "batch_00001.parquet"),
-        [("U", 5, "A", t0 + 2 * HOUR), ("U", 6, "B", t0 + 2 * HOUR)],
-        mtime=1_000_100,
-    )
-    stream = read_changelog_stream(spark, str(d), max_files_per_trigger=1)
-    sessions = sessionize(stream, gap_seconds=600, lateness="10 minutes")
-    q = (
-        sessions.writeStream.format("memory").queryName("sess_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(300)
-    got = {
-        (r["url"]): (r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.sql("SELECT * FROM sess_out").collect()
-    }
-    # sessions emit only once the watermark seals them (end+gap passed):
-    # the 2h-later events advance the watermark, the final no-data batch
-    # fires the timeouts. A: 2 events spanning 10s; B and C singletons
-    # (C had NO new data — pure timeout path).
-    assert got["A"][2] == 2
-    assert (got["A"][1] - got["A"][0]).total_seconds() == 10
-    assert got["B"][2] == 1
-    assert got["C"][2] == 1
-    # the 2h-later open sessions are NOT emitted (watermark never passed)
-    assert len(got) == 3
-    spark.catalog.dropTempView("sess_out")
-
-
-def test_sessionize_stream_equals_batch_oracle(spark, tmp_path):
-    """Stream sessionize over a low-jitter log == batch gap_sessions for
-    every watermark-sealed session, and both custom-state and built-in
-    session_window variants agree."""
-    from opengin_ingestion_spark.operators.aggregate_tables import gap_sessions
-    from opengin_ingestion_spark.sources.changelog import (
-        ChangeLogSpec,
-        generate_changelog,
-    )
-    from opengin_ingestion_spark.sources.reader import read_changelog_stream
-    from opengin_ingestion_spark.streaming.windows import sessionize
-
-    d = str(tmp_path / "slog2")
-    generate_changelog(
-        d, ChangeLogSpec(n_events=3_000, n_urls=300, n_batches=6, seed=31,
-                         jitter_us=10_000_000)  # ±10 s
-    )
-    GAP = 120
-    stream = read_changelog_stream(spark, d, max_files_per_trigger=2)
-    q = (
-        sessionize(stream, gap_seconds=GAP, lateness="60 seconds")
-        .writeStream.format("memory").queryName("sess_eq")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt3"))
-        .trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(300)
-    stream_sessions = {
-        (r["url"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.sql("SELECT * FROM sess_eq").collect()
-    }
-    batch_df = spark.read.parquet(d).withColumnRenamed("seq", "_seq")
-    batch_sessions = {
-        (r["url"], r["session_start"], r["session_end"], r["n_events"])
-        for r in gap_sessions(batch_df, gap_seconds=GAP).collect()
-    }
-    assert stream_sessions, "no sessions emitted"
-    assert stream_sessions <= batch_sessions, (
-        f"stream emitted sessions batch disagrees with: "
-        f"{sorted(stream_sessions - batch_sessions)[:3]}"
-    )
-    # everything except the unsealed tail must have been emitted
-    assert len(stream_sessions) >= 0.7 * len(batch_sessions)
-    spark.catalog.dropTempView("sess_eq")
