@@ -1,6 +1,6 @@
 # Developer workflow (mirrors the reference's python/Makefile:6-16 targets)
 
-.PHONY: test bench scaling submit-demo package clean
+.PHONY: test bench perfbench scaling submit-demo package clean
 
 # the Tier-1 command from ROADMAP.md, verbatim (make turns $$ into $)
 test:
@@ -8,6 +8,11 @@ test:
 
 bench:
 	python bench.py
+
+# the BENCHMARK.json command, verbatim; the run's options go in ARGS, e.g.
+#   make perfbench ARGS="--workload serve --seed 1 --seconds 10"
+perfbench:
+	python3 perfbench/run.py $(ARGS)
 
 scaling:
 	python bench_scaling.py

@@ -56,7 +56,10 @@ def cmd_info(path: str) -> None:
                 "schema_version": snap["schema_version"],
                 "n_buckets": snap["n_buckets"],
                 "live_files": len(files),
-                "live_rows": sum(f["rows"] for f in files),
+                # heavy files repeat rows: each row has one base copy
+                "live_rows": sum(
+                    f["rows"] for f in files if f.get("family", "base") == "base"
+                ),
                 "live_bytes": sum(f["bytes"] for f in files),
                 "applied_batch_ranges": snap["applied_batch_ranges"],
                 "committed_at": snap["committed_at"],

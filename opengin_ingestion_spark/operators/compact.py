@@ -14,6 +14,7 @@ outputs each run (exporter.py:28-103); here rewrite is surgical.
 
 from __future__ import annotations
 
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from opengin_ingestion_spark.sources.gintable import BUCKET_COL, GinTable
@@ -32,43 +33,52 @@ def fragmented_buckets(table: GinTable, max_files_per_bucket: int = 4) -> set[in
     return {b for (b, _fam), n in counts.items() if n > max_files_per_bucket}
 
 
-def rebucket(table: GinTable, new_n_buckets: int, key: str | None = None) -> dict:
+def rewrite_buckets(
+    table: GinTable, snap: dict, buckets: set[int], metrics: dict,
+    keep: Column | None = None, n_buckets: int | None = None,
+    sort_by: list[str] | None = None, folded: bool = False,
+) -> dict:
+    """The copy-on-write rewrite behind compact, fold, rebucket and
+    tombstone expiry: read the rows of ``buckets`` (those matching
+    ``keep``), bucket them under ``n_buckets`` (default: the table's), one
+    task per bucket, write them with the table's one writer and commit
+    them in place of both families' files — dropping superseded heavy
+    rows. Deduplicated read state preserves heavy_seq_unique (but cannot
+    establish it: a legacy external writer may have duplicated a _seq)."""
+    rows = table.read(snap, buckets=buckets, include_internal=True)
+    if keep is not None:
+        rows = rows.filter(keep)
+    rows = rows.withColumn(
+        BUCKET_COL, table.bucket_expr(snap=snap, n_buckets=n_buckets)
+    ).repartition(n_buckets or len(buckets), F.col(BUCKET_COL))
+    if sort_by:
+        rows = rows.sortWithinPartitions(BUCKET_COL, *sort_by)
+    new_files = table.write_data_files(
+        rows, snap["version"] + 1, snap["schema_version"], folded
+    )
+    return table.commit(
+        new_files, replaced_buckets=buckets, batch_ids=[],
+        metrics={**metrics, "files_written": len(new_files)},
+        expected_parent=snap["version"], new_n_buckets=n_buckets,
+        heavy_seq_unique=snap.get("heavy_seq_unique", False),
+    )
+
+
+def rebucket(table: GinTable, new_n_buckets: int) -> dict:
     """Change the table's bucket count: rewrite EVERY row under the new
     ``pmod(xxhash64(key), new_n_buckets)`` scheme in one copy-on-write
     commit. Use when a table sized by the first batch outgrows its buckets
     (a bucket's working set must stay within executor memory — see
     choose_n_buckets). Snapshot-isolated: old snapshots keep their own
     n_buckets, so time-travel reads still prune correctly."""
-    from pyspark.sql import functions as F
-
     snap = table.current_snapshot()
     if new_n_buckets == snap["n_buckets"]:
         return snap
-    rows = (
-        table.read(snap, include_internal=True)
-        .withColumn(BUCKET_COL, table.bucket_expr(key, snap, n_buckets=new_n_buckets))
-        .repartition(new_n_buckets, F.col(BUCKET_COL))
-    )
-    new_files = table.write_split_data_files(
-        rows, snap["version"] + 1, snap["schema_version"]
-    )
-    return table.commit(
-        new_files,
-        replaced_buckets={f["bucket"] for f in snap["files"]},
-        batch_ids=[],
-        metrics={
-            "op": "rebucket",
-            "n_buckets_old": snap["n_buckets"],
-            "n_buckets_new": new_n_buckets,
-            "files_written": len(new_files),
-        },
-        expected_parent=snap["version"],
-        new_n_buckets=new_n_buckets,
-        # full-table rewrite from deduplicated read state: preserves the
-        # invariant (establishing it on a pre-invariant table would also
-        # require base-row _seq uniqueness, which a legacy external writer
-        # could have violated — stay conservative)
-        heavy_seq_unique=snap.get("heavy_seq_unique", False),
+    return rewrite_buckets(
+        table, snap, {f["bucket"] for f in snap["files"]},
+        {"op": "rebucket", "n_buckets_old": snap["n_buckets"],
+         "n_buckets_new": new_n_buckets},
+        n_buckets=new_n_buckets,
     )
 
 
@@ -143,30 +153,11 @@ def fold_heavy_compact(table: GinTable, buckets: set[int] | None = None) -> dict
     buckets = foldable if buckets is None else (foldable & set(buckets))
     if not buckets:
         return snap
-    rows = (
-        table.read(snap, buckets=buckets, include_internal=True)
-        .withColumn(BUCKET_COL, table.bucket_expr(snap=snap))
-        .repartition(len(buckets), F.col(BUCKET_COL))
-    )
-    # full rows (heavy inline) as ONE folded base file per bucket; the
-    # commit drops these buckets' heavy files (all families replaced)
-    new_files = table.write_data_files(
-        rows, snap["version"] + 1, snap["schema_version"], folded=True
-    )
-    return table.commit(
-        new_files,
-        replaced_buckets=buckets,
-        batch_ids=[],
-        metrics={
-            "op": "fold_heavy",
-            "buckets_folded": len(buckets),
-            "files_written": len(new_files),
-        },
-        expected_parent=snap["version"],
-        # folded buckets end with zero heavy-family files; buckets left
-        # split (subset fold) keep their heavy files untouched — either
-        # way no heavy _seq is duplicated by this rewrite
-        heavy_seq_unique=snap.get("heavy_seq_unique", False),
+    # full rows (heavy inline) as ONE folded base file per bucket; buckets
+    # left split (subset fold) keep their heavy files untouched
+    return rewrite_buckets(
+        table, snap, buckets, {"op": "fold_heavy", "buckets_folded": len(buckets)},
+        folded=True,
     )
 
 
@@ -198,30 +189,7 @@ def compact(
     buckets = fragmented_buckets(table, max_files_per_bucket)
     if not buckets:
         return snap
-    rows = (
-        table.read(snap, buckets=buckets, include_internal=True)
-        .withColumn(BUCKET_COL, table.bucket_expr(snap=snap))
-        .repartition(len(buckets), F.col(BUCKET_COL))
-    )
-    if sort_by:
-        rows = rows.sortWithinPartitions(BUCKET_COL, *sort_by)
-    # full rewrite of the fragmented buckets: both families; stale heavy
-    # rows (superseded payload versions) are dropped here
-    new_files = table.write_split_data_files(
-        rows, snap["version"] + 1, snap["schema_version"]
-    )
-    return table.commit(
-        new_files,
-        replaced_buckets=buckets,
-        batch_ids=[],
-        metrics={
-            "op": "compact",
-            "buckets_compacted": len(buckets),
-            "files_written": len(new_files),
-        },
-        expected_parent=snap["version"],
-        # partial rewrite from deduplicated read state: preserves (but
-        # cannot establish) the invariant — untouched buckets keep their
-        # old heavy files
-        heavy_seq_unique=snap.get("heavy_seq_unique", False),
+    return rewrite_buckets(
+        table, snap, buckets, {"op": "compact", "buckets_compacted": len(buckets)},
+        sort_by=sort_by,
     )

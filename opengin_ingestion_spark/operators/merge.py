@@ -21,7 +21,7 @@ Physical strategy (the scale story — each step sized for 10^10 events):
    partition alongside that bucket's target rows, so
    ``bucket_parquet_bytes × ~4 (in-memory factor) + batch_slice_bytes``
    must fit one executor's pandas heap. The bucket side is bounded by
-   ``choose_n_buckets`` (sources/gintable.py:67 — 64 MB on-disk default ≈
+   ``choose_n_buckets`` (sources/gintable.py — 64 MB on-disk default ≈
    256 MB in memory); the batch side is bounded by micro-batch sizing
    (maxFilesPerTrigger in the tail) PLUS the zipf-hot-url worst case: one
    url dominating a batch concentrates that batch's slice in one
@@ -34,29 +34,32 @@ Physical strategy (the scale story — each step sized for 10^10 events):
    off by default because it costs an extra Arrow round-trip).
 4. **Bucket pruning**: only the touched buckets' data files are read
    (manifest-level pruning — untouched files are never even listed) and
-   rewritten. At B=4096 buckets a 1%-of-urls micro-batch rewrites ~B
-   files, not the table.
+   rewritten. This does not make a merge cheap at scale: a batch touching
+   1% of urls at B=4096 buckets hits nearly every bucket, so it rewrites
+   nearly every bucket's base file (merge-on-read is a ROADMAP item).
 5. Union (aligned via the schema-evolution lattice) of current bucket
    contents + transformed winners → one LWW hash-aggregate → final bucket
    contents. Deletes become tombstones (payload nulled, ordering key kept,
    hidden from reads) so an out-of-order event in a later batch can NOT
    resurrect a deleted url; tombstones are expired by watermark
    (expire_tombstones).
-6. Write one file per touched bucket (explicit repartition — measured 3×
-   faster than letting every task open a writer per bucket), then ONE
-   atomic manifest commit recording the batch id → duplicate delivery of
-   the same batch id is a no-op (exactly-once under foreachBatch retry:
-   the check happens *inside* the merge, the commit is atomic).
+6. The task that computed a bucket's winners writes them with pyarrow
+   (``DataFileWriter``, the body of ``GinTable.write_data_files``) and
+   returns one row per file — the payload never goes back to the JVM.
+   Then ONE atomic manifest commit records the batch id → duplicate
+   delivery of the same batch id is a no-op (exactly-once under
+   foreachBatch retry: the check happens *inside* the merge, the commit
+   is atomic).
 
 Spark actions per merge: a per-bucket input-stats aggregation (key/ts/len
 columns only — it yields touched buckets, events/bytes/lag metrics AND
-per-input-bucket lineage in one pass) and the data-file write. On a
-column-family-split table the write is two actions over ONE persisted
-evaluation of the merge plan: base (light columns, bucket-replace) and
-heavy (batch winners' payloads, append). NOT ``df.observe``:
-Observation.get never resolves inside foreachBatch (the micro-batch
-DataFrame belongs to a cloned SparkSession whose listener events don't
-reach the observation), which zombies the streaming query.
+per-input-bucket lineage in one pass) and the write, which collects the
+file rows. With AQE on each action is two jobs (the shuffle map stage,
+then the result), so a merge runs 4 Spark jobs (tests/test_gintable.py::
+test_merge_job_budget). NOT ``df.observe``: Observation.get never
+resolves inside foreachBatch (the micro-batch DataFrame belongs to a
+cloned SparkSession whose listener events don't reach the observation),
+which zombies the streaming query.
 """
 
 from __future__ import annotations
@@ -70,12 +73,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from opengin_ingestion_spark.operators.compact import rewrite_buckets
 from opengin_ingestion_spark.operators.evolution import align_to_schema, evolve_schema
 from opengin_ingestion_spark.sources.gintable import (
     BUCKET_COL,
     DELETED_COL,
+    FILE_ROWS,
     SEQ_COL,
     CommitConflict,
+    DataFile,
+    DataFileWriter,
     GinTable,
 )
 
@@ -320,11 +327,8 @@ def _merge_once(
         for f in stored_schema.fields
         if f.name not in (key, ts) and not f.name.startswith("_")
     ]
-    out_fields = [T.StructField(BUCKET_COL, T.IntegerType(), False)] + list(
-        stored_schema.fields
-    )
-    out_schema = T.StructType(out_fields)
-    out_cols = [f.name for f in out_fields]
+    # the table's one data-file writer, run in-process on each task's winners
+    write = DataFileWriter(table, stored_schema, snap["version"] + 1)
 
     def merge_partition(batches):
         import pandas as pd  # executor-side
@@ -347,19 +351,18 @@ def _merge_once(
                 pdf.loc[deleted, c] = None
         if pandas_transform is not None:
             pdf = pandas_transform(pdf)
-        yield pdf[out_cols]
+        yield pd.DataFrame(write.write_frame(pdf))
 
-    merged = bucketed.mapInPandas(merge_partition, schema=out_schema)
-
-    # --- action 2: copy-on-write rewrite of touched buckets (already
-    # bucket-partitioned — the write does not shuffle again). On a split
-    # table this writes base (all winners, light cols) + heavy (batch
-    # winners' payloads only: target winners read back with null heavy, so
-    # the isNotNull family filter selects exactly the new payloads) --------
+    # --- action 2: LWW, transform and the copy-on-write write, in the task
+    # that holds the bucket. On a split table the bucket gets a base file
+    # (all winners, light cols) and a heavy file (batch winners' payloads
+    # only: target winners read back with null heavy, so the payload
+    # filter selects exactly the new payloads) ----------------------------
     t_w = time.time()
-    new_files = table.write_split_data_files(
-        merged, snap["version"] + 1, schema_version
-    )
+    new_files = [
+        DataFile(schema_version=schema_version, **r.asDict())
+        for r in bucketed.mapInPandas(merge_partition, FILE_ROWS).collect()
+    ]
     write_s = round(time.time() - t_w, 3)
 
     lineage = [
@@ -382,7 +385,8 @@ def _merge_once(
         "buckets_rewritten": len(touched),
         "merge_seconds": round(time.time() - t_start, 3),
         # time in the merge's two Spark actions: the input-stats
-        # aggregation and the data-file write (which runs LWW + transform)
+        # aggregation and the data-file write (which runs LWW, transform
+        # and the in-task Parquet write)
         "stats_s": stats_s,
         "write_s": write_s,
         "lag_seconds": (
@@ -436,26 +440,8 @@ def expire_tombstones(table: GinTable, watermark_ts) -> dict:
     touched = {r[0] for r in buckets_df.collect()}
     if not touched:
         return snap
-    kept = (
-        table.read(snap, buckets=touched, include_internal=True)
-        .filter(~expirable)
-        .withColumn(BUCKET_COL, table.bucket_expr(snap=snap))
-        # one task per bucket, so one file per bucket and family; done
-        # before the split writer's checkpoint so both family writes reuse
-        # the one shuffle
-        .repartition(len(touched), F.col(BUCKET_COL))
-    )
-    # full rewrite: both families replaced — this also purges the expired
-    # tombstones' (and any superseded winners') stale heavy rows
-    new_files = table.write_split_data_files(
-        kept, snap["version"] + 1, snap["schema_version"]
-    )
-    return table.commit(
-        new_files,
-        replaced_buckets=touched,
-        batch_ids=[],
-        metrics={"op": "expire_tombstones", "buckets_rewritten": len(touched)},
-        expected_parent=snap["version"],
-        # full rewrite of the touched buckets from deduplicated read state
-        heavy_seq_unique=snap.get("heavy_seq_unique", False),
+    return rewrite_buckets(
+        table, snap, touched,
+        {"op": "expire_tombstones", "buckets_rewritten": len(touched)},
+        keep=~expirable,
     )

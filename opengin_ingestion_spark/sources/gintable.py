@@ -25,15 +25,17 @@ replace:
     data files reference the schema version they were written with. Reads
     use Spark 4's widening Parquet read (int32→int64, missing column→null)
     against the *current* schema.
+  * **One data-file writer**: ``GinTable.write_data_files``, whose tasks
+    write their rows with pyarrow and return one small row per file.
 
 Scale notes (10^10 events, 1000 executors): manifests list O(n_buckets)
 files after compaction, not O(commits); applied-batch ranges stay O(1) for
-monotone streaming batch ids; the only driver-side work per commit is a
-footer stat read of the files the commit itself wrote.
+monotone streaming batch ids; the driver opens no data file per commit.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import uuid
@@ -41,10 +43,13 @@ from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
@@ -77,6 +82,17 @@ def write_json_atomic(path: str, obj) -> None:
         fh.flush()
         os.fsync(fh.fileno())
     os.replace(tmp, path)
+    fsync_dir(os.path.dirname(os.path.abspath(path)))
+
+
+def fsync_dir(path: str) -> None:
+    """fsync a directory so an entry just renamed or linked into it
+    survives a power failure: a commit the caller saw succeed stays."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def choose_n_buckets(
@@ -150,10 +166,11 @@ class DataFile:
     # a folded bucket re-splits it (and must read its payloads from the
     # folded file — see merge.py target read).
     folded: bool = False
-    # event-time range of the file's rows (naive-UTC ISO strings, read
-    # from the parquet footer at write time) — the MANIFEST-level pruning
-    # statistic: a range read drops non-overlapping files from the scan's
-    # file list before Spark even opens a footer. None (no stats / heavy
+    # event-time range of the file's rows (naive-UTC ISO strings, taken
+    # by the writer from the rows it wrote — equal to the footer's
+    # row-group min/max) — the MANIFEST-level pruning statistic: a range
+    # read drops non-overlapping files from the scan's file list before
+    # Spark even opens a footer. None (no timestamp ts column / heavy
     # family / pre-r5 files) means "never pruned" — always safe.
     ts_min: str | None = None
     ts_max: str | None = None
@@ -173,46 +190,144 @@ def _ts_to_iso(x) -> str:
     """Normalize a datetime / ISO string to naive-UTC ISO text — the same
     form DataFile.ts_min/ts_max use, so range overlap is a lexicographic
     string comparison."""
-    import datetime as _dt
-
-    if isinstance(x, _dt.datetime):
+    if isinstance(x, datetime):
         if x.tzinfo is not None:
-            x = x.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+            x = x.astimezone(timezone.utc).replace(tzinfo=None)
         return x.isoformat()
     return str(x)
 
 
-def _footer_ts_range(meta, ts_col: str) -> tuple[str | None, str | None]:
-    """(min, max) of ``ts_col`` across a parquet file's row groups as
-    naive-UTC ISO strings, from footer statistics already in hand at
-    write time; (None, None) when absent (INT96 legacy, missing column,
-    suppressed stats) — absent stats mean the file is never pruned."""
-    import datetime as _dt
+# one row per data file a writer task wrote: a DataFile without the
+# schema_version, which the driver adds when it collects the rows
+FILE_ROWS_ARROW = pa.schema([
+    ("path", pa.string()), ("bucket", pa.int32()), ("family", pa.string()),
+    ("folded", pa.bool_()), ("rows", pa.int64()), ("bytes", pa.int64()),
+    ("ts_min", pa.string()), ("ts_max", pa.string()),
+])
+FILE_ROWS = from_arrow_schema(FILE_ROWS_ARROW)
 
-    try:
-        names = list(meta.schema.names)
-        if ts_col not in names:
-            return None, None
-        idx = names.index(ts_col)
-        lo = hi = None
-        for rg in range(meta.num_row_groups):
-            st = meta.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                return None, None
-            mn, mx = st.min, st.max
-            lo = mn if lo is None or mn < lo else lo
-            hi = mx if hi is None or mx > hi else hi
 
-        def iso(x):
-            if isinstance(x, _dt.datetime):
-                if x.tzinfo is not None:
-                    x = x.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                return x.isoformat()
-            return None
+class DataFileWriter:
+    """The executor-side body of ``GinTable.write_data_files``: writes rows
+    carrying BUCKET_COL with pyarrow into the commit directory, one Parquet
+    file per (bucket, family), and returns one FILE_ROWS row per file.
+    Pickles into tasks: it holds plain values only.
 
-        return iso(lo), iso(hi)
-    except Exception:
-        return None, None
+    The files are what Spark's writer wrote: ``to_arrow_schema`` of the
+    stored columns, all optional (Spark writes ``asNullable``), INT64
+    TIMESTAMP(MICROS, isAdjustedToUTC=true), row-group statistics (on all
+    but the heavy payloads), snappy. Base files hold the light columns
+    (all when folded), heavy files ``_seq`` + heavy columns of the rows
+    with a payload. Paths are
+    ``data/commit-{version:08d}-{family}[-folded]-{uuid8}/_bucket={b}/
+    part-{partition}-{task attempt}.parquet`` (``idle_buckets`` parses the
+    version); a retried attempt's files are never committed, and
+    ``gc_orphans`` reclaims them."""
+
+    def __init__(self, table: "GinTable", schema: T.StructType, version: int,
+                 folded: bool = False):
+        snap = table.current_snapshot()
+        self.root, self.folded = table.path, folded
+        self.timezone = table.spark.conf.get("spark.sql.session.timeZone")
+        self.schema = T.StructType([f for f in schema.fields if f.name != BUCKET_COL])
+        self.arrow_schema = pa.schema(
+            [f.with_nullable(True) for f in to_arrow_schema(self.schema)]
+        )
+        names = self.schema.fieldNames()
+        # heavy payloads get no min/max: they prune nothing, and pyarrow
+        # repeats them in every page header (+50% on a heavy file)
+        self.payloads = table.heavy_columns(snap)
+        heavy = [] if folded else self.payloads
+        self.families = {"base": [c for c in names if c not in heavy]}
+        if heavy:
+            self.families["heavy"] = [SEQ_COL, *heavy]
+        tag = f"{'-folded' if folded else ''}-{uuid.uuid4().hex[:8]}"
+        self.dirs = {
+            fam: f"{DATA_DIR}/commit-{version:08d}-{fam}{tag}" for fam in self.families
+        }
+        # base files record their rows' event-time range
+        ts = table.ts_col(snap)
+        ts_ok = ts in names and pa.types.is_timestamp(self.arrow_schema.field(ts).type)
+        self.ts_col = ts if ts_ok else None
+
+    def __call__(self, batches):
+        """``mapInArrow`` body: Arrow batches in, one batch of file rows out."""
+        yield pa.RecordBatch.from_pylist(self.write(batches), schema=FILE_ROWS_ARROW)
+
+    def write_frame(self, pdf) -> list[dict]:
+        """Write a pandas frame (the merge's winners). It goes to Arrow
+        through pyspark's own pandas serializer, as a ``mapInPandas`` result
+        would: its naive timestamps are session-local wall time, localized
+        with the session time zone."""
+        from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
+
+        ser = ArrowStreamPandasSerializer(self.timezone, False, False)
+        cols = [
+            ser._create_array(pdf[f.name], af.type, f.dataType, arrow_cast=True)
+            for f, af in zip(self.schema, self.arrow_schema)
+        ]
+        table = pa.Table.from_arrays(
+            [*cols, pa.array(pdf[BUCKET_COL], pa.int32())],
+            names=[*self.schema.fieldNames(), BUCKET_COL],
+        )
+        return self.write([table])
+
+    def write(self, batches) -> list[dict]:
+        """Write Arrow batches or tables. One ParquetWriter stays open per
+        (bucket, family) and each batch becomes one row group, so a task
+        never holds a whole bucket."""
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
+        files = {}  # (bucket, family) -> (ParquetWriter, file row)
+        try:
+            for batch in batches:
+                data = pa.table(batch)
+                buckets = data[BUCKET_COL]
+                data = data.select(self.schema.fieldNames()).cast(self.arrow_schema)
+                ids = pc.unique(buckets).to_pylist()
+                for b in ids:
+                    part = data if len(ids) == 1 else data.filter(pc.equal(buckets, b))
+                    for fam, cols in self.families.items():
+                        rows = part.select(cols)
+                        if fam == "heavy":  # only the rows that carry a payload
+                            rows = rows.filter(functools.reduce(
+                                pc.or_, [pc.is_valid(rows[c]) for c in cols[1:]]
+                            ))
+                        if not rows.num_rows:
+                            continue
+                        if (b, fam) not in files:
+                            path = f"{self.dirs[fam]}/{BUCKET_COL}={b}/{name}"
+                            full = os.path.join(self.root, path)
+                            os.makedirs(os.path.dirname(full), exist_ok=True)
+                            files[b, fam] = (
+                                pq.ParquetWriter(
+                                    full, rows.schema, compression="snappy",
+                                    store_schema=False,  # Spark stores none
+                                    write_statistics=[c for c in cols if c not in self.payloads],
+                                ),
+                                {"path": path, "bucket": b, "family": fam,
+                                 "folded": self.folded, "rows": 0, "ts": []},
+                            )
+                        writer, row = files[b, fam]
+                        writer.write_table(rows)
+                        row["rows"] += rows.num_rows
+                        if fam == "base" and self.ts_col:
+                            mm = pc.min_max(rows[self.ts_col]).as_py()
+                            row["ts"] += [v for v in mm.values() if v is not None]
+        finally:
+            for writer, _ in files.values():
+                writer.close()
+        out = []
+        for _, row in files.values():
+            ts = row.pop("ts")
+            out.append({
+                **row, "bytes": os.path.getsize(os.path.join(self.root, row["path"])),
+                "ts_min": _ts_to_iso(min(ts)) if ts else None,
+                "ts_max": _ts_to_iso(max(ts)) if ts else None,
+            })
+        return out
 
 
 class GinTable:
@@ -367,6 +482,7 @@ class GinTable:
             ) from e
         finally:
             os.unlink(tmp)
+        fsync_dir(self._manifest_dir)
 
     # -- schema ------------------------------------------------------------
 
@@ -460,7 +576,7 @@ class GinTable:
 
         ``ts_range=(lo, hi)`` (datetimes or ISO strings, inclusive) prunes
         base/folded files whose manifest-recorded event-time range
-        (DataFile.ts_min/ts_max, read from footers at write time) does not
+        (DataFile.ts_min/ts_max, recorded by the writer) does not
         overlap — at 10^5-file scale this drops files BEFORE Spark lists
         or opens them, one manifest pass instead of 10^5 footer reads;
         row-group stats then prune WITHIN the surviving files (see
@@ -582,94 +698,19 @@ class GinTable:
 
     # -- write path ----------------------------------------------------------
 
-    def write_split_data_files(
-        self, df: DataFrame, version: int, schema_version: int
-    ) -> list[DataFile]:
-        """Write a full-row frame (carrying BUCKET_COL) as BOTH column
-        families: light columns → "base", heavy columns (rows with any
-        heavy value present) → "heavy" keyed by ``_seq``. The input is
-        persisted across the two write actions so the upstream plan (the
-        merge shuffle, a compaction read) runs once. Degrades to one plain
-        write when the table has no split."""
-        heavy_cols = self.heavy_columns()
-        if not heavy_cols:
-            return self.write_data_files(df, version, schema_version)
-        # localCheckpoint, not persist(): the SQL cache columnar-compresses
-        # the binary payload (measured 2× slower than the write itself);
-        # checkpoint blocks are row-serialized and cheap, and both family
-        # writes read the single materialization
-        df = df.localCheckpoint(eager=True)
-        base = df.drop(*heavy_cols)
-        files = self.write_data_files(base, version, schema_version, family="base")
-        present = None
-        for c in heavy_cols:
-            cond = F.col(c).isNotNull()
-            present = cond if present is None else (present | cond)
-        heavy = df.filter(present).select(BUCKET_COL, SEQ_COL, *heavy_cols)
-        files += self.write_data_files(heavy, version, schema_version, family="heavy")
-        return files
-
     def write_data_files(
-        self, df: DataFrame, version: int, schema_version: int,
-        family: str = "base",
-        folded: bool = False,
+        self, df: DataFrame, version: int, schema_version: int, folded: bool = False
     ) -> list[DataFile]:
-        """Write ``df`` (must carry BUCKET_COL) as bucketed Parquet files
-        under a commit-scoped directory; returns manifest entries.
-
-        Callers hash-partition ``df`` by BUCKET_COL first (the merge's
-        bucket exchange, or ``repartition(len(touched), BUCKET_COL)``) so
-        each bucket is written by one task as one file — measured 3× faster
-        than every task opening a writer per bucket, and it keeps file
-        counts O(buckets), not O(buckets × tasks).
-
-        Files land before the manifest is committed — a crashed commit
-        leaves only unreferenced files (GC'able), never a torn table.
-        """
-        fam_tag = f"{family}-folded" if folded else family
-        commit_dir_rel = os.path.join(
-            DATA_DIR, f"commit-{version:08d}-{fam_tag}-{uuid.uuid4().hex[:8]}"
-        )
-        commit_dir = os.path.join(self.path, commit_dir_rel)
-        (
-            df.write.mode("error")
-            .partitionBy(BUCKET_COL)
-            .parquet(commit_dir)
-        )
-        # event-time column for the manifest pruning statistic (base and
-        # folded files only — heavy payload rows carry no event time)
-        try:
-            stats_ts_col = self.ts_col() if family == "base" else None
-        except Exception:  # pre-v0 table state: no stats, never pruned
-            stats_ts_col = None
-        out: list[DataFile] = []
-        for bucket_dir in sorted(os.listdir(commit_dir)):
-            if not bucket_dir.startswith(f"{BUCKET_COL}="):
-                continue
-            bucket = int(bucket_dir.split("=")[1])
-            bdir = os.path.join(commit_dir, bucket_dir)
-            for fname in sorted(os.listdir(bdir)):
-                if not fname.endswith(".parquet"):
-                    continue
-                fpath = os.path.join(bdir, fname)
-                meta = pq.read_metadata(fpath)
-                ts_min = ts_max = None
-                if stats_ts_col is not None:
-                    ts_min, ts_max = _footer_ts_range(meta, stats_ts_col)
-                out.append(
-                    DataFile(
-                        path=os.path.join(commit_dir_rel, bucket_dir, fname),
-                        bucket=bucket,
-                        rows=meta.num_rows,
-                        bytes=os.path.getsize(fpath),
-                        schema_version=schema_version,
-                        family=family,
-                        folded=folded,
-                        ts_min=ts_min,
-                        ts_max=ts_max,
-                    )
-                )
-        return out
+        """Write ``df`` (carrying BUCKET_COL, hash-partitioned by it so each
+        bucket is one task's file per family) as Parquet files of both
+        column families (``folded=True``: heavy columns inline) in one
+        Spark job of ``DataFileWriter`` tasks; return their manifest
+        entries. A crash before the commit leaves only GC'able orphans."""
+        writer = DataFileWriter(self, df.schema, version, folded)
+        return [
+            DataFile(schema_version=schema_version, **r.asDict())
+            for r in df.mapInArrow(writer, FILE_ROWS).collect()
+        ]
 
     def commit(
         self,

@@ -370,9 +370,11 @@ def test_external_heavy_append_drops_invariant(spark, tiny_log, tmp_path):
     invariant (an external writer) drops heavy_seq_unique to False, and
     the read path falls back to the defensive dedup — a duplicated _seq
     cannot fan the payload join out."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from opengin_ingestion_spark.sources.gintable import BUCKET_COL
+    from opengin_ingestion_spark.sources.gintable import BUCKET_COL, DataFile
 
     table, _ = replay_changelog(
         spark, tiny_log["dir"], str(tmp_path / "pages"), n_buckets=8
@@ -382,17 +384,29 @@ def test_external_heavy_append_drops_invariant(spark, tiny_log, tmp_path):
     n_before = table.read().count()
     pdf_before = table.read().toPandas().sort_values("url").reset_index(drop=True)
 
-    # external writer: re-append one existing payload row verbatim
+    # external writer: re-append one existing payload row verbatim as a
+    # heavy-family file of its own
     one = (
         table.read(include_internal=True)
         .filter(F.col("html").isNotNull())
-        .limit(1)
         .withColumn(BUCKET_COL, table.bucket_expr("url"))
         .select(BUCKET_COL, "_seq", "html", "text")
+        .first()
     )
-    files = table.write_data_files(
-        one, snap["version"] + 1, snap["schema_version"], family="heavy"
+    rel = os.path.join("data", "external", f"{BUCKET_COL}={one[BUCKET_COL]}", "heavy.parquet")
+    os.makedirs(os.path.dirname(os.path.join(table.path, rel)))
+    pq.write_table(
+        pa.Table.from_pylist(
+            [{c: one[c] for c in ("_seq", "html", "text")}],
+            schema=pa.schema([("_seq", pa.int64()), ("html", pa.binary()), ("text", pa.string())]),
+        ),
+        os.path.join(table.path, rel),
     )
+    files = [DataFile(
+        path=rel, bucket=one[BUCKET_COL], rows=1,
+        bytes=os.path.getsize(os.path.join(table.path, rel)),
+        schema_version=snap["schema_version"], family="heavy",
+    )]
     new_snap = table.commit(files, replaced_buckets=set(), batch_ids=[])
     assert new_snap["heavy_seq_unique"] is False, (
         "unclaimed heavy append must drop the invariant flag"

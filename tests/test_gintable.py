@@ -3,13 +3,18 @@ ranges, bucket-pruned reads, schema history, orphan GC."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from opengin_ingestion_spark.sources.gintable import (
     BUCKET_COL,
+    FILE_ROWS,
     CommitConflict,
+    DataFile,
+    DataFileWriter,
     GinTable,
     ranges_add,
     ranges_contain,
@@ -132,6 +137,27 @@ def test_gc_orphans(spark, tmp_path):
     assert not t.gc_orphans(dry_run=True, min_age_seconds=0)
     assert t.read().count() == 8  # live data intact
 
+    # a retried task attempt: the same writer runs twice into the same
+    # commit directories, each run's files named by its own task attempt;
+    # the driver collected (and commits) only the second run's file rows
+    part = df.repartition(2, BUCKET_COL)
+    write = DataFileWriter(t, part.schema, 2)
+    lost = {r.path for r in part.mapInArrow(write, FILE_ROWS).collect()}
+    kept = [
+        DataFile(schema_version=1, **r.asDict())
+        for r in part.mapInArrow(write, FILE_ROWS).collect()
+    ]
+    kept_paths = {f.path for f in kept}
+    assert lost and not lost & kept_paths
+    assert {os.path.dirname(p) for p in lost} == {os.path.dirname(p) for p in kept_paths}
+    snap = t.commit(kept, replaced_buckets={f.bucket for f in files}, batch_ids=[1])
+    assert {f["path"] for f in snap["files"]} == kept_paths
+    assert set(t.gc_orphans(dry_run=True, min_age_seconds=0)) == lost
+    t.gc_orphans(dry_run=False, min_age_seconds=0)
+    assert not t.gc_orphans(dry_run=True, min_age_seconds=0)
+    assert all(os.path.exists(os.path.join(t.path, p)) for p in kept_paths)
+    assert t.read().count() == 8
+
 
 def test_concurrent_merges_retry_and_both_commit(spark, tmp_path):
     """Two writers merging different batches race on the same parent
@@ -220,7 +246,7 @@ def test_lookup_is_bucket_pruned_point_read(spark, tiny_log, tmp_path):
 
 def test_read_ts_range_prunes_files_from_manifest(spark, tiny_log, tmp_path):
     """Manifest-level event-time pruning: append commits of disjoint time
-    slices carry per-file ts_min/ts_max (footer stats recorded at write);
+    slices carry per-file ts_min/ts_max (recorded by the writer);
     a range read lists only overlapping files (inputFiles) and returns
     exactly the rows a plain filter would."""
     from pyspark.sql import functions as F
@@ -252,9 +278,10 @@ def test_read_ts_range_prunes_files_from_manifest(spark, tiny_log, tmp_path):
             .withColumn("_seq", F.col("_seq") + F.lit(10_000_000 * (i + 1)))
         )
         files = table.write_data_files(part, table.current_version() + 1, 1)
-        assert all(f.ts_min is not None and f.ts_max is not None for f in files), (
-            "append files must carry manifest ts stats"
-        )
+        assert all(
+            f.ts_min is not None and f.ts_max is not None
+            for f in files if f.family == "base"
+        ), "appended base files must carry manifest ts stats"
         table.commit(files, replaced_buckets=set(), batch_ids=[])
 
     snap = table.current_snapshot()
@@ -288,12 +315,13 @@ def test_read_ts_range_prunes_files_from_manifest(spark, tiny_log, tmp_path):
 
 
 def _spy_commits(monkeypatch):
-    """Record fsync(fd) and replace(src, dst) calls by inode, so a test can
-    tell which file was fsynced before which replace."""
+    """Record fsync(fd), replace(src, dst) and link(src, dst) calls by
+    inode, so a test can tell which file or directory was fsynced before
+    or after which publish."""
     import os
 
     events = []
-    real_fsync, real_replace = os.fsync, os.replace
+    real_fsync, real_replace, real_link = os.fsync, os.replace, os.link
 
     def fsync(fd):
         events.append(("fsync", os.fstat(fd).st_ino))
@@ -303,24 +331,41 @@ def _spy_commits(monkeypatch):
         events.append(("replace", os.stat(src).st_ino, os.path.basename(dst)))
         return real_replace(src, dst)
 
+    def link(src, dst):
+        events.append(("link", os.stat(src).st_ino, os.path.basename(dst)))
+        return real_link(src, dst)
+
     monkeypatch.setattr(os, "fsync", fsync)
     monkeypatch.setattr(os, "replace", replace)
+    monkeypatch.setattr(os, "link", link)
     return events
 
 
-def _assert_fsynced_then_replaced(events, dst_name):
-    at = [i for i, e in enumerate(events) if e[0] == "replace" and e[2] == dst_name]
-    assert len(at) == 1, f"{dst_name} must be published by one replace: {events}"
+def _assert_published(events, dst_name, directory):
+    """``dst_name`` was published by one replace or link of a tmp file
+    fsynced before it, and its directory was fsynced after it."""
+    import os
+
+    at = [
+        i for i, e in enumerate(events)
+        if e[0] in ("replace", "link") and e[2] == dst_name
+    ]
+    assert len(at) == 1, f"{dst_name} must be published once: {events}"
     tmp_ino = events[at[0]][1]
     assert ("fsync", tmp_ino) in events[: at[0]], (
-        f"the tmp file replacing {dst_name} was not fsynced first: {events}"
+        f"the tmp file publishing {dst_name} was not fsynced first: {events}"
+    )
+    assert ("fsync", os.stat(directory).st_ino) in events[at[0] + 1:], (
+        f"the directory holding {dst_name} was not fsynced after: {events}"
     )
 
 
 def test_commit_pointers_fsync_before_replace(tmp_path, monkeypatch):
-    """Spark-free: the IVF meta commit, the MinHash index meta commit and
-    the follow_changes checkpoint each fsync their tmp file before
-    os.replace publishes it, and leave no tmp file behind."""
+    """Spark-free: the GinTable manifest commit, the IVF meta commit, the
+    MinHash index meta commit and the follow_changes checkpoint each fsync
+    their tmp file before os.link / os.replace publishes it, fsync the
+    directory after it (so the new entry survives a power failure), and
+    leave no tmp file behind."""
     import json
     import os
     from unittest import mock
@@ -332,11 +377,21 @@ def test_commit_pointers_fsync_before_replace(tmp_path, monkeypatch):
         _write_checkpoint,
     )
 
+    events = _spy_commits(monkeypatch)
+    # the manifest commit needs no Spark session: GinTable only keeps it
+    t = GinTable.create(None, str(tmp_path / "t"), SCHEMA, n_buckets=4)
+    manifests = tmp_path / "t" / "_manifests"
+    _assert_published(events, "v00000000.json", manifests)
+    events.clear()
+    t.commit([], set(), [0])
+    _assert_published(events, "v00000001.json", manifests)
+    assert t.current_snapshot()["applied_batch_ranges"] == [[0, 0]]
+
     ivf = tmp_path / "ivf"
     ivf.mkdir()
-    events = _spy_commits(monkeypatch)
+    events.clear()
     _commit_ivf_meta(str(ivf), {"generation": 3})
-    _assert_fsynced_then_replaced(events, "meta.json")
+    _assert_published(events, "meta.json", ivf)
     assert json.loads((ivf / "meta.json").read_text()) == {"generation": 3}
 
     # build_minhash_index with its Spark work stubbed out: only the
@@ -346,14 +401,203 @@ def test_commit_pointers_fsync_before_replace(tmp_path, monkeypatch):
         monkeypatch.setattr(dedup, name, mock.MagicMock())
     mh = tmp_path / "mh"
     meta = dedup.build_minhash_index(mock.MagicMock(), str(mh))
-    _assert_fsynced_then_replaced(events, "meta.json")
+    _assert_published(events, "meta.json", mh)
     assert json.loads((mh / "meta.json").read_text()) == meta
 
     events.clear()
     ckpt = tmp_path / "follow" / "ckpt.json"
     _write_checkpoint(str(ckpt), 7)
-    _assert_fsynced_then_replaced(events, "ckpt.json")
+    _assert_published(events, "ckpt.json", ckpt.parent)
     assert _read_checkpoint(str(ckpt)) == 7
 
-    for d in (ivf, mh, ckpt.parent):
+    for d in (manifests, ivf, mh, ckpt.parent):
         assert not [f for f in os.listdir(d) if ".tmp" in f]
+
+
+def test_merge_job_budget(spark, tmp_path):
+    """A 200-event merge_batch on a backfilled 16-bucket table (the serve
+    shape) runs at most 4 Spark jobs: the input-stats action and the
+    write, each a shuffle-map job plus a result job with AQE on. The
+    write's tasks run LWW, extraction and the Parquet write themselves;
+    the checkpointed two-pass Spark write it replaced ran 7 jobs."""
+    import glob
+    import shutil
+
+    from opengin_ingestion_spark.operators.merge import merge_batch
+    from opengin_ingestion_spark.plans.replay import (
+        TRANSFORM_FIELDS,
+        pages_pandas_transform,
+        replay_changelog,
+    )
+    from opengin_ingestion_spark.sources.changelog import (
+        ChangeLogSpec,
+        generate_changelog,
+    )
+
+    log = tmp_path / "log"
+    generate_changelog(
+        str(log), ChangeLogSpec(n_events=2_000, n_urls=300, n_batches=10, seed=5)
+    )
+    last = sorted(glob.glob(str(log / "*.parquet")))[-1]
+    delta = str(tmp_path / "delta.parquet")
+    shutil.move(last, delta)
+    table, _ = replay_changelog(spark, str(log), str(tmp_path / "pages"), n_buckets=16)
+    batch = spark.read.parquet(delta)  # schema inference is a job of its own
+    assert batch.count() == 200
+
+    sc = spark.sparkContext
+    sc.setJobGroup("merge-job-budget", "one serve-shape merge")
+    try:
+        res = merge_batch(
+            table, batch, batch_id=1,
+            pandas_transform=pages_pandas_transform,
+            transform_fields=TRANSFORM_FIELDS,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("merge-job-budget")
+    assert res.metrics["buckets_rewritten"] == 16
+    assert 0 < len(jobs) <= 4, f"merge ran {len(jobs)} Spark jobs"
+
+
+def _footer_ts(path: str, col: str = "warc_ts"):
+    """(min, max) of ``col`` over a Parquet file's row-group statistics,
+    as naive-UTC ISO strings (the manifest's form)."""
+    import pyarrow.parquet as pq
+
+    from opengin_ingestion_spark.sources.gintable import _ts_to_iso
+
+    md = pq.ParquetFile(path).metadata
+    idx = md.schema.names.index(col)
+    stats = [md.row_group(i).column(idx).statistics for i in range(md.num_row_groups)]
+    assert all(s is not None and s.has_min_max for s in stats), path
+    return (
+        _ts_to_iso(min(s.min for s in stats)),
+        _ts_to_iso(max(s.max for s in stats)),
+    )
+
+
+def _spark_partitioned_write(table, df, version, family):
+    """The data-file writer every table on disk was written with before
+    the in-task pyarrow writer: one Spark ``partitionBy(_bucket)`` write
+    per column family, then a footer read per file."""
+    import pyarrow.parquet as pq
+
+    rel_dir = os.path.join("data", f"commit-{version:08d}-{family}-spark")
+    df.write.partitionBy(BUCKET_COL).parquet(os.path.join(table.path, rel_dir))
+    out = []
+    for bdir in sorted(os.listdir(os.path.join(table.path, rel_dir))):
+        if not bdir.startswith(f"{BUCKET_COL}="):
+            continue
+        for fname in sorted(os.listdir(os.path.join(table.path, rel_dir, bdir))):
+            if not fname.endswith(".parquet"):
+                continue
+            rel = os.path.join(rel_dir, bdir, fname)
+            full = os.path.join(table.path, rel)
+            lo, hi = _footer_ts(full) if family == "base" else (None, None)
+            out.append(DataFile(
+                path=rel, bucket=int(bdir.split("=")[1]),
+                rows=pq.read_metadata(full).num_rows, bytes=os.path.getsize(full),
+                schema_version=1, family=family, ts_min=lo, ts_max=hi,
+            ))
+    return out
+
+
+def test_mixed_writer_buckets(spark, tiny_log, tmp_path):
+    """Tables on disk were written by Spark's partitionBy writer; merging
+    into one with the in-task pyarrow writer leaves buckets that mix both
+    writers' files. Reads, lookup, table_changes and compact return the
+    same rows as an all-pyarrow table, one merge runs under a non-UTC
+    session time zone without moving any instant, and every new file's
+    footer has Spark's timestamp type, row-group statistics and the
+    manifest's ts range."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from opengin_ingestion_spark.operators.compact import compact
+    from opengin_ingestion_spark.operators.merge import merge_batch
+    from opengin_ingestion_spark.plans.replay import (
+        TRANSFORM_FIELDS,
+        pages_pandas_transform,
+        replay_changelog,
+    )
+    from opengin_ingestion_spark.sources.gintable import table_changes
+
+    logs = sorted(glob.glob(os.path.join(tiny_log["dir"], "*.parquet")))
+    first = tmp_path / "first"
+    first.mkdir()
+    os.symlink(logs[0], first / os.path.basename(logs[0]))
+    new, _ = replay_changelog(spark, str(first), str(tmp_path / "new"), n_buckets=8)
+
+    # the same v1 state, written by Spark's partitionBy writer
+    heavy = new.heavy_columns()
+    old = GinTable.create(
+        spark, str(tmp_path / "old"), new.schema(), n_buckets=8, heavy_columns=heavy
+    )
+    state = new.read(include_internal=True).withColumn(BUCKET_COL, new.bucket_expr())
+    has_payload = F.col(heavy[0]).isNotNull() | F.col(heavy[1]).isNotNull()
+    spark_files = _spark_partitioned_write(
+        old, state.drop(*heavy), 1, "base"
+    ) + _spark_partitioned_write(
+        old, state.filter(has_payload).select(BUCKET_COL, "_seq", *heavy), 1, "heavy"
+    )
+    old.commit(spark_files, set(), [0], heavy_seq_unique=True)
+
+    def rows(df):
+        return sorted(
+            map(tuple, df.collect()), key=lambda t: tuple((x is None, x) for x in t)
+        )
+
+    assert rows(old.read(include_internal=True)) == rows(new.read(include_internal=True))
+
+    # two small merges that touch a few buckets each, so some buckets keep
+    # Spark-written base files, some mix Spark heavy files with pyarrow
+    # ones; the second merge runs under a non-UTC session time zone
+    bucket = F.pmod(F.xxhash64("url"), F.lit(8))
+    merges = [(1, logs[1], (0, 1), "UTC"), (2, logs[2], (1, 2), "America/Los_Angeles")]
+    for bid, path, buckets, tz in merges:
+        for t in (new, old):
+            spark.conf.set("spark.sql.session.timeZone", tz if t is old else "UTC")
+            try:
+                merge_batch(
+                    t, spark.read.parquet(path).filter(bucket.isin(*buckets)),
+                    batch_id=bid, pandas_transform=pages_pandas_transform,
+                    transform_fields=TRANSFORM_FIELDS,
+                )
+            finally:
+                spark.conf.set("spark.sql.session.timeZone", "UTC")
+    snap = old.current_snapshot()
+    spark_paths = {f.path for f in spark_files}
+    live_spark = {f["bucket"] for f in snap["files"] if f["path"] in spark_paths}
+    live_new = {f["bucket"] for f in snap["files"] if f["path"] not in spark_paths}
+    assert live_spark & live_new, "some bucket must mix both writers' files"
+    assert live_spark - live_new, "some bucket must keep only Spark's files"
+
+    assert rows(old.read(include_internal=True)) == rows(new.read(include_internal=True))
+    assert rows(old.read()) == rows(new.read())
+    for url in rows(new.read().select("url"))[::40]:
+        assert rows(old.lookup(url[0])) == rows(new.lookup(url[0]))
+    assert rows(table_changes(old, 1)) == rows(table_changes(new, 1))
+
+    # the pyarrow files are physically what Spark wrote
+    for f in snap["files"]:
+        if f["path"] in spark_paths:
+            continue
+        full = os.path.join(old.path, f["path"])
+        md = pq.ParquetFile(full).metadata
+        assert f["rows"] == md.num_rows and f["bytes"] == os.path.getsize(full)
+        assert md.row_group(0).column(0).compression == "SNAPPY"
+        if f["family"] != "base":
+            continue
+        col = md.schema.column(md.schema.names.index("warc_ts"))
+        assert col.physical_type == "INT64"
+        assert "isAdjustedToUTC=true" in str(col.logical_type)
+        assert "timeUnit=microseconds" in str(col.logical_type)
+        assert (f["ts_min"], f["ts_max"]) == _footer_ts(full)
+
+    compact(old, max_files_per_bucket=1)
+    compact(new, max_files_per_bucket=1)
+    assert rows(old.read(include_internal=True)) == rows(new.read(include_internal=True))
+    assert len(old.current_snapshot()["files"]) == len(new.current_snapshot()["files"])
