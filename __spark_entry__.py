@@ -866,7 +866,7 @@ def q_cdc_replay_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_cdc_fold_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fold correctness through the driver gate: the SAME replay fixture,
-    folded into a read-optimized COPY (compact(fold_heavy=True) — heavy
+    folded into a read-optimized COPY (fold_heavy_compact — heavy
     columns inline, join-free read plan, tests/test_plans.py), must
     hash-match the SAME DuckDB oracle as cdc_replay_pages. The copy keeps
     the flagship's split-layout table (and its measured plan) untouched;

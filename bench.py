@@ -176,10 +176,10 @@ def bench_cdc_replay(spark, n_events: int, n_urls: int) -> dict[str, float]:
 
         # fold-heavy compaction: the read-optimized layout — measure the
         # one-off fold, then the join-free read against heavy_read (split)
-        from opengin_ingestion_spark.operators.compact import compact
+        from opengin_ingestion_spark.operators.compact import fold_heavy_compact
 
         t0 = time.perf_counter()
-        compact(table, fold_heavy=True)
+        fold_heavy_compact(table)
         fold = time.perf_counter() - t0
         t0 = time.perf_counter()
         _run_to_noop(table.read())

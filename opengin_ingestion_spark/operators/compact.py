@@ -53,9 +53,7 @@ def rewrite_buckets(
     ).repartition(n_buckets or len(buckets), F.col(BUCKET_COL))
     if sort_by:
         rows = rows.sortWithinPartitions(BUCKET_COL, *sort_by)
-    new_files = table.write_data_files(
-        rows, snap["version"] + 1, snap["schema_version"], folded
-    )
+    new_files = table.write_data_files(rows, snap, folded)
     return table.commit(
         new_files, replaced_buckets=buckets, batch_ids=[],
         metrics={**metrics, "files_written": len(new_files)},
@@ -68,9 +66,9 @@ def rebucket(table: GinTable, new_n_buckets: int) -> dict:
     """Change the table's bucket count: rewrite EVERY row under the new
     ``pmod(xxhash64(key), new_n_buckets)`` scheme in one copy-on-write
     commit. Use when a table sized by the first batch outgrows its buckets
-    (a bucket's working set must stay within executor memory — see
-    choose_n_buckets). Snapshot-isolated: old snapshots keep their own
-    n_buckets, so time-travel reads still prune correctly."""
+    (a merge rewrites whole buckets — see choose_n_buckets).
+    Snapshot-isolated: old snapshots keep their own n_buckets, so
+    time-travel reads still prune correctly."""
     snap = table.current_snapshot()
     if new_n_buckets == snap["n_buckets"]:
         return snap
@@ -164,16 +162,11 @@ def fold_heavy_compact(table: GinTable, buckets: set[int] | None = None) -> dict
 def compact(
     table: GinTable,
     max_files_per_bucket: int = 4,
-    fold_heavy: bool = False,
     sort_by: list[str] | None = None,
 ) -> dict:
     """Rewrite fragmented buckets to one file each. Returns the new
-    snapshot (or the current one if nothing to do).
-
-    ``fold_heavy=True`` switches to the read-optimized fold instead (see
-    ``fold_heavy_compact()``): every not-yet-folded bucket is rewritten
-    with heavy columns inline and its heavy files dropped — subsequent
-    reads are join-free.
+    snapshot (or the current one if nothing to do). The read-optimized
+    fold is ``fold_heavy_compact``.
 
     ``sort_by`` clusters each rewritten bucket's rows by the given
     columns (``sortWithinPartitions`` — no extra shuffle, the bucket
@@ -183,8 +176,6 @@ def compact(
     The ingest path deliberately does NOT sort (merge writes stay cheap);
     clustering is a compaction-time decision, like Iceberg's sort-order
     rewrite (public knowledge)."""
-    if fold_heavy:
-        return fold_heavy_compact(table)
     snap = table.current_snapshot()
     buckets = fragmented_buckets(table, max_files_per_bucket)
     if not buckets:

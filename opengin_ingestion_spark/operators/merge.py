@@ -16,33 +16,27 @@ Physical strategy (the scale story — each step sized for 10^10 events):
    one ``mapInPandas`` pass with zero further exchanges, no broadcast
    build, no driver involvement. The transform runs after the
    partition-local LWW, on final winners only.
-3. **Memory invariant** (the cost of having no pre-winnow): ALL of a
-   batch's revisions of a url cross the shuffle and land in one pandas
-   partition alongside that bucket's target rows, so
-   ``bucket_parquet_bytes × ~4 (in-memory factor) + batch_slice_bytes``
-   must fit one executor's pandas heap. The bucket side is bounded by
-   ``choose_n_buckets`` (sources/gintable.py — 64 MB on-disk default ≈
-   256 MB in memory); the batch side is bounded by micro-batch sizing
-   (maxFilesPerTrigger in the tail) PLUS the zipf-hot-url worst case: one
-   url dominating a batch concentrates that batch's slice in one
-   partition. Bounded in practice because a micro-batch ≪ table, and
-   stress-tested (tests/test_replay.py::test_merge_hot_url_batch — one
-   url = 20% of the batch); a deployment that must absorb pathological
-   hot batches passes ``merge_batch(..., hot_key_prereduce=True)`` — a
-   map-side partial LWW reduce that collapses each input split's
-   revisions of a key to one row before the shuffle (equivalence-tested;
-   off by default because it costs an extra Arrow round-trip).
+3. **Streaming bucket merge** (the memory bound, by construction): after
+   the exchange a JVM ``sortWithinPartitions(key)`` (codegen'd, spills)
+   makes each url's rows contiguous, and ``lww_stream`` folds the
+   partition's Arrow batches one at a time through ``lww_last``, carrying
+   only the winner of the batch's last url into the next batch. Winners
+   go to the writer frame by frame, one row group each, so a task holds
+   one Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``
+   rows) plus one row — whatever the bucket's size and however many
+   revisions a hot url has in the batch
+   (tests/test_replay.py::test_merge_hot_url_batch).
 4. **Bucket pruning**: only the touched buckets' data files are read
    (manifest-level pruning — untouched files are never even listed) and
    rewritten. This does not make a merge cheap at scale: a batch touching
    1% of urls at B=4096 buckets hits nearly every bucket, so it rewrites
    nearly every bucket's base file (merge-on-read is a ROADMAP item).
 5. Union (aligned via the schema-evolution lattice) of current bucket
-   contents + transformed winners → one LWW hash-aggregate → final bucket
-   contents. Deletes become tombstones (payload nulled, ordering key kept,
-   hidden from reads) so an out-of-order event in a later batch can NOT
-   resurrect a deleted url; tombstones are expired by watermark
-   (expire_tombstones).
+   contents + batch rows → the streamed LWW of step 3 → transformed
+   winners = final bucket contents. Deletes become tombstones (payload
+   nulled, ordering key kept, hidden from reads) so an out-of-order event
+   in a later batch can NOT resurrect a deleted url; tombstones are
+   expired by watermark (expire_tombstones).
 6. The task that computed a bucket's winners writes them with pyarrow
    (``DataFileWriter``, the body of ``GinTable.write_data_files``) and
    returns one row per file — the payload never goes back to the JVM.
@@ -87,6 +81,7 @@ from opengin_ingestion_spark.sources.gintable import (
 )
 
 OP_COL = "op"
+BATCH_SEQ_COL = "seq"  # a raw batch's sequence column (stored as _seq)
 FROM_TARGET_COL = "_from_target"  # transient LWW tie-break marker
 
 
@@ -114,41 +109,47 @@ def lww_last(pdf, key: str, ts: str):
     ).drop_duplicates(subset=[key], keep="last")
 
 
+def lww_stream(batches, key: str, ts: str):
+    """``lww_last`` over a stream of frames sorted by ``key``, one frame at
+    a time: yields winner frames, each url exactly once. The winner of a
+    frame's last url is held back and prepended to the next frame, since
+    that url's run may continue there; it is yielded at the end. Holds
+    one input frame plus that one carried row."""
+    import pandas as pd
+
+    carry = None
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        won = lww_last(pdf, key, ts)
+        held = won[key].isin([pdf[key].iloc[-1]]).to_numpy()
+        carry = won[held]
+        if not held.all():
+            yield won[~held]
+    if carry is not None:
+        yield carry
+
+
 def merge_batch(
     table: GinTable,
     batch_df: DataFrame,
     batch_id: int,
-    key: str | None = None,
-    ts: str | None = None,
-    seq: str = "seq",
     pandas_transform: Callable | None = None,
     transform_fields: list[T.StructField] | None = None,
     max_retries: int = 3,
     schema_mapping=None,
-    hot_key_prereduce: bool = False,
 ) -> MergeResult:
-    """Apply one RAW change batch (columns: op 'I'|'U'|'D'; seq; key; ts;
-    payload...) to the table. Idempotent per ``batch_id``.
-
-    ``key``/``ts`` default to the table's manifest-declared merge identity
-    (GinTable.create(key_col=..., ts_col=...)); pass them only when the
-    BATCH names the columns differently from the table (rare — prefer a
-    schema_mapping rename).
-
-    ``hot_key_prereduce=True`` adds a MAP-SIDE partial LWW reduce before
-    the bucket shuffle: each input partition keeps only its per-key
-    (ts, seq)-max row, so a url that dominates the batch crosses the
-    exchange as ≤ one row PER INPUT SPLIT instead of its whole revision
-    stream — the escape hatch for the module-doc step-3 memory invariant
-    when a batch is pathologically hot. Exactly the same final state
-    (max is associative; the partition-local winner feeds the same
-    global partition-local LWW), tested equal on a zipf-hot log. OFF by
-    default: it pays one extra Arrow round-trip of the batch payload,
-    which is a net loss on ordinary zipfian batches.
+    """Apply one RAW change batch (columns: op 'I'|'U'|'D'; seq; the
+    table's key and ts columns; payload...) to the table. Idempotent per
+    ``batch_id``. Each touched bucket is merged as a stream of Arrow
+    batches (module doc, step 3), so no task holds more than one batch
+    plus one row, however large the bucket or hot the url.
 
     ``pandas_transform(pdf) -> pdf`` is the vectorized derive stage (e.g.
-    HTML→text extraction); it runs bucket-locally on final winner rows only
-    — never on superseded revisions, never on unchanged target rows.
+    HTML→text extraction); it runs bucket-locally on each frame of final
+    winner rows — never on superseded revisions.
     ``transform_fields`` declares the columns it adds (for schema
     evolution), e.g. ``[StructField("text", StringType())]``.
 
@@ -161,19 +162,11 @@ def merge_batch(
         from opengin_ingestion_spark.operators.schema_map import apply_schema_mapping
 
         batch_df = apply_schema_mapping(batch_df, schema_mapping)
-    if key is None or ts is None:
-        # ONE manifest read resolves both identity columns (key_col()/
-        # ts_col() each re-parse the snapshot when called bare — measurable
-        # at high merge rates on version-N manifests)
-        _snap = table.current_snapshot()
-        key = key if key is not None else table.key_col(_snap)
-        ts = ts if ts is not None else table.ts_col(_snap)
     last_err: Exception | None = None
     for _attempt in range(max_retries):
         try:
             return _merge_once(
-                table, batch_df, batch_id, key, ts, seq,
-                pandas_transform, transform_fields, hot_key_prereduce,
+                table, batch_df, batch_id, pandas_transform, transform_fields
             )
         except CommitConflict as e:  # concurrent writer won — recompute on top
             last_err = e
@@ -184,16 +177,13 @@ def _merge_once(
     table: GinTable,
     batch_df: DataFrame,
     batch_id: int,
-    key: str,
-    ts: str,
-    seq: str,
     pandas_transform: Callable | None,
     transform_fields: list[T.StructField] | None,
-    hot_key_prereduce: bool = False,
 ) -> MergeResult:
     snap = table.current_snapshot()
     if table.is_batch_applied(batch_id, snap):
         return MergeResult(skipped=True, version=snap["version"])
+    key, ts = table.key_col(snap), table.ts_col(snap)
 
     t_start = time.time()
 
@@ -205,7 +195,7 @@ def _merge_once(
     _seen: set[str] = set()
     _fields: list[T.StructField] = []
     for f in list(batch_df.schema.fields) + list(transform_fields or []):
-        if f.name not in (OP_COL, seq) and f.name not in _seen:
+        if f.name not in (OP_COL, BATCH_SEQ_COL) and f.name not in _seen:
             _fields.append(f)
             _seen.add(f.name)
     batch_user = T.StructType(_fields)
@@ -255,7 +245,9 @@ def _merge_once(
     aligned_schema = T.StructType(
         [T.StructField(OP_COL, T.StringType(), True)] + list(stored_schema.fields)
     )
-    updates = align_to_schema(batch_df.withColumnRenamed(seq, SEQ_COL), aligned_schema)
+    updates = align_to_schema(
+        batch_df.withColumnRenamed(BATCH_SEQ_COL, SEQ_COL), aligned_schema
+    )
 
     # --- read ONLY touched buckets of the current snapshot ------------------
     # (include_internal keeps tombstones: they must participate in LWW so a
@@ -264,7 +256,7 @@ def _merge_once(
     # split table the heavy family is neither read nor rewritten here; a
     # target winner keeps its referenced heavy row, a batch winner appends
     # a new one (write amplification ∝ changed rows, not bucket size).
-    # EXCEPTION — FOLDED buckets (compact(fold_heavy=True)): their folded
+    # EXCEPTION — FOLDED buckets (fold_heavy_compact): their folded
     # base file is the ONLY copy of their payloads and this merge replaces
     # it, so those buckets' target rows must carry heavy columns through
     # the merge; the split write then re-appends every surviving payload
@@ -304,23 +296,13 @@ def _merge_once(
     # One payload shuffle total (it is required for the bucketed write
     # anyway); LWW, tombstoning and the vectorized transform then all run
     # partition-locally with zero further exchanges, no broadcast build, no
-    # driver involvement.
+    # driver involvement. The sort (no exchange, no job) makes each url's
+    # rows contiguous, so the merge streams the partition (lww_stream).
     combined = target.select(*updates.columns).unionByName(updates)
     combined = combined.withColumn(BUCKET_COL, table.bucket_expr(key, snap))
-    if hot_key_prereduce:
-        # map-side partial LWW (see merge_batch doc): per input split keep
-        # only the per-key (ts, seq, from_target)-max row. Partial max
-        # feeds the identical global reduce below — same winner, but a
-        # hot key's superseded revisions never cross the exchange.
-        pre_schema = combined.schema
-
-        def partial_lww(batches):
-            for pdf in batches:
-                if not pdf.empty:
-                    yield lww_last(pdf, key, ts)
-
-        combined = combined.mapInPandas(partial_lww, schema=pre_schema)
-    bucketed = combined.repartition(len(touched), F.col(BUCKET_COL))
+    bucketed = combined.repartition(
+        len(touched), F.col(BUCKET_COL)
+    ).sortWithinPartitions(key)
 
     payload_cols = [
         f.name
@@ -328,36 +310,35 @@ def _merge_once(
         if f.name not in (key, ts) and not f.name.startswith("_")
     ]
     # the table's one data-file writer, run in-process on each task's winners
-    write = DataFileWriter(table, stored_schema, snap["version"] + 1)
+    write = DataFileWriter(table, snap, stored_schema)
+
+    def winners(batches):
+        for pdf in lww_stream(batches, key, ts):
+            deleted = pdf[OP_COL].to_numpy() == "D"
+            pdf = pdf.copy()
+            pdf[DELETED_COL] = deleted
+            if deleted.any():
+                for c in payload_cols:
+                    # object dtype first: numeric pandas columns would upcast
+                    # None→NaN→float64 and break the Arrow cast back to long
+                    pdf[c] = pdf[c].astype(object)
+                    pdf.loc[deleted, c] = None
+            if pandas_transform is not None:
+                pdf = pandas_transform(pdf)
+            yield write.to_arrow(pdf)
 
     def merge_partition(batches):
         import pandas as pd  # executor-side
 
-        pdfs = list(batches)
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        if pdf.empty:
-            return
-        pdf = lww_last(pdf, key, ts)
-        deleted = pdf[OP_COL].to_numpy() == "D"
-        pdf = pdf.copy()
-        pdf[DELETED_COL] = deleted
-        if deleted.any():
-            for c in payload_cols:
-                # object dtype first: numeric pandas columns would upcast
-                # None→NaN→float64 and break the Arrow cast back to long
-                pdf[c] = pdf[c].astype(object)
-                pdf.loc[deleted, c] = None
-        if pandas_transform is not None:
-            pdf = pandas_transform(pdf)
-        yield pd.DataFrame(write.write_frame(pdf))
+        rows = write.write(winners(batches))
+        if rows:
+            yield pd.DataFrame(rows)
 
-    # --- action 2: LWW, transform and the copy-on-write write, in the task
-    # that holds the bucket. On a split table the bucket gets a base file
-    # (all winners, light cols) and a heavy file (batch winners' payloads
-    # only: target winners read back with null heavy, so the payload
-    # filter selects exactly the new payloads) ----------------------------
+    # --- action 2: LWW, transform and the copy-on-write write, streamed
+    # in the task that holds the bucket. On a split table the bucket gets
+    # a base file (all winners, light cols) and a heavy file (batch
+    # winners' payloads only: target winners read back with null heavy,
+    # so the payload filter selects exactly the new payloads) ------------
     t_w = time.time()
     new_files = [
         DataFile(schema_version=schema_version, **r.asDict())

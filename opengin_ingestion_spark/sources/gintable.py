@@ -103,15 +103,13 @@ def choose_n_buckets(
 ) -> int:
     """Pick a power-of-two bucket count from an estimated table size.
 
-    The bucket is the MERGE rewrite unit AND the memory unit: the
-    bucket-local merge concatenates one bucket partition into a single
-    pandas frame, so a bucket's on-disk parquet (~4× smaller than its
-    in-memory form) must stay well under executor memory.
-    ``target_bucket_bytes`` is on-disk: the 64 MB default ≈ 256 MB in
-    memory ≈ a quarter of a small 1 GB-heap executor — safe everywhere,
-    and small enough that compaction/rewrite tasks stay short. Power of
-    two keeps bucket counts stable-ish across re-estimates and makes
-    rebucketing splits clean.
+    The bucket is the MERGE rewrite unit: a merge rewrites each touched
+    bucket's base file whole. It is not a memory unit — the merge streams
+    a bucket one Arrow batch at a time (merge.py, step 3) — so
+    ``target_bucket_bytes`` (on-disk) sizes rewrite work: the 64 MB
+    default keeps merge and compaction tasks short. Power of two keeps
+    bucket counts stable-ish across re-estimates and makes rebucketing
+    splits clean.
     """
     n = min_buckets
     while n < max_buckets and est_table_bytes > n * target_bucket_bytes:
@@ -160,7 +158,7 @@ class DataFile:
     schema_version: int
     family: str = "base"  # column family: "base" (light cols) | "heavy"
     # folded=True (base family only): the file carries ALL columns, heavy
-    # included — written by compact(fold_heavy=True) for read-heavy tables
+    # included — written by fold_heavy_compact for read-heavy tables
     # so reads of its bucket need no heavy join. A bucket is either folded
     # (one folded file, zero heavy files) or split; a later MERGE touching
     # a folded bucket re-splits it (and must read its payloads from the
@@ -224,9 +222,11 @@ class DataFileWriter:
     version); a retried attempt's files are never committed, and
     ``gc_orphans`` reclaims them."""
 
-    def __init__(self, table: "GinTable", schema: T.StructType, version: int,
+    def __init__(self, table: "GinTable", snap: dict, schema: T.StructType,
                  folded: bool = False):
-        snap = table.current_snapshot()
+        """Write version ``snap["version"] + 1``, the commit on top of
+        ``snap``, whose heavy and ts columns the files follow."""
+        version = snap["version"] + 1
         self.root, self.folded = table.path, folded
         self.timezone = table.spark.conf.get("spark.sql.session.timeZone")
         self.schema = T.StructType([f for f in schema.fields if f.name != BUCKET_COL])
@@ -254,11 +254,11 @@ class DataFileWriter:
         """``mapInArrow`` body: Arrow batches in, one batch of file rows out."""
         yield pa.RecordBatch.from_pylist(self.write(batches), schema=FILE_ROWS_ARROW)
 
-    def write_frame(self, pdf) -> list[dict]:
-        """Write a pandas frame (the merge's winners). It goes to Arrow
-        through pyspark's own pandas serializer, as a ``mapInPandas`` result
-        would: its naive timestamps are session-local wall time, localized
-        with the session time zone."""
+    def to_arrow(self, pdf) -> pa.Table:
+        """A pandas frame (the merge's winners) as an Arrow table for
+        ``write``. It goes through pyspark's own pandas serializer, as a
+        ``mapInPandas`` result would: its naive timestamps are
+        session-local wall time, localized with the session time zone."""
         from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
 
         ser = ArrowStreamPandasSerializer(self.timezone, False, False)
@@ -266,11 +266,10 @@ class DataFileWriter:
             ser._create_array(pdf[f.name], af.type, f.dataType, arrow_cast=True)
             for f, af in zip(self.schema, self.arrow_schema)
         ]
-        table = pa.Table.from_arrays(
+        return pa.Table.from_arrays(
             [*cols, pa.array(pdf[BUCKET_COL], pa.int32())],
             names=[*self.schema.fieldNames(), BUCKET_COL],
         )
-        return self.write([table])
 
     def write(self, batches) -> list[dict]:
         """Write Arrow batches or tables. One ParquetWriter stays open per
@@ -595,7 +594,7 @@ class GinTable:
         scan AND the join entirely — heavy columns read as null; the MERGE
         target read uses this (it never needs old payloads).
 
-        FOLDED buckets (compact(fold_heavy=True)) carry heavy columns
+        FOLDED buckets (fold_heavy_compact) carry heavy columns
         inline in their single base-family file: their rows come from one
         full-schema scan with NO join; a fully folded table's read plan is
         join-free. Mixed tables (some buckets folded, some split) union
@@ -699,16 +698,17 @@ class GinTable:
     # -- write path ----------------------------------------------------------
 
     def write_data_files(
-        self, df: DataFrame, version: int, schema_version: int, folded: bool = False
+        self, df: DataFrame, snap: dict, folded: bool = False
     ) -> list[DataFile]:
         """Write ``df`` (carrying BUCKET_COL, hash-partitioned by it so each
         bucket is one task's file per family) as Parquet files of both
         column families (``folded=True``: heavy columns inline) in one
         Spark job of ``DataFileWriter`` tasks; return their manifest
-        entries. A crash before the commit leaves only GC'able orphans."""
-        writer = DataFileWriter(self, df.schema, version, folded)
+        entries for the commit on top of ``snap``. A crash before the
+        commit leaves only GC'able orphans."""
+        writer = DataFileWriter(self, snap, df.schema, folded)
         return [
-            DataFile(schema_version=schema_version, **r.asDict())
+            DataFile(schema_version=snap["schema_version"], **r.asDict())
             for r in df.mapInArrow(writer, FILE_ROWS).collect()
         ]
 

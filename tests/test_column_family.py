@@ -8,7 +8,7 @@ import os
 
 import pytest
 
-from opengin_ingestion_spark.operators.compact import compact
+from opengin_ingestion_spark.operators.compact import compact, fold_heavy_compact
 from opengin_ingestion_spark.operators.merge import merge_batch
 from opengin_ingestion_spark.plans.replay import (
     PAGES_SCHEMA,
@@ -217,7 +217,7 @@ def test_compaction_purges_stale_heavy_rows(spark, tmp_path):
 
 
 def test_fold_heavy_join_free_reads_and_equivalence(spark, tiny_log, tmp_path):
-    """compact(fold_heavy=True): heavy columns folded into one base file
+    """fold_heavy_compact: heavy columns folded into one base file
     per bucket, heavy files dropped, reads JOIN-FREE, state identical to
     the split layout; a second fold is a no-op."""
     table, _ = replay_changelog(
@@ -225,7 +225,7 @@ def test_fold_heavy_join_free_reads_and_equivalence(spark, tiny_log, tmp_path):
         group_files=2,
     )
     before = table.read(include_internal=True).toPandas()
-    snap = compact(table, fold_heavy=True)
+    snap = fold_heavy_compact(table)
     assert snap["metrics"]["op"] == "fold_heavy"
     assert not _files(snap, "heavy"), "fold must drop every heavy file"
     base = _files(snap, "base")
@@ -247,7 +247,7 @@ def test_fold_heavy_join_free_reads_and_equivalence(spark, tiny_log, tmp_path):
     assert light["html"].isna().all() and light["lang"].notna().any()
     # idempotent: nothing left to fold
     v = table.current_version()
-    snap2 = compact(table, fold_heavy=True)
+    snap2 = fold_heavy_compact(table)
     assert snap2["version"] == v
 
 
@@ -269,7 +269,7 @@ def test_merge_after_fold_preserves_payloads(spark, tmp_path):
         merge_batch(table, spark.read.parquet(f), batch_id=i,
                     pandas_transform=pages_pandas_transform,
                     transform_fields=TRANSFORM_FIELDS)
-    compact(table, fold_heavy=True)
+    fold_heavy_compact(table)
     assert not _files(table.current_snapshot(), "heavy")
     for i, f in enumerate(files[2:], start=2):
         merge_batch(table, spark.read.parquet(f), batch_id=i,
@@ -301,7 +301,7 @@ def test_mixed_folded_split_read(spark, tmp_path):
         merge_batch(table, spark.read.parquet(f), batch_id=i,
                     pandas_transform=pages_pandas_transform,
                     transform_fields=TRANSFORM_FIELDS)
-    compact(table, fold_heavy=True)
+    fold_heavy_compact(table)
     # last batch filtered to a few urls → touches a SUBSET of buckets
     from pyspark.sql import functions as F
 
@@ -350,7 +350,7 @@ def test_fold_preserves_time_travel(spark, tiny_log, tmp_path):
     before = normalize_engine_state(
         table.read(old_snap, include_internal=True).toPandas()
     )
-    compact(table, fold_heavy=True)
+    fold_heavy_compact(table)
     # the old snapshot still lists heavy files and reads via the join
     assert any(
         f.get("family") == "heavy" for f in table.snapshot(v_before)["files"]

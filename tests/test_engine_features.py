@@ -116,7 +116,7 @@ def test_rebucket_rejects_carried_files(spark, tmp_path):
     ).withColumn("_deleted", F.lit(False)).withColumn(
         "_bucket", t.bucket_expr("url")
     )
-    files = t.write_data_files(df, 1, 1)
+    files = t.write_data_files(df, t.current_snapshot())
     t.commit(files, set(), [0])
     with pytest.raises(ValueError, match="n_buckets change"):
         t.commit([], set(), [], new_n_buckets=8)

@@ -57,7 +57,7 @@ def test_create_commit_read(spark, tmp_path):
     assert t.read().count() == 0
 
     df = _rows_df(spark, t)
-    files = t.write_data_files(df, version=1, schema_version=1)
+    files = t.write_data_files(df, t.current_snapshot())
     assert files and all(0 <= f.bucket < 8 for f in files)
     snap = t.commit(files, replaced_buckets=set(), batch_ids=[0])
     assert snap["version"] == 1
@@ -70,7 +70,7 @@ def test_create_commit_read(spark, tmp_path):
 def test_bucket_pruned_read(spark, tmp_path):
     t = GinTable.create(spark, str(tmp_path / "t"), SCHEMA, n_buckets=8)
     df = _rows_df(spark, t, n=40)
-    files = t.write_data_files(df, 1, 1)
+    files = t.write_data_files(df, t.current_snapshot())
     t.commit(files, set(), [0])
     some_bucket = files[0].bucket
     pruned = t.read(buckets={some_bucket}, include_internal=True)
@@ -105,12 +105,12 @@ def test_applied_batch_idempotence_bookkeeping(spark, tmp_path):
 def test_copy_on_write_replaces_buckets(spark, tmp_path):
     t = GinTable.create(spark, str(tmp_path / "t"), SCHEMA, n_buckets=4)
     df = _rows_df(spark, t, n=16)
-    files = t.write_data_files(df, 1, 1)
+    files = t.write_data_files(df, t.current_snapshot())
     t.commit(files, set(), [0])
     b = files[0].bucket
     # rewrite bucket b with a single row
     one = df.filter(F.col(BUCKET_COL) == b).limit(1)
-    nf = t.write_data_files(one, 2, 1)
+    nf = t.write_data_files(one, t.current_snapshot())
     snap = t.commit(nf, replaced_buckets={b}, batch_ids=[1])
     live_buckets = {f["bucket"] for f in snap["files"]}
     assert b in live_buckets
@@ -124,10 +124,10 @@ def test_copy_on_write_replaces_buckets(spark, tmp_path):
 def test_gc_orphans(spark, tmp_path):
     t = GinTable.create(spark, str(tmp_path / "t"), SCHEMA, n_buckets=4)
     df = _rows_df(spark, t, n=8)
-    files = t.write_data_files(df, 1, 1)
+    files = t.write_data_files(df, t.current_snapshot())
     t.commit(files, set(), [0])
     # a crashed commit: files written, never committed
-    t.write_data_files(df, 2, 1)
+    t.write_data_files(df, t.current_snapshot())
     # grace window: a fresh unreferenced file may be an IN-FLIGHT commit
     # (data lands before the manifest) — invisible to gc until it ages out
     assert not t.gc_orphans(dry_run=True)
@@ -141,7 +141,7 @@ def test_gc_orphans(spark, tmp_path):
     # commit directories, each run's files named by its own task attempt;
     # the driver collected (and commits) only the second run's file rows
     part = df.repartition(2, BUCKET_COL)
-    write = DataFileWriter(t, part.schema, 2)
+    write = DataFileWriter(t, t.current_snapshot(), part.schema)
     lost = {r.path for r in part.mapInArrow(write, FILE_ROWS).collect()}
     kept = [
         DataFile(schema_version=1, **r.asDict())
@@ -277,7 +277,7 @@ def test_read_ts_range_prunes_files_from_manifest(spark, tiny_log, tmp_path):
             .withColumn(BUCKET_COL, table.bucket_expr(snap=None))
             .withColumn("_seq", F.col("_seq") + F.lit(10_000_000 * (i + 1)))
         )
-        files = table.write_data_files(part, table.current_version() + 1, 1)
+        files = table.write_data_files(part, table.current_snapshot())
         assert all(
             f.ts_min is not None and f.ts_max is not None
             for f in files if f.family == "base"

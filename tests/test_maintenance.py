@@ -37,7 +37,7 @@ def fragmented_table(spark, tiny_log, tmp_path_factory):
             .limit(20)
             .withColumn("_seq", F.col("_seq") + F.lit(10_000_000 * (i + 1)))
         )
-        files = table.write_data_files(part, table.current_version() + 1, 1)
+        files = table.write_data_files(part, table.current_snapshot())
         table.commit(files, replaced_buckets=set(), batch_ids=[])
     return table
 

@@ -143,18 +143,18 @@ def test_table_changes_plan_key_only_anti_join(spark, tiny_log, tmp_path):
 
 
 def test_folded_read_plan_is_join_free_scan(spark, tiny_log, tmp_path):
-    """compact(fold_heavy=True) on the whole table: the subsequent full
+    """fold_heavy_compact on the whole table: the subsequent full
     read is a bare parquet scan — no Join, no Aggregate, no Exchange; and
     include_heavy=False still prunes the inline payload columns at the
     scan (ReadSchema carries no html)."""
-    from opengin_ingestion_spark.operators.compact import compact
+    from opengin_ingestion_spark.operators.compact import fold_heavy_compact
     from opengin_ingestion_spark.plans.replay import replay_changelog
 
     table, _ = replay_changelog(
         spark, tiny_log["dir"], str(tmp_path / "pages"), n_buckets=8,
         group_files=2,
     )
-    compact(table, fold_heavy=True)
+    fold_heavy_compact(table)
     plan = _plan(table.read())
     assert "Join" not in plan and "Aggregate" not in plan
     assert "Exchange" not in plan, "folded read must not shuffle"

@@ -137,6 +137,18 @@ def test_evolution_associative_when_defined(a, b, c):
 
 # --- the shipped LWW (merge.lww_last) against the fold -------------------
 
+def _live_winners(out: pd.DataFrame) -> dict:
+    """An LWW output frame as the fold's state: url → (ts, seq, op, payload)
+    of its non-deleted winners."""
+    return {
+        u: (ts, seq, op, p)
+        for u, ts, seq, op, p in zip(
+            out["url"], out["ts"], out["_seq"], out["op"], out["payload"]
+        )
+        if op != "D"
+    }
+
+
 def _lww_frame(rows: list[tuple], from_target: list[bool]) -> pd.DataFrame:
     return pd.DataFrame(
         {
@@ -153,8 +165,8 @@ def _lww_frame(rows: list[tuple], from_target: list[bool]) -> pd.DataFrame:
 @given(events_st, st.data(), st.randoms())
 @settings(max_examples=200)
 def test_lww_last_matches_fold(events, data, rnd):
-    """merge.lww_last (the one LWW sort the merge runs, partition-local and
-    in hot_key_prereduce) keeps exactly the fold's winners — under any row
+    """merge.lww_last (the one LWW sort the merge runs, on each Arrow batch
+    of a partition) keeps exactly the fold's winners — under any row
     order and any redelivery of events."""
     from opengin_ingestion_spark.operators.merge import lww_last
 
@@ -163,27 +175,82 @@ def test_lww_last_matches_fold(events, data, rnd):
     rnd.shuffle(rows)
     out = lww_last(_lww_frame(rows, [False] * len(rows)), "url", "ts")
     assert out["url"].is_unique
-    got = {
-        u: (ts, seq, op, p)
-        for u, ts, seq, op, p in zip(
-            out["url"], out["ts"], out["_seq"], out["op"], out["payload"]
-        )
-        if op != "D"
-    }
-    assert got == _lww_fold(events)
+    assert _live_winners(out) == _lww_fold(events)
+
+
+@given(events_st, st.data(), st.randoms())
+@settings(max_examples=200)
+def test_lww_stream_matches_fold(events, data, rnd):
+    """merge.lww_stream (the merge's fold over a key-sorted partition's
+    Arrow batches) keeps exactly the fold's winners, each url once, however
+    the sorted rows are cut into batches — cuts inside a url's run
+    included — with redeliveries and with target rows that a batch copy
+    ties on (ts, _seq)."""
+    from opengin_ingestion_spark.operators.merge import lww_stream
+
+    dup, applied = [], []
+    if events:
+        dup = data.draw(st.lists(st.sampled_from(events), max_size=10))
+        applied = data.draw(st.lists(st.sampled_from(events), max_size=5, unique=True))
+    # applied events arrive as target rows, the rest (and all redelivered
+    # copies) as batch rows; a batch copy of an applied event with another
+    # payload ties it on (ts, _seq) — the target row must win the tie,
+    # wherever the batch cuts fall
+    rows = [(e, e in applied) for e in events] + [(e, False) for e in dup]
+    rows += [((u, ts, seq, "U", p + 100), False) for u, ts, seq, _op, p in applied]
+    rnd.shuffle(rows)
+    rows.sort(key=lambda r: r[0][0])  # the sortWithinPartitions(key)
+    cuts = sorted(data.draw(st.sets(st.integers(1, max(len(rows) - 1, 1)))))
+    bounds = [0, *[c for c in cuts if c < len(rows)], len(rows)]
+    batches = [
+        _lww_frame([r for r, _ in rows[a:b]], [t for _, t in rows[a:b]])
+        for a, b in zip(bounds, bounds[1:])
+    ]
+    out = list(lww_stream(iter(batches), "url", "ts"))
+    out = pd.concat(out) if out else _lww_frame([], [])
+    assert out["url"].is_unique
+    assert set(out["url"]) == {e[0] for e in events}
+    assert _live_winners(out) == _lww_fold(events)
+
+
+def test_lww_stream_never_reads_ahead():
+    """lww_stream yields a batch's finished urls before it pulls the next
+    batch: with at least two urls per batch, its k-th yield comes after
+    exactly k batches were consumed — a task holds one batch plus the
+    carried row, never the bucket."""
+    from opengin_ingestion_spark.operators.merge import lww_stream
+
+    rows = [(f"u{i:03d}", r, 3 * i + r, "U", r) for i in range(40) for r in range(3)]
+    batches = [_lww_frame(rows[a:a + 7], [False] * len(rows[a:a + 7]))
+               for a in range(0, len(rows), 7)]
+    consumed = 0
+
+    def counting():
+        nonlocal consumed
+        for b in batches:
+            consumed += 1
+            yield b
+
+    seen = []
+    for k, frame in enumerate(lww_stream(counting(), "url", "ts"), start=1):
+        if k <= len(batches):
+            assert consumed == k, (k, consumed)
+        seen += list(frame["url"])
+    assert consumed == len(batches)
+    assert seen == sorted({r[0] for r in rows})
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_spark_lww_matches_fold(spark, seed):
-    """lww_last run the way merge_batch runs it in Spark — an optional
-    map-side partial pass over arbitrary input splits, then a hash
-    exchange on the key and a partition-local final pass — keeps exactly
-    the fold's winners (sampled: Spark runs are slow)."""
+    """lww_stream run the way merge_batch runs it in Spark — a hash
+    exchange on the key, a sort within each partition, then the streamed
+    fold over Arrow batches of 16 rows, so url runs straddle batches —
+    keeps exactly the fold's winners (sampled: Spark runs are slow)."""
     import random
 
     from pyspark.sql import functions as F
 
-    from opengin_ingestion_spark.operators.merge import lww_last
+    from opengin_ingestion_spark.operators.merge import lww_stream
 
     rnd = random.Random(seed)
     events = [
@@ -203,27 +270,22 @@ def test_spark_lww_matches_fold(spark, seed):
         "url string, ts long, _seq long, op string, payload long, "
         "_from_target boolean",
     ).repartition(4)
-    schema = df.schema
 
     def lww(batches):
-        import pandas as pd
+        yield from lww_stream(batches, "url", "ts")
 
-        pdfs = [pdf for pdf in batches if not pdf.empty]
-        if pdfs:
-            yield lww_last(pd.concat(pdfs, ignore_index=True), "url", "ts")
-
-    expect = _lww_fold(events)
-    for pre in (False, True):
-        staged = df.mapInPandas(lww, schema=schema) if pre else df
-        out = staged.repartition(3, F.col("url")).mapInPandas(lww, schema=schema)
-        winners = out.collect()
-        assert len({r["url"] for r in winners}) == len(winners), pre
-        got = {
-            r["url"]: (r["ts"], r["_seq"], r["op"], r["payload"])
-            for r in winners
-            if r["op"] != "D"
-        }
-        assert got == expect, pre
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "16")
+    try:
+        out = (
+            df.repartition(3, F.col("url")).sortWithinPartitions("url")
+            .mapInPandas(lww, schema=df.schema).toPandas()
+        )
+    finally:
+        spark.conf.set(conf, old)
+    assert out["url"].is_unique
+    assert _live_winners(out) == _lww_fold(events)
 
 
 def test_lww_last_prefers_target_on_tie():

@@ -141,13 +141,16 @@ def test_expire_tombstones(spark, tiny_log, tmp_path):
 
 
 def test_merge_hot_url_batch(spark, tmp_path):
-    """Memory-invariant stress (merge.py module doc, step 3): a zipf-hot
+    """Streaming-merge stress (merge.py module doc, step 3): a zipf-hot
     log whose rank-1 url dominates each batch (s=2.5 → the top url carries
-    well over 20% of all events) concentrates that batch's entire slice in
-    ONE pandas partition of the bucket shuffle. The merge must stay
-    correct — partition-local LWW picks the exact oracle winner for the
-    hot url — and the concentration must be bounded by batch size, not
-    blow up the executor."""
+    well over 20% of all events) sends that batch's entire slice of it to
+    ONE partition of the bucket shuffle. With Arrow batches of 64 rows the
+    hot url's revisions span many batches, so the merge must carry its
+    winner across them — and still pick the exact oracle winner."""
+    import os
+
+    import pyarrow.parquet as pq
+
     from opengin_ingestion_spark.sources.changelog import (
         ChangeLogSpec,
         generate_changelog,
@@ -160,55 +163,26 @@ def test_merge_hot_url_batch(spark, tmp_path):
     )
     generate_changelog(d, spec)
     log = read_log_pandas(d)
-    hot_frac = log["url"].value_counts(normalize=True).iloc[0]
-    assert hot_frac >= 0.20, f"fixture not hot enough ({hot_frac:.2f})"
+    counts = log["url"].value_counts()
+    assert counts.iloc[0] / len(log) >= 0.20, "fixture not hot enough"
+    batch_size = 64
+    per_batch = [
+        (pq.read_table(os.path.join(d, f)).column("url").to_pandas()
+         == counts.index[0]).sum()
+        for f in sorted(os.listdir(d)) if f.endswith(".parquet")
+    ]
+    assert len(per_batch) == spec.n_batches
+    assert min(per_batch) > batch_size, per_batch
 
-    table, results = replay_changelog(
-        spark, d, str(tmp_path / "pages"), n_buckets=8, group_files=1
-    )
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, str(batch_size))
+    try:
+        table, results = replay_changelog(
+            spark, d, str(tmp_path / "pages"), n_buckets=8, group_files=1
+        )
+        engine = table.read(include_internal=True).toPandas()
+    finally:
+        spark.conf.set(conf, old)
     assert not any(r.skipped for r in results)
-    engine = table.read(include_internal=True).toPandas()
     assert_states_equal(engine, oracle_final_state(d))
-
-
-def test_hot_key_prereduce_equivalence(spark, tmp_path):
-    """merge_batch(hot_key_prereduce=True) must produce EXACTLY the state
-    of the default path on a zipf-hot log (partial max per input split +
-    global LWW == global LWW), including tombstones and derived columns."""
-    from opengin_ingestion_spark.plans.replay import (
-        PAGES_SCHEMA,
-        TRANSFORM_FIELDS,
-        pages_pandas_transform,
-    )
-    from opengin_ingestion_spark.sources.changelog import (
-        ChangeLogSpec,
-        generate_changelog,
-    )
-    from opengin_ingestion_spark.sources.gintable import GinTable
-    from opengin_ingestion_spark.sources.reader import read_changelog
-
-    d = str(tmp_path / "hotlog")
-    generate_changelog(
-        d, ChangeLogSpec(n_events=8_000, n_urls=300, n_batches=2, seed=11,
-                         zipf_s=2.5)
-    )
-    df = read_changelog(spark, d)
-
-    def run(flag: bool, name: str):
-        t = GinTable.create(
-            spark, str(tmp_path / name), PAGES_SCHEMA, n_buckets=8,
-            heavy_columns=("html", "text"),
-        )
-        merge_batch(
-            t, df, batch_id=0,
-            pandas_transform=pages_pandas_transform,
-            transform_fields=TRANSFORM_FIELDS,
-            hot_key_prereduce=flag,
-        )
-        return t
-
-    a = run(False, "plain")
-    b = run(True, "prereduced")
-    rows_a = sorted(map(tuple, a.read(include_internal=True).collect()))
-    rows_b = sorted(map(tuple, b.read(include_internal=True).collect()))
-    assert rows_a == rows_b
