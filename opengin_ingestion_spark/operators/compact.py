@@ -40,19 +40,24 @@ def rewrite_buckets(
 ) -> dict:
     """The copy-on-write rewrite behind compact, fold, rebucket and
     tombstone expiry: read the rows of ``buckets`` (those matching
-    ``keep``), bucket them under ``n_buckets`` (default: the table's), one
-    task per bucket, write them with the table's one writer and commit
-    them in place of both families' files — dropping superseded heavy
-    rows. Deduplicated read state preserves heavy_seq_unique (but cannot
-    establish it: a legacy external writer may have duplicated a _seq)."""
+    ``keep``), bucket them under ``n_buckets`` (default: the table's),
+    write them with the table's one writer and commit them in place of
+    both families' files — dropping superseded heavy rows. Deduplicated
+    read state preserves heavy_seq_unique (but cannot establish it: a
+    legacy external writer may have duplicated a _seq).
+
+    The exchange is sized by bytes: hash-partitioned by bucket into
+    ``spark.sql.shuffle.partitions`` partitions that AQE coalesces whole,
+    so a task holds every row of each of its buckets, bucket-sorted (then
+    by ``sort_by``), and still writes one file per (bucket, family)."""
     rows = table.read(snap, buckets=buckets, include_internal=True)
     if keep is not None:
         rows = rows.filter(keep)
-    rows = rows.withColumn(
-        BUCKET_COL, table.bucket_expr(snap=snap, n_buckets=n_buckets)
-    ).repartition(n_buckets or len(buckets), F.col(BUCKET_COL))
-    if sort_by:
-        rows = rows.sortWithinPartitions(BUCKET_COL, *sort_by)
+    rows = (
+        rows.withColumn(BUCKET_COL, table.bucket_expr(snap=snap, n_buckets=n_buckets))
+        .repartition(F.col(BUCKET_COL))
+        .sortWithinPartitions(BUCKET_COL, *(sort_by or []))
+    )
     new_files = table.write_data_files(rows, snap, folded)
     return table.commit(
         new_files, replaced_buckets=buckets, batch_ids=[],
@@ -169,8 +174,8 @@ def compact(
     fold is ``fold_heavy_compact``.
 
     ``sort_by`` clusters each rewritten bucket's rows by the given
-    columns (``sortWithinPartitions`` — no extra shuffle, the bucket
-    repartition is already there) so parquet row-group min/max statistics
+    columns (the rewrite's bucket sort extends to them — no extra
+    shuffle) so parquet row-group min/max statistics
     become range-prunable: a time-range scan over a table compacted with
     ``sort_by=[ts_col]`` skips whole row groups instead of decoding them.
     The ingest path deliberately does NOT sort (merge writes stay cheap);

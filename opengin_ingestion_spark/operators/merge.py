@@ -9,23 +9,29 @@ Physical strategy (the scale story — each step sized for 10^10 events):
 
 1. **Touched buckets** from a key-only scan of the raw batch (Catalyst
    prunes every other column off the Parquet read).
-2. **ONE payload shuffle**: target bucket contents ∪ raw batch rows are
-   hash-repartitioned by url bucket — the same partitioning the bucketed
-   write needs anyway, so it is the merge's only exchange. LWW,
-   tombstoning and the vectorized transform all run partition-locally in
-   one ``mapInPandas`` pass with zero further exchanges, no broadcast
-   build, no driver involvement. The transform runs after the
-   partition-local LWW, on final winners only.
+2. **ONE payload shuffle, sized by bytes**: target bucket contents ∪ raw
+   batch rows are hash-repartitioned by url bucket — the same
+   partitioning the bucketed write needs anyway, so it is the merge's
+   only exchange. It has no partition count: it starts at
+   ``spark.sql.shuffle.partitions`` and AQE coalesces whole partitions by
+   bytes, so a 200-event serve merge runs in one task, not one per
+   touched bucket, and a bucket never spans two tasks. LWW, tombstoning
+   and the vectorized transform all run partition-locally in one
+   ``mapInPandas`` pass with zero further exchanges, no broadcast build,
+   no driver involvement. The transform runs after the partition-local
+   LWW, on final winners only.
 3. **Streaming bucket merge** (the memory bound, by construction): after
-   the exchange a JVM ``sortWithinPartitions(key)`` (codegen'd, spills)
-   makes each url's rows contiguous, and ``lww_stream`` folds the
-   partition's Arrow batches one at a time through ``lww_last``, carrying
-   only the winner of the batch's last url into the next batch. Winners
-   go to the writer frame by frame, one row group each, so a task holds
-   one Arrow batch (``spark.sql.execution.arrow.maxRecordsPerBatch``
-   rows) plus one row — whatever the bucket's size and however many
-   revisions a hot url has in the batch
-   (tests/test_replay.py::test_merge_hot_url_batch).
+   the exchange a JVM ``sortWithinPartitions(_bucket, key)`` (codegen'd,
+   spills) groups the partition by bucket and makes each url's rows
+   contiguous, and ``lww_stream`` folds the partition's Arrow batches one
+   at a time through ``lww_last``, carrying only the winner of the
+   batch's last url into the next batch. Winners go to the writer frame
+   by frame, one row group each, and the writer closes a bucket's files
+   once the stream has moved past it. So a task holds one Arrow batch
+   (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows) plus one row,
+   and one bucket's open writers — whatever the bucket's size, however
+   many buckets the task holds and however many revisions a hot url has
+   in the batch (tests/test_replay.py::test_merge_hot_url_batch).
 4. **Bucket pruning**: only the touched buckets' data files are read
    (manifest-level pruning — untouched files are never even listed) and
    rewritten. This does not make a merge cheap at scale: a batch touching
@@ -296,13 +302,17 @@ def _merge_once(
     # One payload shuffle total (it is required for the bucketed write
     # anyway); LWW, tombstoning and the vectorized transform then all run
     # partition-locally with zero further exchanges, no broadcast build, no
-    # driver involvement. The sort (no exchange, no job) makes each url's
-    # rows contiguous, so the merge streams the partition (lww_stream).
+    # driver involvement. The exchange is sized by bytes, not by bucket
+    # count: shuffle.partitions hash partitions, coalesced whole by AQE, so
+    # a bucket never spans tasks. The sort (no exchange, no job) groups the
+    # partition by bucket and makes each url's rows contiguous, so the
+    # merge streams it (lww_stream) and the writer closes each bucket's
+    # files as the stream moves past it.
     combined = target.select(*updates.columns).unionByName(updates)
     combined = combined.withColumn(BUCKET_COL, table.bucket_expr(key, snap))
-    bucketed = combined.repartition(
-        len(touched), F.col(BUCKET_COL)
-    ).sortWithinPartitions(key)
+    bucketed = combined.repartition(F.col(BUCKET_COL)).sortWithinPartitions(
+        BUCKET_COL, key
+    )
 
     payload_cols = [
         f.name

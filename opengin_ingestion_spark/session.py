@@ -26,7 +26,10 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env) or
     ``local[*]``. ``shuffle_partitions`` defaults to the core count —
     at cluster scale you would size this to ~2-3x total cores and rely on
-    AQE coalescing; locally cores is right.
+    AQE coalescing; locally cores is right. It also caps the tasks of
+    every bucket rewrite (merge, compact, fold, rebucket, expire): their
+    exchange starts at this many partitions and AQE coalesces them by
+    bytes, so a small merge runs in one task.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -43,6 +46,11 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # GinTable reads pass the manifest's file paths; past 32 paths Spark
+        # would launch a listing job (one task per file) to stat files the
+        # manifest already names. The commit protocol (os.link, fsync)
+        # already requires a POSIX store, where driver stats are cheap.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         # naive parquet timestamps are UTC wall-clock by engine convention
         # (matches /root/testdata); infer them as TimestampType, not NTZ,
         # so raw spark.read.parquet over a change log agrees with the

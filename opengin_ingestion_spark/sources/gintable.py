@@ -272,20 +272,33 @@ class DataFileWriter:
         )
 
     def write(self, batches) -> list[dict]:
-        """Write Arrow batches or tables. One ParquetWriter stays open per
-        (bucket, family) and each batch becomes one row group, so a task
-        never holds a whole bucket."""
+        """Write Arrow batches or tables, grouped by bucket (the exchange
+        sorts each task's rows by BUCKET_COL). Each batch becomes one row
+        group per (bucket, family). A bucket's ParquetWriters close once
+        the stream has moved past it (a batch reached a higher bucket), so
+        across batches at most one bucket's writers are open however many
+        buckets the task holds; a closed bucket that reappears raises
+        rather than overwrite its file."""
         from pyspark import TaskContext
 
         ctx = TaskContext.get()
         name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
-        files = {}  # (bucket, family) -> (ParquetWriter, file row)
+        open_ = {}  # (bucket, family) -> ParquetWriter
+        rows_out = {}  # (bucket, family) -> file row
+        closed: set[int] = set()
+        top = None  # highest bucket seen: the one whose writers stay open
         try:
             for batch in batches:
                 data = pa.table(batch)
                 buckets = data[BUCKET_COL]
                 data = data.select(self.schema.fieldNames()).cast(self.arrow_schema)
                 ids = pc.unique(buckets).to_pylist()
+                if closed.intersection(ids):
+                    raise ValueError(
+                        f"buckets {sorted(closed.intersection(ids))} reappeared after "
+                        "their files were closed: the writer's input must be "
+                        f"grouped by {BUCKET_COL}"
+                    )
                 for b in ids:
                     part = data if len(ids) == 1 else data.filter(pc.equal(buckets, b))
                     for fam, cols in self.families.items():
@@ -296,30 +309,35 @@ class DataFileWriter:
                             ))
                         if not rows.num_rows:
                             continue
-                        if (b, fam) not in files:
+                        if (b, fam) not in open_:
                             path = f"{self.dirs[fam]}/{BUCKET_COL}={b}/{name}"
                             full = os.path.join(self.root, path)
                             os.makedirs(os.path.dirname(full), exist_ok=True)
-                            files[b, fam] = (
-                                pq.ParquetWriter(
-                                    full, rows.schema, compression="snappy",
-                                    store_schema=False,  # Spark stores none
-                                    write_statistics=[c for c in cols if c not in self.payloads],
-                                ),
-                                {"path": path, "bucket": b, "family": fam,
-                                 "folded": self.folded, "rows": 0, "ts": []},
+                            open_[b, fam] = pq.ParquetWriter(
+                                full, rows.schema, compression="snappy",
+                                store_schema=False,  # Spark stores none
+                                write_statistics=[c for c in cols if c not in self.payloads],
                             )
-                        writer, row = files[b, fam]
-                        writer.write_table(rows)
+                            rows_out[b, fam] = {
+                                "path": path, "bucket": b, "family": fam,
+                                "folded": self.folded, "rows": 0, "ts": [],
+                            }
+                        open_[b, fam].write_table(rows)
+                        row = rows_out[b, fam]
                         row["rows"] += rows.num_rows
                         if fam == "base" and self.ts_col:
                             mm = pc.min_max(rows[self.ts_col]).as_py()
                             row["ts"] += [v for v in mm.values() if v is not None]
+                if ids:
+                    top = max(ids if top is None else [top, *ids])
+                    for k in [k for k in open_ if k[0] != top]:
+                        open_.pop(k).close()
+                        closed.add(k[0])
         finally:
-            for writer, _ in files.values():
+            for writer in open_.values():
                 writer.close()
         out = []
-        for _, row in files.values():
+        for row in rows_out.values():
             ts = row.pop("ts")
             out.append({
                 **row, "bytes": os.path.getsize(os.path.join(self.root, row["path"])),
@@ -700,8 +718,9 @@ class GinTable:
     def write_data_files(
         self, df: DataFrame, snap: dict, folded: bool = False
     ) -> list[DataFile]:
-        """Write ``df`` (carrying BUCKET_COL, hash-partitioned by it so each
-        bucket is one task's file per family) as Parquet files of both
+        """Write ``df`` (carrying BUCKET_COL, hash-partitioned by it and
+        sorted by it within partitions, so a bucket is one task's file per
+        family and a task may hold many buckets) as Parquet files of both
         column families (``folded=True``: heavy columns inline) in one
         Spark job of ``DataFileWriter`` tasks; return their manifest
         entries for the commit on top of ``snap``. A crash before the

@@ -159,6 +159,107 @@ def test_gc_orphans(spark, tmp_path):
     assert t.read().count() == 8
 
 
+def test_writer_closes_buckets_behind_a_grouped_stream(spark, tmp_path, monkeypatch):
+    """DataFileWriter.write fed bucket-grouped batches that span several
+    buckets (as one task of a bucket-sorted exchange sees them) writes one
+    file per (bucket, family), keeps at most one bucket's writers open
+    between batches, and raises when a closed bucket reappears instead of
+    reopening (and truncating) its file."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    import pyspark
+
+    from opengin_ingestion_spark.sources import gintable
+
+    t = GinTable.create(
+        spark, str(tmp_path / "t"), SCHEMA, n_buckets=8, heavy_columns=["v"]
+    )
+    df = _rows_df(spark, t, n=40).withColumn(
+        "v", F.when(F.col("v") % 3 == 0, F.col("v"))  # some rows carry no payload
+    ).withColumn("_deleted", F.lit(False))
+    data = df.sort(BUCKET_COL, "url").toArrow()
+    buckets = sorted(set(data[BUCKET_COL].to_pylist()))
+    assert len(buckets) >= 4
+
+    class Ctx:
+        def partitionId(self):
+            return 0
+
+        def taskAttemptId(self):
+            return 7
+
+    live: set[str] = set()
+
+    class Tracking(pq.ParquetWriter):
+        def __init__(self, where, *args, **kwargs):
+            super().__init__(where, *args, **kwargs)
+            self.where = where
+            live.add(where)
+
+        def close(self):
+            live.discard(self.where)
+            super().close()
+
+    monkeypatch.setattr(pyspark.TaskContext, "get", staticmethod(lambda: Ctx()))
+    monkeypatch.setattr(gintable.pq, "ParquetWriter", Tracking)
+
+    def open_buckets():
+        return {int(p.split(f"{BUCKET_COL}=")[1].split("/")[0]) for p in live}
+
+    seen = []
+
+    def batches(tbl, size):
+        for i in range(0, tbl.num_rows, size):
+            yield tbl.slice(i, size)  # 3-row slices straddle buckets
+            seen.append(open_buckets())
+
+    write = DataFileWriter(t, t.current_snapshot(), df.schema)
+    rows = write.write(batches(data, 3))
+    assert seen and all(len(b) <= 1 for b in seen), seen
+    assert not live
+    keys = [(r["bucket"], r["family"]) for r in rows]
+    assert len(keys) == len(set(keys))
+    assert {b for b, fam in keys if fam == "base"} == set(buckets)
+    assert sum(r["rows"] for r in rows if r["family"] == "base") == 40
+    assert sum(r["rows"] for r in rows if r["family"] == "heavy") == 14
+    for r in rows:
+        assert pq.read_metadata(os.path.join(t.path, r["path"])).num_rows == r["rows"]
+
+    def only(b):
+        return data.filter(pc.equal(data[BUCKET_COL], b))
+
+    b0, b1 = buckets[:2]
+    with pytest.raises(ValueError, match="reappeared"):
+        DataFileWriter(t, t.current_snapshot(), df.schema).write(
+            [only(b0), only(b1), only(b0)]
+        )
+    assert not live
+
+
+def test_manifest_reads_start_no_listing_job(spark, tmp_path):
+    """A read names its files from the manifest, so building it stats them
+    on the driver: past 32 files Spark's default would launch a parallel
+    listing job (one task per file) on every read and table_changes."""
+    from opengin_ingestion_spark.sources.gintable import table_changes
+
+    t = GinTable.create(spark, str(tmp_path / "t"), SCHEMA, n_buckets=8)
+    for i in range(6):
+        df = _rows_df(spark, t, n=40).withColumn("_seq", F.col("_seq") + 100 * i)
+        t.commit(t.write_data_files(df, t.current_snapshot()), set(), [i])
+    assert len(t.current_snapshot()["files"]) > 32
+
+    sc = spark.sparkContext
+    sc.setJobGroup("manifest-read", "build reads over > 32 files")
+    try:
+        t.read()
+        table_changes(t, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("manifest-read") == []
+    assert t.read().count() == 240
+
+
 def test_concurrent_merges_retry_and_both_commit(spark, tmp_path):
     """Two writers merging different batches race on the same parent
     version: one hits CommitConflict internally, retries on the new
@@ -419,10 +520,20 @@ def test_merge_job_budget(spark, tmp_path):
     shape) runs at most 4 Spark jobs: the input-stats action and the
     write, each a shuffle-map job plus a result job with AQE on. The
     write's tasks run LWW, extraction and the Parquet write themselves;
-    the checkpointed two-pass Spark write it replaced ran 7 jobs."""
+    the checkpointed two-pass Spark write it replaced ran 7 jobs.
+
+    The write's exchange is sized by bytes, not by bucket count: its
+    tasks number at most spark.sql.shuffle.partitions (8 here) although
+    the table has 16 buckets, so tasks hold several buckets. The merge,
+    and a compact(sort_by=[ts]) after it, still equal the oracle and
+    leave one base file per bucket, each ts-sorted."""
     import glob
     import shutil
 
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from opengin_ingestion_spark.operators.compact import compact
     from opengin_ingestion_spark.operators.merge import merge_batch
     from opengin_ingestion_spark.plans.replay import (
         TRANSFORM_FIELDS,
@@ -433,6 +544,11 @@ def test_merge_job_budget(spark, tmp_path):
         ChangeLogSpec,
         generate_changelog,
     )
+    from tests.oracle import (
+        assert_states_equal,
+        oracle_final_state_from_events,
+        read_log_pandas,
+    )
 
     log = tmp_path / "log"
     generate_changelog(
@@ -441,6 +557,10 @@ def test_merge_job_budget(spark, tmp_path):
     last = sorted(glob.glob(str(log / "*.parquet")))[-1]
     delta = str(tmp_path / "delta.parquet")
     shutil.move(last, delta)
+    events = pd.concat(
+        [read_log_pandas(str(log)), pq.read_table(delta).to_pandas()],
+        ignore_index=True,
+    )
     table, _ = replay_changelog(spark, str(log), str(tmp_path / "pages"), n_buckets=16)
     batch = spark.read.parquet(delta)  # schema inference is a job of its own
     assert batch.count() == 200
@@ -456,9 +576,34 @@ def test_merge_job_budget(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("merge-job-budget")
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup("merge-job-budget")
     assert res.metrics["buckets_rewritten"] == 16
     assert 0 < len(jobs) <= 4, f"merge ran {len(jobs)} Spark jobs"
+    # the write is the last job; its result stage is its newest stage
+    write_stage = max(tracker.getJobInfo(max(jobs)).stageIds)
+    write_tasks = tracker.getStageInfo(write_stage).numTasks
+    partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert partitions < 16
+    assert write_tasks <= partitions, f"merge write ran {write_tasks} tasks"
+
+    def check(snap):
+        assert_states_equal(
+            table.read(snap, include_internal=True).toPandas(),
+            oracle_final_state_from_events(events),
+        )
+        base = [f for f in snap["files"] if f["family"] == "base"]
+        assert sorted(f["bucket"] for f in base) == list(range(16))
+        return base
+
+    check(table.current_snapshot())
+    snap = compact(table, max_files_per_bucket=0, sort_by=["warc_ts"])
+    assert snap["metrics"]["buckets_compacted"] == 16
+    heavy = [f["bucket"] for f in snap["files"] if f["family"] == "heavy"]
+    assert len(heavy) == len(set(heavy))
+    for f in check(snap):
+        ts = pq.read_table(os.path.join(table.path, f["path"])).column("warc_ts")
+        assert ts.to_pylist() == sorted(ts.to_pylist()), f["path"]
 
 
 def _footer_ts(path: str, col: str = "warc_ts"):
