@@ -8,7 +8,8 @@ regex operations over Arrow record batches — no per-row Python, no network.
 
 The SAME series functions are used by:
   * the merge's bucket-local transform (``plans.replay.pages_pandas_transform``,
-    run by ``merge_batch`` inside ``mapInPandas`` on final winners only), and
+    run by ``merge_batch`` in its ``mapInArrow`` write tasks on final
+    winners only), and
   * the single-threaded pandas oracle in tests (`tests/oracle.py`),
 so extracted text is byte-identical between engine and oracle by
 construction (BASELINE.json input_hint: "byte-identical extracted text per

@@ -15,9 +15,8 @@ outputs each run (exporter.py:28-103); here rewrite is surgical.
 from __future__ import annotations
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-from opengin_ingestion_spark.sources.gintable import BUCKET_COL, GinTable
+from opengin_ingestion_spark.sources.gintable import GinTable
 
 
 def fragmented_buckets(table: GinTable, max_files_per_bucket: int = 4) -> set[int]:
@@ -40,25 +39,17 @@ def rewrite_buckets(
 ) -> dict:
     """The copy-on-write rewrite behind compact, fold, rebucket and
     tombstone expiry: read the rows of ``buckets`` (those matching
-    ``keep``), bucket them under ``n_buckets`` (default: the table's),
-    write them with the table's one writer and commit them in place of
-    both families' files — dropping superseded heavy rows. Deduplicated
-    read state preserves heavy_seq_unique (but cannot establish it: a
-    legacy external writer may have duplicated a _seq).
-
-    The exchange is sized by bytes: hash-partitioned by bucket into
-    ``spark.sql.shuffle.partitions`` partitions that AQE coalesces whole,
-    so a task holds every row of each of its buckets, bucket-sorted (then
-    by ``sort_by``), and still writes one file per (bucket, family)."""
+    ``keep``), write them with the table's one writer under ``n_buckets``
+    (default: the table's), each bucket sorted by ``sort_by``, and commit
+    them in place of both families' files — dropping superseded heavy
+    rows. Deduplicated read state preserves heavy_seq_unique (but cannot
+    establish it: a legacy external writer may have duplicated a _seq)."""
     rows = table.read(snap, buckets=buckets, include_internal=True)
     if keep is not None:
         rows = rows.filter(keep)
-    rows = (
-        rows.withColumn(BUCKET_COL, table.bucket_expr(snap=snap, n_buckets=n_buckets))
-        .repartition(F.col(BUCKET_COL))
-        .sortWithinPartitions(BUCKET_COL, *(sort_by or []))
+    new_files = table.write_data_files(
+        rows, snap, folded, n_buckets=n_buckets, sort_by=sort_by
     )
-    new_files = table.write_data_files(rows, snap, folded)
     return table.commit(
         new_files, replaced_buckets=buckets, batch_ids=[],
         metrics={**metrics, "files_written": len(new_files)},

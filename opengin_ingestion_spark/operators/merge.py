@@ -10,24 +10,25 @@ Physical strategy (the scale story — each step sized for 10^10 events):
 1. **Touched buckets** from a key-only scan of the raw batch (Catalyst
    prunes every other column off the Parquet read).
 2. **ONE payload shuffle, sized by bytes**: target bucket contents ∪ raw
-   batch rows are hash-repartitioned by url bucket — the same
-   partitioning the bucketed write needs anyway, so it is the merge's
-   only exchange. It has no partition count: it starts at
-   ``spark.sql.shuffle.partitions`` and AQE coalesces whole partitions by
-   bytes, so a 200-event serve merge runs in one task, not one per
+   batch rows go through ``GinTable.write_data_files``, whose exchange
+   hash-partitions them by url bucket — the merge's only exchange. It
+   has no partition count: it starts at ``spark.sql.shuffle.partitions``
+   and AQE coalesces whole partitions by bytes, so a 200-event serve
+   merge runs in one task, not one per
    touched bucket, and a bucket never spans two tasks. LWW, tombstoning
-   and the vectorized transform all run partition-locally in one
-   ``mapInPandas`` pass with zero further exchanges, no broadcast build,
-   no driver involvement. The transform runs after the partition-local
-   LWW, on final winners only.
+   and the vectorized transform run partition-locally as the write's
+   per-task Arrow step (``lww_step``, inside ``mapInArrow``): zero further
+   exchanges, no broadcast build, no driver involvement. The transform
+   runs on final winners only.
 3. **Streaming bucket merge** (the memory bound, by construction): after
    the exchange a JVM ``sortWithinPartitions(_bucket, key)`` (codegen'd,
    spills) groups the partition by bucket and makes each url's rows
-   contiguous, and ``lww_stream`` folds the partition's Arrow batches one
-   at a time through ``lww_last``, carrying only the winner of the
-   batch's last url into the next batch. Winners go to the writer frame
-   by frame, one row group each, and the writer closes a bucket's files
-   once the stream has moved past it. So a task holds one Arrow batch
+   contiguous, and ``lww_step`` folds the partition's Arrow batches one
+   at a time through ``lww_stream`` (as pandas frames with nullable
+   integers), carrying only the winner of the batch's last url into the
+   next batch. Winners go to the writer frame by frame, one row group
+   each, and the writer closes a bucket's files once the stream has
+   moved past it. So a task holds one Arrow batch
    (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows) plus one row,
    and one bucket's open writers — whatever the bucket's size, however
    many buckets the task holds and however many revisions a hot url has
@@ -44,12 +45,12 @@ Physical strategy (the scale story — each step sized for 10^10 events):
    in a later batch can NOT resurrect a deleted url; tombstones are
    expired by watermark (expire_tombstones).
 6. The task that computed a bucket's winners writes them with pyarrow
-   (``DataFileWriter``, the body of ``GinTable.write_data_files``) and
-   returns one row per file — the payload never goes back to the JVM.
-   Then ONE atomic manifest commit records the batch id → duplicate
-   delivery of the same batch id is a no-op (exactly-once under
-   foreachBatch retry: the check happens *inside* the merge, the commit
-   is atomic).
+   (``DataFileWriter``, the body of ``GinTable.write_data_files``),
+   fsyncs them and returns one row per file — the payload never goes
+   back to the JVM. Then ONE atomic manifest commit records the batch id
+   → duplicate delivery of the same batch id is a no-op (exactly-once
+   under foreachBatch retry: the check happens *inside* the merge, the
+   commit is atomic).
 
 Spark actions per merge: a per-bucket input-stats aggregation (key/ts/len
 columns only — it yields touched buckets, events/bytes/lag metrics AND
@@ -69,6 +70,8 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -78,17 +81,19 @@ from opengin_ingestion_spark.operators.evolution import align_to_schema, evolve_
 from opengin_ingestion_spark.sources.gintable import (
     BUCKET_COL,
     DELETED_COL,
-    FILE_ROWS,
     SEQ_COL,
     CommitConflict,
-    DataFile,
-    DataFileWriter,
     GinTable,
 )
 
 OP_COL = "op"
 BATCH_SEQ_COL = "seq"  # a raw batch's sequence column (stored as _seq)
 FROM_TARGET_COL = "_from_target"  # transient LWW tie-break marker
+# Arrow ints → pandas nullable ints (float64 would round longs above 2**53)
+_NULLABLE_INTS = {
+    pa.int8(): pd.Int8Dtype(), pa.int16(): pd.Int16Dtype(),
+    pa.int32(): pd.Int32Dtype(), pa.int64(): pd.Int64Dtype(),
+}.get
 
 
 @dataclass
@@ -121,8 +126,6 @@ def lww_stream(batches, key: str, ts: str):
     frame's last url is held back and prepended to the next frame, since
     that url's run may continue there; it is yielded at the end. Holds
     one input frame plus that one carried row."""
-    import pandas as pd
-
     carry = None
     for pdf in batches:
         if pdf.empty:
@@ -136,6 +139,29 @@ def lww_stream(batches, key: str, ts: str):
             yield won[~held]
     if carry is not None:
         yield carry
+
+
+def lww_step(key: str, ts: str, payload_cols: list[str],
+             pandas_transform: Callable | None = None) -> Callable:
+    """The merge's per-task Arrow step (``write_data_files(step=...)``):
+    Arrow batches sorted by ``key`` in, final winner tables out.
+    ``lww_stream`` over the batches as pandas frames, then tombstones
+    (``op == "D"``) get ``_deleted`` set and ``payload_cols`` nulled, then
+    ``pandas_transform`` runs on the winners."""
+
+    def step(batches):
+        frames = (b.to_pandas(types_mapper=_NULLABLE_INTS) for b in batches)
+        for pdf in lww_stream(frames, key, ts):
+            deleted = pdf[OP_COL].to_numpy() == "D"
+            pdf = pdf.assign(**{DELETED_COL: deleted})
+            if deleted.any():  # object dtype: a numpy bool cannot hold None
+                pdf = pdf.astype(dict.fromkeys(payload_cols, object))
+                pdf.loc[deleted, payload_cols] = None
+            if pandas_transform is not None:
+                pdf = pandas_transform(pdf)
+            yield pa.Table.from_pandas(pdf, preserve_index=False)
+
+    return step
 
 
 def merge_batch(
@@ -207,8 +233,6 @@ def _merge_once(
     batch_user = T.StructType(_fields)
     evolved_user = evolve_schema(table.schema(snap), batch_user)
     stored_schema = GinTable._with_internal(evolved_user)
-    schema_changed = stored_schema != table.schema(snap, include_internal=True)
-    schema_version = snap["schema_version"] + (1 if schema_changed else 0)
 
     # --- action 1: per-bucket input stats (ONE key-pruned aggregation gives
     # touched buckets + events/bytes/lag metrics + per-input-bucket lineage;
@@ -298,62 +322,27 @@ def _merge_once(
     target = target.withColumn(FROM_TARGET_COL, F.lit(True))
     updates = updates.withColumn(FROM_TARGET_COL, F.lit(False))
 
-    # --- THE shuffle: everything co-located by url-hash bucket ---------------
-    # One payload shuffle total (it is required for the bucketed write
-    # anyway); LWW, tombstoning and the vectorized transform then all run
-    # partition-locally with zero further exchanges, no broadcast build, no
-    # driver involvement. The exchange is sized by bytes, not by bucket
-    # count: shuffle.partitions hash partitions, coalesced whole by AQE, so
-    # a bucket never spans tasks. The sort (no exchange, no job) groups the
-    # partition by bucket and makes each url's rows contiguous, so the
-    # merge streams it (lww_stream) and the writer closes each bucket's
-    # files as the stream moves past it.
+    # --- action 2: THE shuffle, LWW, transform and the copy-on-write
+    # write, in one write_data_files action. Everything is co-located by
+    # url-hash bucket (one payload shuffle total, the one the bucketed
+    # write needs anyway; sized by bytes, so a bucket never spans tasks)
+    # and sorted by (bucket, url), so lww_step streams each task's Arrow
+    # batches and the writer closes each bucket's files as the stream
+    # moves past it. On a split table the bucket gets a base file (all
+    # winners, light cols) and a heavy file (batch winners' payloads only:
+    # target winners read back with null heavy, so the payload filter
+    # selects exactly the new payloads)
     combined = target.select(*updates.columns).unionByName(updates)
-    combined = combined.withColumn(BUCKET_COL, table.bucket_expr(key, snap))
-    bucketed = combined.repartition(F.col(BUCKET_COL)).sortWithinPartitions(
-        BUCKET_COL, key
-    )
-
     payload_cols = [
         f.name
         for f in stored_schema.fields
         if f.name not in (key, ts) and not f.name.startswith("_")
     ]
-    # the table's one data-file writer, run in-process on each task's winners
-    write = DataFileWriter(table, snap, stored_schema)
-
-    def winners(batches):
-        for pdf in lww_stream(batches, key, ts):
-            deleted = pdf[OP_COL].to_numpy() == "D"
-            pdf = pdf.copy()
-            pdf[DELETED_COL] = deleted
-            if deleted.any():
-                for c in payload_cols:
-                    # object dtype first: numeric pandas columns would upcast
-                    # None→NaN→float64 and break the Arrow cast back to long
-                    pdf[c] = pdf[c].astype(object)
-                    pdf.loc[deleted, c] = None
-            if pandas_transform is not None:
-                pdf = pandas_transform(pdf)
-            yield write.to_arrow(pdf)
-
-    def merge_partition(batches):
-        import pandas as pd  # executor-side
-
-        rows = write.write(winners(batches))
-        if rows:
-            yield pd.DataFrame(rows)
-
-    # --- action 2: LWW, transform and the copy-on-write write, streamed
-    # in the task that holds the bucket. On a split table the bucket gets
-    # a base file (all winners, light cols) and a heavy file (batch
-    # winners' payloads only: target winners read back with null heavy,
-    # so the payload filter selects exactly the new payloads) ------------
     t_w = time.time()
-    new_files = [
-        DataFile(schema_version=schema_version, **r.asDict())
-        for r in bucketed.mapInPandas(merge_partition, FILE_ROWS).collect()
-    ]
+    new_files = table.write_data_files(
+        combined, snap, sort_by=[key], schema=stored_schema,
+        step=lww_step(key, ts, payload_cols, pandas_transform),
+    )
     write_s = round(time.time() - t_w, 3)
 
     lineage = [

@@ -4,8 +4,8 @@ The end-to-end slice of SURVEY.md §7 Phase 2. One logical plan per batch:
 
     read(log) → MERGE: bucket shuffle → partition-local LWW
                        → extract_text / detect_lang on final winners only
-                         (``pages_pandas_transform`` inside the merge's
-                         ``mapInPandas``)
+                         (``pages_pandas_transform`` in the merge's
+                         ``mapInArrow`` write step)
                        → bucket-pruned copy-on-write, exactly-once commit
 
 Reference analog: scan (scanner.py:55-102) + aggregate (aggregator.py:24-104)

@@ -113,9 +113,7 @@ def test_rebucket_rejects_carried_files(spark, tmp_path):
     t = GinTable.create(spark, str(tmp_path / "t"), schema, n_buckets=4)
     df = spark.createDataFrame([("a",), ("b",)], schema).withColumn(
         "_seq", F.lit(1).cast("long")
-    ).withColumn("_deleted", F.lit(False)).withColumn(
-        "_bucket", t.bucket_expr("url")
-    )
+    ).withColumn("_deleted", F.lit(False))
     files = t.write_data_files(df, t.current_snapshot())
     t.commit(files, set(), [0])
     with pytest.raises(ValueError, match="n_buckets change"):

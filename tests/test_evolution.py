@@ -123,7 +123,11 @@ def test_midstream_evolution_full_pipeline(spark, evolving_log, tmp_path):
             pandas_transform=pages_pandas_transform,
             transform_fields=TRANSFORM_FIELDS,
         )
-        versions.append(table.current_snapshot()["schema_version"])
+        snap = table.current_snapshot()
+        versions.append(snap["schema_version"])
+        # commit() stamps the files it adds with the commit's version
+        added = [f for f in snap["files"] if f"commit-{snap['version']:08d}-" in f["path"]]
+        assert added and {f["schema_version"] for f in added} == {versions[-1]}
 
     # schema version bumped at batch 0 (adds text/lang/content_len over the
     # minimal PAGES_SCHEMA) and again at the widening boundary

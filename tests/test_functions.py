@@ -56,9 +56,10 @@ def test_detect_lang():
 
 def test_merge_runs_vectorized(spark, tiny_log, tmp_path):
     """The shipped transform path — merge_batch with the pages transform —
-    runs its Python as MapInPandas (Arrow batches), never BatchEvalPython
-    (per-row): 'no per-row Python' is a spec rule. Checked on the plans of
-    the SQL executions the merge actually ran."""
+    runs its Python as MapInArrow (Arrow batches: the LWW and transform
+    are the write's per-task Arrow step), never MapInPandas or
+    BatchEvalPython (per-row): 'no per-row Python' is a spec rule. Checked
+    on the plans of the SQL executions the merge actually ran."""
     from opengin_ingestion_spark.operators.merge import merge_batch
     from opengin_ingestion_spark.plans.replay import (
         PAGES_SCHEMA,
@@ -88,5 +89,5 @@ def test_merge_runs_vectorized(spark, tiny_log, tmp_path):
         e.physicalPlanDescription() for e in executions() if e.executionId() > seen
     ]
     assert plans, "the merge ran no SQL execution"
-    assert any("MapInPandas" in p for p in plans)
-    assert not any("BatchEvalPython" in p for p in plans)
+    assert any("MapInArrow" in p for p in plans)
+    assert not any("MapInPandas" in p or "BatchEvalPython" in p for p in plans)

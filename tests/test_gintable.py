@@ -29,14 +29,14 @@ SCHEMA = T.StructType(
 )
 
 
-def _rows_df(spark, table, n=20):
+def _rows_df(spark, n=20):
     df = spark.range(n).select(
         F.concat(F.lit("https://e.com/"), F.col("id")).alias("url"),
         F.timestamp_seconds(F.col("id") + 1_700_000_000).alias("warc_ts"),
         F.col("id").alias("v"),
         F.col("id").alias("_seq"),
     )
-    return df.withColumn(BUCKET_COL, table.bucket_expr("url"))
+    return df
 
 
 def test_ranges():
@@ -56,7 +56,7 @@ def test_create_commit_read(spark, tmp_path):
     assert t.current_version() == 0
     assert t.read().count() == 0
 
-    df = _rows_df(spark, t)
+    df = _rows_df(spark)
     files = t.write_data_files(df, t.current_snapshot())
     assert files and all(0 <= f.bucket < 8 for f in files)
     snap = t.commit(files, replaced_buckets=set(), batch_ids=[0])
@@ -69,7 +69,7 @@ def test_create_commit_read(spark, tmp_path):
 
 def test_bucket_pruned_read(spark, tmp_path):
     t = GinTable.create(spark, str(tmp_path / "t"), SCHEMA, n_buckets=8)
-    df = _rows_df(spark, t, n=40)
+    df = _rows_df(spark, n=40)
     files = t.write_data_files(df, t.current_snapshot())
     t.commit(files, set(), [0])
     some_bucket = files[0].bucket
@@ -104,12 +104,12 @@ def test_applied_batch_idempotence_bookkeeping(spark, tmp_path):
 
 def test_copy_on_write_replaces_buckets(spark, tmp_path):
     t = GinTable.create(spark, str(tmp_path / "t"), SCHEMA, n_buckets=4)
-    df = _rows_df(spark, t, n=16)
+    df = _rows_df(spark, n=16)
     files = t.write_data_files(df, t.current_snapshot())
     t.commit(files, set(), [0])
     b = files[0].bucket
     # rewrite bucket b with a single row
-    one = df.filter(F.col(BUCKET_COL) == b).limit(1)
+    one = df.filter(t.bucket_expr() == b).limit(1)
     nf = t.write_data_files(one, t.current_snapshot())
     snap = t.commit(nf, replaced_buckets={b}, batch_ids=[1])
     live_buckets = {f["bucket"] for f in snap["files"]}
@@ -123,7 +123,7 @@ def test_copy_on_write_replaces_buckets(spark, tmp_path):
 
 def test_gc_orphans(spark, tmp_path):
     t = GinTable.create(spark, str(tmp_path / "t"), SCHEMA, n_buckets=4)
-    df = _rows_df(spark, t, n=8)
+    df = _rows_df(spark, n=8)
     files = t.write_data_files(df, t.current_snapshot())
     t.commit(files, set(), [0])
     # a crashed commit: files written, never committed
@@ -140,7 +140,7 @@ def test_gc_orphans(spark, tmp_path):
     # a retried task attempt: the same writer runs twice into the same
     # commit directories, each run's files named by its own task attempt;
     # the driver collected (and commits) only the second run's file rows
-    part = df.repartition(2, BUCKET_COL)
+    part = df.withColumn(BUCKET_COL, t.bucket_expr()).repartition(2, BUCKET_COL)
     write = DataFileWriter(t, t.current_snapshot(), part.schema)
     lost = {r.path for r in part.mapInArrow(write, FILE_ROWS).collect()}
     kept = [
@@ -174,9 +174,9 @@ def test_writer_closes_buckets_behind_a_grouped_stream(spark, tmp_path, monkeypa
     t = GinTable.create(
         spark, str(tmp_path / "t"), SCHEMA, n_buckets=8, heavy_columns=["v"]
     )
-    df = _rows_df(spark, t, n=40).withColumn(
+    df = _rows_df(spark, n=40).withColumn(
         "v", F.when(F.col("v") % 3 == 0, F.col("v"))  # some rows carry no payload
-    ).withColumn("_deleted", F.lit(False))
+    ).withColumn("_deleted", F.lit(False)).withColumn(BUCKET_COL, t.bucket_expr())
     data = df.sort(BUCKET_COL, "url").toArrow()
     buckets = sorted(set(data[BUCKET_COL].to_pylist()))
     assert len(buckets) >= 4
@@ -244,7 +244,7 @@ def test_manifest_reads_start_no_listing_job(spark, tmp_path):
 
     t = GinTable.create(spark, str(tmp_path / "t"), SCHEMA, n_buckets=8)
     for i in range(6):
-        df = _rows_df(spark, t, n=40).withColumn("_seq", F.col("_seq") + 100 * i)
+        df = _rows_df(spark, n=40).withColumn("_seq", F.col("_seq") + 100 * i)
         t.commit(t.write_data_files(df, t.current_snapshot()), set(), [i])
     assert len(t.current_snapshot()["files"]) > 32
 
@@ -353,7 +353,6 @@ def test_read_ts_range_prunes_files_from_manifest(spark, tiny_log, tmp_path):
     from pyspark.sql import functions as F
 
     from opengin_ingestion_spark.plans.replay import replay_changelog
-    from opengin_ingestion_spark.sources.gintable import BUCKET_COL
 
     table, _ = replay_changelog(
         spark, tiny_log["dir"], str(tmp_path / "pages"), n_buckets=4
@@ -373,10 +372,8 @@ def test_read_ts_range_prunes_files_from_manifest(spark, tiny_log, tmp_path):
             cond = cond & (F.col("warc_ts") > F.lit(bounds[i]))
         if bounds[i + 1] is not None:
             cond = cond & (F.col("warc_ts") <= F.lit(bounds[i + 1]))
-        part = (
-            base.filter(cond)
-            .withColumn(BUCKET_COL, table.bucket_expr(snap=None))
-            .withColumn("_seq", F.col("_seq") + F.lit(10_000_000 * (i + 1)))
+        part = base.filter(cond).withColumn(
+            "_seq", F.col("_seq") + F.lit(10_000_000 * (i + 1))
         )
         files = table.write_data_files(part, table.current_snapshot())
         assert all(
@@ -513,6 +510,89 @@ def test_commit_pointers_fsync_before_replace(tmp_path, monkeypatch):
 
     for d in (manifests, ivf, mh, ckpt.parent):
         assert not [f for f in os.listdir(d) if ".tmp" in f]
+
+
+def test_data_files_fsync_before_rows_return(tmp_path, monkeypatch):
+    """Spark-free: DataFileWriter fsyncs every data file after closing it,
+    and the directories holding the new entries (bucket, commit and
+    data/), before it returns the file rows the commit will name — so a
+    power failure after the manifest commit cannot leave it naming a torn
+    or missing file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pyspark
+
+    from opengin_ingestion_spark.sources import gintable
+
+    t = GinTable.create(
+        None, str(tmp_path / "t"), SCHEMA, n_buckets=4, heavy_columns=["v"]
+    )
+    data = pa.table({
+        "url": [f"u{i}" for i in range(6)],
+        "warc_ts": pa.array([1_700_000_000_000_000 + i for i in range(6)],
+                            pa.timestamp("us", tz="UTC")),
+        "v": [1, None, 3, 4, None, 6],
+        "_seq": list(range(6)),
+        "_deleted": [False] * 6,
+        BUCKET_COL: pa.array([0, 0, 1, 1, 3, 3], pa.int32()),
+    })
+
+    class Ctx:
+        def partitionId(self):
+            return 0
+
+        def taskAttemptId(self):
+            return 3
+
+    events = _spy_commits(monkeypatch)
+
+    class Closing(pq.ParquetWriter):
+        def __init__(self, where, *args, **kwargs):
+            super().__init__(where, *args, **kwargs)
+            self.where = where
+
+        def close(self):
+            super().close()
+            events.append(("close", os.stat(self.where).st_ino))
+
+    monkeypatch.setattr(pyspark.TaskContext, "get", staticmethod(lambda: Ctx()))
+    monkeypatch.setattr(gintable.pq, "ParquetWriter", Closing)
+    rows = DataFileWriter(
+        t, t.current_snapshot(), t.schema(include_internal=True)
+    ).write([data.slice(0, 3), data.slice(3)])
+    assert {(r["bucket"], r["family"]) for r in rows} == {
+        (0, "base"), (1, "base"), (3, "base"), (0, "heavy"), (1, "heavy"), (3, "heavy")
+    }
+    for r in rows:
+        full = os.path.join(t.path, r["path"])
+        ino = os.stat(full).st_ino
+        assert ("fsync", ino) in events[events.index(("close", ino)):], r["path"]
+        for d in (os.path.dirname(full), os.path.dirname(os.path.dirname(full)),
+                  os.path.join(t.path, "data")):
+            assert ("fsync", os.stat(d).st_ino) in events, d
+
+
+def test_merge_keeps_longs_exact_beside_nulls(spark, tmp_path):
+    """A long above 2**53 in the same Arrow batch as a null of its column
+    survives the merge exactly: the LWW step converts integers to pandas
+    nullable dtypes, not to float64 (which rounds 2**53 + 1 to 2**53)."""
+    from opengin_ingestion_spark.operators.merge import merge_batch
+
+    schema = T.StructType([
+        T.StructField("url", T.StringType(), False),
+        T.StructField("warc_ts", T.TimestampType(), False),
+        T.StructField("content_len", T.LongType(), True),
+    ])
+    # one bucket: every row is in the one task's one Arrow batch
+    t = GinTable.create(spark, str(tmp_path / "t"), schema, n_buckets=1)
+    big = 2**53 + 1
+    batch = spark.createDataFrame(
+        [("I", 1, "https://a.com/big", big), ("I", 2, "https://a.com/null", None)],
+        "op string, seq long, url string, content_len long",
+    ).withColumn("warc_ts", F.timestamp_seconds(F.col("seq") + 1_700_000_000))
+    merge_batch(t, batch, batch_id=0)
+    got = {r["url"]: r["content_len"] for r in t.read().collect()}
+    assert got == {"https://a.com/big": big, "https://a.com/null": None}
 
 
 def test_merge_job_budget(spark, tmp_path):

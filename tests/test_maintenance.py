@@ -20,13 +20,9 @@ def fragmented_table(spark, tiny_log, tmp_path_factory):
     only from append-style commits, so construct those directly)."""
     from pyspark.sql import functions as F
 
-    from opengin_ingestion_spark.sources.gintable import BUCKET_COL
-
     path = str(tmp_path_factory.mktemp("frag") / "pages")
     table, _ = replay_changelog(spark, tiny_log["dir"], path, n_buckets=8)
-    base = table.read(include_internal=True).withColumn(
-        BUCKET_COL, table.bucket_expr("url")
-    )
+    base = table.read(include_internal=True)
     # 6 appends of disjoint tiny slices → multi-file buckets. Fresh _seq
     # values: an append must never duplicate an existing row's _seq — base
     # rows are unique per _seq by table invariant (heavy_seq_unique), and a

@@ -242,15 +242,17 @@ def test_lww_stream_never_reads_ahead():
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
 def test_spark_lww_matches_fold(spark, seed):
-    """lww_stream run the way merge_batch runs it in Spark — a hash
-    exchange on the key, a sort within each partition, then the streamed
-    fold over Arrow batches of 16 rows, so url runs straddle batches —
-    keeps exactly the fold's winners (sampled: Spark runs are slow)."""
+    """The merge's own Arrow step (lww_step) run the way write_data_files
+    runs it — a hash exchange on the key, a sort within each partition,
+    then mapInArrow over Arrow batches of 16 rows, so url runs straddle
+    batches — keeps exactly the fold's winners, with tombstones flagged
+    and their payload nulled (sampled: Spark runs are slow)."""
     import random
 
     from pyspark.sql import functions as F
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    from opengin_ingestion_spark.operators.merge import lww_stream
+    from opengin_ingestion_spark.operators.merge import lww_step
 
     rnd = random.Random(seed)
     events = [
@@ -270,9 +272,14 @@ def test_spark_lww_matches_fold(spark, seed):
         "url string, ts long, _seq long, op string, payload long, "
         "_from_target boolean",
     ).repartition(4)
+    out_schema = df.schema.add("_deleted", "boolean")
+    step = lww_step("url", "ts", ["payload"])
 
     def lww(batches):
-        yield from lww_stream(batches, "url", "ts")
+        for table in step(batches):
+            yield from table.select(out_schema.fieldNames()).cast(
+                to_arrow_schema(out_schema)
+            ).to_batches()
 
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(conf)
@@ -280,12 +287,14 @@ def test_spark_lww_matches_fold(spark, seed):
     try:
         out = (
             df.repartition(3, F.col("url")).sortWithinPartitions("url")
-            .mapInPandas(lww, schema=df.schema).toPandas()
+            .mapInArrow(lww, schema=out_schema).toPandas()
         )
     finally:
         spark.conf.set(conf, old)
     assert out["url"].is_unique
     assert _live_winners(out) == _lww_fold(events)
+    assert (out["_deleted"] == (out["op"] == "D")).all()
+    assert out.loc[out["_deleted"], "payload"].isna().all()
 
 
 def test_lww_last_prefers_target_on_tie():
