@@ -186,12 +186,11 @@ def bench_cdc_replay(spark, n_events: int, n_urls: int) -> dict[str, float]:
         folded_read = time.perf_counter() - t0
 
         # the fold's OTHER side of the trade: the next merge on a folded
-        # bucket must read the folded file include_heavy=True (it is the
-        # only payload copy) and re-append every surviving payload — vs
-        # the split layout's light-columns-only target read. Same delta
-        # merged onto a split replica (an earlier replay run's table) and
-        # onto the folded table gives the cadence guidance in
-        # docs/PLANS.md its numbers.
+        # bucket reads its light columns only and moves the folded file
+        # into the heavy family unchanged — the same work as the split
+        # layout's merge. Same delta merged onto a split replica (an
+        # earlier replay run's table) and onto the folded table gives the
+        # cadence guidance in docs/PLANS.md its numbers.
         from opengin_ingestion_spark.operators.merge import merge_batch
         from opengin_ingestion_spark.plans.replay import (
             TRANSFORM_FIELDS,

@@ -23,10 +23,6 @@ def token_count(text: str | Column = "text") -> Column:
     return F.size(F.split(F.col(text) if isinstance(text, str) else text, " "))
 
 
-def word_count(text: str | Column = "text") -> Column:
-    return token_count(text)
-
-
 def punct_count(text: str | Column = "text") -> Column:
     c = F.col(text) if isinstance(text, str) else text
     return F.regexp_count(c, F.lit(PUNCT_RE))

@@ -126,13 +126,14 @@ def fold_heavy_compact(table: GinTable, buckets: set[int] | None = None) -> dict
     ``idle_buckets`` for the cadence policy (fold buckets untouched for N
     commits, e.g. from the tail's inline maintenance hook):
     ``fold_heavy_compact(t, buckets=idle_buckets(t, 5))``. Mixed tables
-    read correctly (folded buckets scan join-free, split ones keep the
-    `_seq` join — gintable.read unions the two paths).
+    read correctly: gintable.read scans every base file in one scan and
+    joins the heavy files of the selection by ``_seq``.
 
     Work ∝ unfolded buckets (idempotent: a second call is a no-op commit
-    skip). A later MERGE touching a folded bucket transparently re-splits
-    it (merge.py reads folded targets with payloads), so fold and ingest
-    compose — fold is a maintenance op, not a freeze.
+    skip). A later MERGE touching a folded bucket reads its light columns
+    only and moves the folded file, unchanged, into the heavy family —
+    no payload is read or rewritten, so a merge after a fold costs what a
+    split-layout merge costs. Fold is a maintenance op, not a freeze.
 
     Reference analog: the exporter materializes final denormalized output
     once aggregation is done

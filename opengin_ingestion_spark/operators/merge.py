@@ -25,7 +25,7 @@ Physical strategy (the scale story — each step sized for 10^10 events):
    spills) groups the partition by bucket and makes each url's rows
    contiguous, and ``lww_step`` folds the partition's Arrow batches one
    at a time through ``lww_stream`` (as pandas frames with nullable
-   integers), carrying only the winner of the batch's last url into the
+   dtypes), carrying only the winner of the batch's last url into the
    next batch. Winners go to the writer frame by frame, one row group
    each, and the writer closes a bucket's files once the stream has
    moved past it. So a task holds one Arrow batch
@@ -38,6 +38,10 @@ Physical strategy (the scale story — each step sized for 10^10 events):
    rewritten. This does not make a merge cheap at scale: a batch touching
    1% of urls at B=4096 buckets hits nearly every bucket, so it rewrites
    nearly every bucket's base file (merge-on-read is a ROADMAP item).
+   The target is read once, light columns only, whatever the layout: a
+   touched bucket's folded base file (``fold_heavy_compact``) already
+   holds ``_seq`` and the payloads, so the commit moves it unchanged into
+   the heavy family — no payload is read, shuffled or rewritten.
 5. Union (aligned via the schema-evolution lattice) of current bucket
    contents + batch rows → the streamed LWW of step 3 → transformed
    winners = final bucket contents. Deletes become tombstones (payload
@@ -67,7 +71,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 import pandas as pd
@@ -83,16 +87,20 @@ from opengin_ingestion_spark.sources.gintable import (
     DELETED_COL,
     SEQ_COL,
     CommitConflict,
+    DataFile,
     GinTable,
 )
 
 OP_COL = "op"
 BATCH_SEQ_COL = "seq"  # a raw batch's sequence column (stored as _seq)
 FROM_TARGET_COL = "_from_target"  # transient LWW tie-break marker
-# Arrow ints → pandas nullable ints (float64 would round longs above 2**53)
-_NULLABLE_INTS = {
+# Arrow → pandas nullable dtypes: float64 would round longs above 2**53,
+# and numpy floats hold null as NaN, so a NaN would come back as null
+_NULLABLE = {
     pa.int8(): pd.Int8Dtype(), pa.int16(): pd.Int16Dtype(),
     pa.int32(): pd.Int32Dtype(), pa.int64(): pd.Int64Dtype(),
+    pa.float32(): pd.Float32Dtype(), pa.float64(): pd.Float64Dtype(),
+    pa.bool_(): pd.BooleanDtype(),
 }.get
 
 
@@ -150,12 +158,11 @@ def lww_step(key: str, ts: str, payload_cols: list[str],
     ``pandas_transform`` runs on the winners."""
 
     def step(batches):
-        frames = (b.to_pandas(types_mapper=_NULLABLE_INTS) for b in batches)
+        frames = (b.to_pandas(types_mapper=_NULLABLE) for b in batches)
         for pdf in lww_stream(frames, key, ts):
             deleted = pdf[OP_COL].to_numpy() == "D"
             pdf = pdf.assign(**{DELETED_COL: deleted})
-            if deleted.any():  # object dtype: a numpy bool cannot hold None
-                pdf = pdf.astype(dict.fromkeys(payload_cols, object))
+            if deleted.any():
                 pdf.loc[deleted, payload_cols] = None
             if pandas_transform is not None:
                 pdf = pandas_transform(pdf)
@@ -282,35 +289,14 @@ def _merge_once(
     # --- read ONLY touched buckets of the current snapshot ------------------
     # (include_internal keeps tombstones: they must participate in LWW so a
     # late out-of-order event cannot resurrect a deleted url)
-    # include_heavy=False: LWW needs no old payloads — on a column-family-
-    # split table the heavy family is neither read nor rewritten here; a
-    # target winner keeps its referenced heavy row, a batch winner appends
-    # a new one (write amplification ∝ changed rows, not bucket size).
-    # EXCEPTION — FOLDED buckets (fold_heavy_compact): their folded
-    # base file is the ONLY copy of their payloads and this merge replaces
-    # it, so those buckets' target rows must carry heavy columns through
-    # the merge; the split write then re-appends every surviving payload
-    # exactly once (their _seqs have no heavy rows elsewhere — fold dropped
-    # them — so heavy_seq_unique is preserved) and the bucket reverts to
-    # the split layout. Non-folded touched buckets keep the cheap path.
-    folded_buckets = {
-        f["bucket"] for f in snap["files"] if f.get("folded", False)
-    }
-    touched_folded = touched & folded_buckets
-    if touched_folded:
-        target = table.read(
-            snap, buckets=touched - touched_folded,
-            include_internal=True, include_heavy=False,
-        ).unionByName(
-            table.read(
-                snap, buckets=touched_folded,
-                include_internal=True, include_heavy=True,
-            )
-        )
-    else:
-        target = table.read(
-            snap, buckets=touched, include_internal=True, include_heavy=False
-        )
+    # include_heavy=False: LWW needs no old payloads — the heavy family is
+    # neither read nor rewritten here; a target winner keeps its referenced
+    # heavy row, a batch winner appends a new one (write amplification ∝
+    # changed rows, not bucket size). A touched folded base file already
+    # holds _seq and the payloads: the commit moves it into the heavy family.
+    target = table.read(
+        snap, buckets=touched, include_internal=True, include_heavy=False
+    )
     target = align_to_schema(target, stored_schema).withColumn(
         OP_COL,
         F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit("D")).otherwise(
@@ -376,8 +362,14 @@ def _merge_once(
         # derives its tombstone-expiry watermark from this
         "max_event_ts": max_ts.isoformat() if max_ts is not None else None,
     }
+    # manifest-only: the same file, now found by _seq under the heavy schema
+    # (fold left no other heavy row for its _seqs, so heavy_seq_unique holds)
+    moved = [
+        replace(DataFile.from_json(f), family="heavy", folded=False)
+        for f in snap["files"] if f["bucket"] in touched and f.get("folded", False)
+    ]
     new_snap = table.commit(
-        new_files,
+        new_files + moved,
         replaced_buckets=touched,
         batch_ids=[batch_id],
         metrics=metrics,

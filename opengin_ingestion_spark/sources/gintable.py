@@ -161,11 +161,10 @@ class DataFile:
     schema_version: int | None = None
     family: str = "base"  # column family: "base" (light cols) | "heavy"
     # folded=True (base family only): the file carries ALL columns, heavy
-    # included — written by fold_heavy_compact for read-heavy tables
-    # so reads of its bucket need no heavy join. A bucket is either folded
-    # (one folded file, zero heavy files) or split; a later MERGE touching
-    # a folded bucket re-splits it (and must read its payloads from the
-    # folded file — see merge.py target read).
+    # included — written by fold_heavy_compact for read-heavy tables so
+    # reads of its bucket need no heavy join. A later MERGE touching the
+    # bucket moves the file, unchanged, into the heavy family (folded=
+    # False): reads then find its payloads by _seq like any heavy file's.
     folded: bool = False
     # event-time range of the file's rows (naive-UTC ISO strings, taken
     # by the writer from the rows it wrote — equal to the footer's
@@ -558,23 +557,24 @@ class GinTable:
         (PushedFilters), so row-group stats prune within the bucket too.
 
         The bucket id is resolved with the SAME ``bucket_expr`` the
-        writes use, evaluated on a one-row literal frame — a tiny local
-        job (no table data touched) that guarantees hash parity with the
-        layout; a serving tier doing thousands of lookups/sec would
-        evaluate Spark's xxhash64 driver-side once and cache, but
-        correctness-by-construction wins here.
+        writes use, on the value cast to the key column's type (the hash
+        of an int differs from a long's; the CLI passes a string),
+        evaluated on a one-row Arrow local relation — the optimizer folds
+        it on the driver, so no Spark job runs, and it guarantees hash
+        parity with the layout.
         """
         snap = snap or self.current_snapshot()
         key = self.key_col(snap)
+        key_type = self.schema(snap)[key].dataType
         row = (
-            self.spark.range(1)
-            .select(F.lit(key_value).alias(key))
+            self.spark.createDataFrame(pa.table({key: [key_value]}))
+            .select(F.col(key).cast(key_type).alias(key))
             .select(self.bucket_expr(key, snap).alias("b"))
             .first()
         )
         return self.read(
             snap, buckets={row["b"]}, include_heavy=include_heavy
-        ).filter(F.col(key) == F.lit(key_value))
+        ).filter(F.col(key) == F.lit(key_value).cast(key_type))
 
     def read(
         self,
@@ -612,11 +612,12 @@ class GinTable:
         scan AND the join entirely — heavy columns read as null; the MERGE
         target read uses this (it never needs old payloads).
 
-        FOLDED buckets (fold_heavy_compact) carry heavy columns
-        inline in their single base-family file: their rows come from one
-        full-schema scan with NO join; a fully folded table's read plan is
-        join-free. Mixed tables (some buckets folded, some split) union
-        the two scans — each row is still read exactly once.
+        FOLDED base files (fold_heavy_compact) carry heavy columns inline:
+        every selected base file is read in ONE scan, under the full schema
+        when a folded file is among them, and the heavy family is
+        left-joined only when the selection holds heavy files, each heavy
+        column being ``coalesce(inline, heavy)``. A fully folded selection
+        has no heavy files: its plan is a bare scan.
         """
         snap = snap or self.current_snapshot()
         schema = self.schema(snap, include_internal=True)
@@ -636,60 +637,45 @@ class GinTable:
                 or f.ts_min is None or f.ts_max is None
                 or not (f.ts_max < lo_iso or f.ts_min > hi_iso)
             ]
-        folded_files = [f for f in files if f.family == "base" and f.folded]
-        if not (heavy_cols and include_heavy):
-            # folded files are ordinary base files here: reading them under
-            # base_schema prunes the inline heavy columns at the parquet
-            # scan (ReadSchema excludes them — no payload IO)
-            base_files = [f for f in files if f.family == "base"]
-            folded_files = []
-        else:
-            base_files = [f for f in files if f.family == "base" and not f.folded]
-        if not base_files:
-            df = self.spark.createDataFrame([], base_schema)
-        else:
-            paths = [os.path.join(self.path, f.path) for f in base_files]
+
+        def scan(fs, read_schema):
+            if not fs:
+                return self.spark.createDataFrame([], read_schema)
             # Spark 4 Parquet reader: missing columns → null, int32→int64
             # widening — covers all schema-history eras in one scan.
-            df = self.spark.read.schema(base_schema).parquet(*paths)
-        if heavy_cols:
-            if include_heavy:
-                heavy_schema = T.StructType(
-                    [schema[SEQ_COL]] + [schema[c] for c in heavy_cols]
-                )
-                heavy_files = [f for f in files if f.family == "heavy"]
-                if base_files:
-                    if heavy_files:
-                        hpaths = [os.path.join(self.path, f.path) for f in heavy_files]
-                        hdf = self.spark.read.schema(heavy_schema).parquet(*hpaths)
-                        if not snap.get("heavy_seq_unique", False):
-                            # defensive path for pre-invariant manifests only:
-                            # the dedup hash-aggregates the whole heavy family
-                            # (payloads included). Keyed on _seq, same as the
-                            # join, so the join reuses the exchange — the heavy
-                            # side still shuffles once, not twice.
-                            hdf = hdf.dropDuplicates([SEQ_COL])
-                    else:
-                        hdf = self.spark.createDataFrame([], heavy_schema)
-                    df = df.join(hdf, SEQ_COL, "left")
-                else:
-                    # all selected buckets are folded (or empty): join-free
-                    for c in heavy_cols:
-                        df = df.withColumn(c, F.lit(None).cast(schema[c].dataType))
-                if folded_files:
-                    fpaths = [os.path.join(self.path, f.path) for f in folded_files]
-                    fdf = self.spark.read.schema(schema).parquet(*fpaths)
-                    if base_files:
-                        df = df.select(
-                            *[f.name for f in schema.fields]
-                        ).unionByName(fdf)
-                    else:
-                        # the split side is empty by construction — drop it
-                        # so the folded-only plan is a bare scan
-                        df = fdf
-            else:
-                for c in heavy_cols:
-                    df = df.withColumn(c, F.lit(None).cast(schema[c].dataType))
+            return self.spark.read.schema(read_schema).parquet(
+                *[os.path.join(self.path, f.path) for f in fs]
+            )
+
+        # ONE scan of every selected base file. It reads the heavy columns
+        # only when a folded file carries them inline (split files read
+        # them as null); otherwise they are null literals, which the
+        # optimizer drops from the coalesce below, so a split read plans
+        # exactly the plain _seq join.
+        base_files = [f for f in files if f.family == "base"]
+        inline = include_heavy and any(f.folded for f in base_files)
+        df = scan(base_files, schema if inline else base_schema).withColumns({
+            c: F.lit(None).cast(schema[c].dataType)
+            for c in heavy_cols if not inline
+        })
+        heavy_files = [f for f in files if f.family == "heavy"]
+        if include_heavy and heavy_cols and heavy_files:
+            heavy_schema = T.StructType(
+                [schema[SEQ_COL]] + [schema[c] for c in heavy_cols]
+            )
+            hdf = scan(heavy_files, heavy_schema)
+            if not snap.get("heavy_seq_unique", False):
+                # defensive path for pre-invariant manifests only: the
+                # dedup hash-aggregates the whole heavy family (payloads
+                # included). Keyed on _seq, same as the join, so the join
+                # reuses the exchange — the heavy side shuffles once.
+                hdf = hdf.dropDuplicates([SEQ_COL])
+            hdf = hdf.select(
+                SEQ_COL, *[F.col(c).alias(f"_heavy_{c}") for c in heavy_cols]
+            )
+            df = df.join(hdf, SEQ_COL, "left").withColumns(
+                {c: F.coalesce(F.col(c), F.col(f"_heavy_{c}")) for c in heavy_cols}
+            )
         df = df.select(*[f.name for f in schema.fields])  # canonical order
         if ts_range is not None:
             # exact semantics on top of the file pruning: the surviving
@@ -756,8 +742,9 @@ class GinTable:
     ) -> dict:
         """Commit a copy-on-write snapshot: files in ``replaced_buckets``
         are dropped, ``new_files`` added, everything else carried forward.
-        Each new file is stamped with the commit's schema version (the
-        parent's, or ``new_schema``'s when that adds one).
+        Each new file without a schema version is stamped with the
+        commit's (the parent's, or ``new_schema``'s when that adds one); a
+        moved file (a merge's folded file turned heavy) keeps its own.
 
         ``replaced_families`` restricts the drop to those column families
         (the MERGE passes {"base"}: a bucket's heavy files are append-only
@@ -826,7 +813,8 @@ class GinTable:
                 else heavy_seq_unique
             ),
             "files": carried + [
-                {**f.to_json(), "schema_version": schema_version} for f in new_files
+                {**f.to_json(), "schema_version": f.schema_version or schema_version}
+                for f in new_files
             ],
             "applied_batch_ranges": applied,
             "metrics": metrics or {},
@@ -851,10 +839,6 @@ class GinTable:
             if f.startswith("v") and f.endswith(".json")
         )
         return [self.snapshot(v) for v in versions]
-
-    def live_files(self) -> set[str]:
-        snap = self.current_snapshot()
-        return {f["path"] for f in snap["files"]}
 
     def gc_orphans(
         self, dry_run: bool = True, min_age_seconds: float = 3600.0

@@ -332,6 +332,77 @@ def test_mixed_folded_split_read(spark, tmp_path):
     )
 
 
+def test_merge_moves_touched_folded_file_into_heavy_family(spark, tmp_path):
+    """A merge on folded buckets reads no payload: each touched folded
+    file is moved, unchanged, into the heavy family (same path, its own
+    schema version), and the merge's new heavy files hold only batch
+    winners that carry a payload. The state equals the oracle, and a full
+    compaction then leaves one base and at most one heavy file per bucket."""
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    from tests.oracle import oracle_final_state_from_events
+
+    d = str(tmp_path / "log")
+    generate_changelog(
+        d, ChangeLogSpec(n_events=1_500, n_urls=200, n_batches=3, seed=37)
+    )
+    files = sorted(glob.glob(os.path.join(d, "*.parquet")))
+    table = GinTable.create(
+        spark, str(tmp_path / "pages"), PAGES_SCHEMA, n_buckets=8,
+        heavy_columns=("html", "text"),
+    )
+    for i, f in enumerate(files[:2]):
+        merge_batch(table, spark.read.parquet(f), batch_id=i,
+                    pandas_transform=pages_pandas_transform,
+                    transform_fields=TRANSFORM_FIELDS)
+    folded = {f["path"]: f for f in fold_heavy_compact(table)["files"]}
+    part = spark.read.parquet(files[2]).filter(table.bucket_expr().isin(0, 3, 5))
+    res = merge_batch(table, part, batch_id=2,
+                      pandas_transform=pages_pandas_transform,
+                      transform_fields=TRANSFORM_FIELDS)
+    snap = table.current_snapshot()
+    by_path = {f["path"]: f for f in snap["files"]}
+    moved = [p for p, f in by_path.items() if p in folded and f["family"] == "heavy"]
+    touched = {r["bucket"] for r in snap["lineage"]["input"]}
+    assert sorted(folded[p]["bucket"] for p in moved) == sorted(touched) == [0, 3, 5]
+    for p in moved:
+        assert by_path[p] == {
+            **folded[p], "family": "heavy", "folded": False,
+        }, "a moved file keeps its path, counts and schema version"
+
+    # the merge's new heavy rows: exactly the batch winners with a payload
+    new_heavy = [p for p, f in by_path.items()
+                 if f["family"] == "heavy" and p not in folded]
+    heavy_seqs = sorted(
+        s for p in new_heavy
+        for s in pq.read_table(os.path.join(table.path, p), columns=["_seq"])
+        ["_seq"].to_pylist()
+    )
+    state = table.read(include_internal=True).toPandas()
+    batch_seqs = set(part.select("seq").toPandas()["seq"])
+    winners = state[state["_seq"].isin(batch_seqs)
+                    & (state["html"].notna() | state["text"].notna())]
+    assert heavy_seqs == sorted(winners["_seq"]) and heavy_seqs
+    assert res.metrics["heavy_bytes_written"] == sum(
+        by_path[p]["bytes"] for p in new_heavy
+    )
+
+    events = pd.concat(
+        [pd.read_parquet(files[0]), pd.read_parquet(files[1]), part.toPandas()],
+        ignore_index=True,
+    )
+    expected = oracle_final_state_from_events(events)
+    assert_states_equal(state, expected)
+
+    snap = compact(table, max_files_per_bucket=0)
+    for fam in ("base", "heavy"):
+        buckets = [f["bucket"] for f in _files(snap, fam)]
+        assert len(buckets) == len(set(buckets)), f"{fam}: one file per bucket"
+    assert sorted(f["bucket"] for f in _files(snap, "base")) == list(range(8))
+    assert_states_equal(table.read(include_internal=True).toPandas(), expected)
+
+
 def test_fold_preserves_time_travel(spark, tiny_log, tmp_path):
     """Snapshot isolation across the layout change: a pre-fold snapshot
     still reads through its own split-layout files (and its heavy files

@@ -595,6 +595,72 @@ def test_merge_keeps_longs_exact_beside_nulls(spark, tmp_path):
     assert got == {"https://a.com/big": big, "https://a.com/null": None}
 
 
+def test_merge_keeps_nan_apart_from_null(spark, tmp_path):
+    """A NaN in a double column stays NaN through the merge and a null
+    stays null: the LWW step converts floats to pandas nullable dtypes,
+    which hold the two apart (numpy float64 holds null as NaN). A
+    tombstone's double payload is null."""
+    from opengin_ingestion_spark.operators.merge import merge_batch
+
+    schema = T.StructType([
+        T.StructField("url", T.StringType(), False),
+        T.StructField("warc_ts", T.TimestampType(), False),
+        T.StructField("score", T.DoubleType(), True),
+    ])
+    t = GinTable.create(spark, str(tmp_path / "t"), schema, n_buckets=1)
+    batch = spark.createDataFrame(
+        [("I", 1, "https://a.com/nan", float("nan")),
+         ("I", 2, "https://a.com/null", None),
+         ("I", 3, "https://a.com/num", 1.5),
+         ("I", 4, "https://a.com/gone", 2.5),
+         ("D", 5, "https://a.com/gone", 2.5)],
+        "op string, seq long, url string, score double",
+    ).withColumn("warc_ts", F.timestamp_seconds(F.col("seq") + 1_700_000_000))
+    merge_batch(t, batch, batch_id=0)
+    got = {
+        r["url"]: (r["nan"], r["null"], r["_deleted"])
+        for r in t.read(include_internal=True).select(
+            "url", "_deleted",
+            F.isnan("score").alias("nan"), F.isnull("score").alias("null"),
+        ).collect()
+    }
+    assert got == {
+        "https://a.com/nan": (True, False, False),
+        "https://a.com/null": (False, True, False),
+        "https://a.com/num": (False, False, False),
+        "https://a.com/gone": (False, True, True),
+    }
+
+
+def test_lookup_hashes_the_key_column_type(spark, tmp_path):
+    """On a long-keyed table every key is found: the bucket is hashed from
+    a literal typed as the key column (xxhash64 of an int differs from a
+    long's). Building the lookup runs no Spark job: the one-row key frame
+    is an Arrow local relation the optimizer folds on the driver."""
+    schema = T.StructType([
+        T.StructField("id", T.LongType(), False),
+        T.StructField("warc_ts", T.TimestampType(), False),
+        T.StructField("v", T.LongType(), True),
+    ])
+    t = GinTable.create(spark, str(tmp_path / "t"), schema, n_buckets=8, key_col="id")
+    df = _rows_df(spark, n=50).select(
+        F.col("v").alias("id"), "warc_ts", "v", "_seq"
+    )
+    t.commit(t.write_data_files(df, t.current_snapshot()), set(), [0])
+
+    sc = spark.sparkContext
+    sc.setJobGroup("lookup-build", "build a point read")
+    try:
+        t.lookup(7)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("lookup-build") == []
+    found = {k: [r["v"] for r in t.lookup(k).collect()] for k in range(50)}
+    assert found == {k: [k] for k in range(50)}
+    assert [r["v"] for r in t.lookup("7").collect()] == [7]  # as the CLI passes it
+
+
 def test_merge_job_budget(spark, tmp_path):
     """A 200-event merge_batch on a backfilled 16-bucket table (the serve
     shape) runs at most 4 Spark jobs: the input-stats action and the
