@@ -225,6 +225,18 @@ def bench_cdc_replay(spark, n_events: int, n_urls: int) -> dict[str, float]:
             transform_fields=TRANSFORM_FIELDS,
         )
         fold_then_merge = time.perf_counter() - t0
+        # what the move leaves until a compaction: the moved files still
+        # hold the payloads of rows that merge superseded, and a read
+        # scans them for the _seq join. Same state read from the split
+        # replica (its merge appended only the batch's payloads).
+        read_after_split_merge = None
+        if merge_split is not None:
+            t0 = time.perf_counter()
+            _run_to_noop(split_table.read())
+            read_after_split_merge = time.perf_counter() - t0
+        t0 = time.perf_counter()
+        _run_to_noop(table.read())
+        read_after_fold_merge = time.perf_counter() - t0
         return {
             "cdc_replay_sec": round(elapsed, 3),
             "cdc_runs": cdc_runs,
@@ -240,6 +252,11 @@ def bench_cdc_replay(spark, n_events: int, n_urls: int) -> dict[str, float]:
                 round(merge_split, 3) if merge_split is not None else None
             ),
             "fold_then_merge_sec": round(fold_then_merge, 3),
+            "read_after_split_merge_sec": (
+                round(read_after_split_merge, 3)
+                if read_after_split_merge is not None else None
+            ),
+            "read_after_fold_merge_sec": round(read_after_fold_merge, 3),
         }
     finally:
         shutil.rmtree(base, ignore_errors=True)

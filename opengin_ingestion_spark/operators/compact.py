@@ -126,14 +126,16 @@ def fold_heavy_compact(table: GinTable, buckets: set[int] | None = None) -> dict
     ``idle_buckets`` for the cadence policy (fold buckets untouched for N
     commits, e.g. from the tail's inline maintenance hook):
     ``fold_heavy_compact(t, buckets=idle_buckets(t, 5))``. Mixed tables
-    read correctly: gintable.read scans every base file in one scan and
-    joins the heavy files of the selection by ``_seq``.
+    read correctly: gintable.read scans the folded files bare and joins
+    only the split files with the heavy family by ``_seq``.
 
     Work ∝ unfolded buckets (idempotent: a second call is a no-op commit
     skip). A later MERGE touching a folded bucket reads its light columns
     only and moves the folded file, unchanged, into the heavy family —
     no payload is read or rewritten, so a merge after a fold costs what a
-    split-layout merge costs. Fold is a maintenance op, not a freeze.
+    split-layout merge costs. Until the bucket is compacted, its reads
+    also scan the moved file's superseded payloads for the ``_seq`` join.
+    Fold is a maintenance op, not a freeze.
 
     Reference analog: the exporter materializes final denormalized output
     once aggregation is done

@@ -165,6 +165,7 @@ class DataFile:
     # reads of its bucket need no heavy join. A later MERGE touching the
     # bucket moves the file, unchanged, into the heavy family (folded=
     # False): reads then find its payloads by _seq like any heavy file's.
+    # So a bucket is folded (no heavy files) or split, never both.
     folded: bool = False
     # event-time range of the file's rows (naive-UTC ISO strings, taken
     # by the writer from the rows it wrote — equal to the footer's
@@ -612,12 +613,12 @@ class GinTable:
         scan AND the join entirely — heavy columns read as null; the MERGE
         target read uses this (it never needs old payloads).
 
-        FOLDED base files (fold_heavy_compact) carry heavy columns inline:
-        every selected base file is read in ONE scan, under the full schema
-        when a folded file is among them, and the heavy family is
-        left-joined only when the selection holds heavy files, each heavy
-        column being ``coalesce(inline, heavy)``. A fully folded selection
-        has no heavy files: its plan is a bare scan.
+        FOLDED base files (fold_heavy_compact) carry heavy columns inline
+        and their buckets hold no heavy files (a merge that touches one
+        moves the folded file into the heavy family): they are read by one
+        full-schema scan with NO join, unioned with the split files' join.
+        A fully folded selection plans a bare scan, a split one the plain
+        join; each row is read exactly once.
         """
         snap = snap or self.current_snapshot()
         schema = self.schema(snap, include_internal=True)
@@ -647,35 +648,37 @@ class GinTable:
                 *[os.path.join(self.path, f.path) for f in fs]
             )
 
-        # ONE scan of every selected base file. It reads the heavy columns
-        # only when a folded file carries them inline (split files read
-        # them as null); otherwise they are null literals, which the
-        # optimizer drops from the coalesce below, so a split read plans
-        # exactly the plain _seq join.
-        base_files = [f for f in files if f.family == "base"]
-        inline = include_heavy and any(f.folded for f in base_files)
-        df = scan(base_files, schema if inline else base_schema).withColumns({
-            c: F.lit(None).cast(schema[c].dataType)
-            for c in heavy_cols if not inline
-        })
-        heavy_files = [f for f in files if f.family == "heavy"]
-        if include_heavy and heavy_cols and heavy_files:
-            heavy_schema = T.StructType(
-                [schema[SEQ_COL]] + [schema[c] for c in heavy_cols]
-            )
-            hdf = scan(heavy_files, heavy_schema)
-            if not snap.get("heavy_seq_unique", False):
-                # defensive path for pre-invariant manifests only: the
-                # dedup hash-aggregates the whole heavy family (payloads
-                # included). Keyed on _seq, same as the join, so the join
-                # reuses the exchange — the heavy side shuffles once.
-                hdf = hdf.dropDuplicates([SEQ_COL])
-            hdf = hdf.select(
-                SEQ_COL, *[F.col(c).alias(f"_heavy_{c}") for c in heavy_cols]
-            )
-            df = df.join(hdf, SEQ_COL, "left").withColumns(
-                {c: F.coalesce(F.col(c), F.col(f"_heavy_{c}")) for c in heavy_cols}
-            )
+        # A bucket is folded (one base file with the heavy columns inline
+        # and no heavy files) or split: fold_heavy_compact drops the heavy
+        # files, and a merge moves a touched folded file into the heavy
+        # family. So folded files are a bare full-schema scan and only the
+        # split files join the heavy family — folded payloads never ride
+        # through the _seq shuffle. Without heavy columns a folded file is
+        # an ordinary base file: base_schema prunes its inline payloads at
+        # the parquet scan (ReadSchema excludes them — no payload IO).
+        folded = [f for f in files if f.family == "base" and f.folded and include_heavy]
+        split = [f for f in files if f.family == "base" and not (f.folded and include_heavy)]
+        heavy_files = [f for f in files if f.family == "heavy" and include_heavy]
+        parts = [scan(folded, schema)] if folded else []
+        if split or not folded:
+            df = scan(split, base_schema)
+            if heavy_cols and heavy_files:
+                hdf = scan(heavy_files, T.StructType(
+                    [schema[SEQ_COL]] + [schema[c] for c in heavy_cols]
+                ))
+                if not snap.get("heavy_seq_unique", False):
+                    # defensive path for pre-invariant manifests only: the
+                    # dedup hash-aggregates the whole heavy family (payloads
+                    # included). Keyed on _seq, same as the join, so the
+                    # join reuses the exchange — the heavy side shuffles once.
+                    hdf = hdf.dropDuplicates([SEQ_COL])
+                df = df.join(hdf, SEQ_COL, "left")
+            else:
+                df = df.withColumns(
+                    {c: F.lit(None).cast(schema[c].dataType) for c in heavy_cols}
+                )
+            parts.append(df)
+        df = functools.reduce(DataFrame.unionByName, parts)
         df = df.select(*[f.name for f in schema.fields])  # canonical order
         if ts_range is not None:
             # exact semantics on top of the file pruning: the surviving

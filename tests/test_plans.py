@@ -166,6 +166,42 @@ def test_folded_read_plan_is_join_free_scan(spark, tiny_log, tmp_path):
     )
 
 
+def test_mixed_read_joins_only_split_files(spark, tiny_log, tmp_path):
+    """Fold, then merge a delta that touches a subset of buckets: the read
+    joins only the split buckets' base files with the heavy family. The
+    still-folded files are their own scan with html inline, so their
+    payloads never cross the _seq join."""
+    from opengin_ingestion_spark.operators.compact import fold_heavy_compact
+    from opengin_ingestion_spark.operators.merge import merge_batch
+    from opengin_ingestion_spark.plans.replay import (
+        TRANSFORM_FIELDS,
+        pages_pandas_transform,
+        replay_changelog,
+    )
+    from opengin_ingestion_spark.sources import ChangeLogSpec, generate_changelog
+    from opengin_ingestion_spark.sources.reader import read_changelog
+
+    table, _ = replay_changelog(
+        spark, tiny_log["dir"], str(tmp_path / "pages"), n_buckets=8,
+        group_files=2,
+    )
+    fold_heavy_compact(table)
+    dlog = str(tmp_path / "delta")
+    generate_changelog(dlog, ChangeLogSpec(n_events=200, n_urls=400, n_batches=1, seed=7))
+    delta = read_changelog(spark, dlog).filter(table.bucket_expr() < 2)
+    merge_batch(table, delta, batch_id=100, pandas_transform=pages_pandas_transform,
+                transform_fields=TRANSFORM_FIELDS)
+    base = [f for f in table.current_snapshot()["files"] if f["family"] == "base"]
+    assert any(f["folded"] for f in base) and not all(f["folded"] for f in base)
+    reads = [ln.split("ReadSchema:")[1] for ln in _formatted(table.read()).splitlines()
+             if "ReadSchema:" in ln]
+    base_reads = [r for r in reads if "url" in r]
+    assert len(base_reads) == 2, reads
+    assert sum("html" in r for r in base_reads) == 1, (
+        "split base files must scan without payloads, folded ones with them"
+    )
+
+
 def test_ivf_update_lookup_prunes_vectors(spark, tmp_path):
     """update_ivf_index's old-home lookup (changed ids → cells) must be a
     column-pruned scan: the semi join needs only (id, cell), so ReadSchema
