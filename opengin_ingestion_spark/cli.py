@@ -20,7 +20,8 @@ session — they read manifests); the rewrite commands spin one up.
 `fold` switches a quieted table to the read-optimized folded layout
 (join-free reads; see operators/compact.py::fold_heavy_compact).
 `ivf-update` syncs a persisted IVF index with the table's changes since
---from-version (operators/similarity.py::update_ivf_index_from_table).
+--from-version: the `table_changes` delta goes straight into
+operators/similarity.py::update_ivf_index.
 """
 
 from __future__ import annotations
@@ -118,15 +119,15 @@ def cmd_fold(path: str) -> None:
 def cmd_ivf_update(
     path: str, index_path: str, from_version: int, id_col: str, vec_col: str
 ) -> None:
-    from opengin_ingestion_spark.operators.similarity import (
-        update_ivf_index_from_table,
-    )
+    from opengin_ingestion_spark.operators.similarity import update_ivf_index
     from opengin_ingestion_spark.session import get_spark
+    from opengin_ingestion_spark.sources.gintable import table_changes
 
     spark = get_spark(app_name="ivf_update")
     t = GinTable.load(spark, path)
-    stats = update_ivf_index_from_table(
-        t, index_path, from_version, id_col=id_col, vec_col=vec_col
+    stats = update_ivf_index(
+        table_changes(t, from_version, key=id_col), index_path,
+        id_col=id_col, vec_col=vec_col,
     )
     print(json.dumps(stats))
 

@@ -3,30 +3,41 @@
 Exact paths, the accuracy baselines:
 
 * ``brute_force_topk`` (top-k) and ``exact_neardup_pairs`` (all pairs over
-  a cosine threshold) — the query set is broadcast in bounded chunks and
-  scored against the streaming corpus by a block matmul per Arrow batch;
-  the corpus never shuffles, and the pair space is never materialized.
+  a cosine threshold) share one scan (``_exact_scan``): the query set is
+  broadcast in bounded chunks and scored against the streaming corpus by
+  a block matmul per Arrow batch; the corpus never shuffles, and the pair
+  space is never materialized.
 
 Scale paths:
 
 * ``lsh_ann_topk`` and ``embedding_neardup_pairs`` — random-hyperplane LSH
   (SimHash-for-vectors): H deterministic hyperplanes → sign-bit bucket;
   candidates = same bucket (multi-probe: exact bucket plus 1-bit flips);
-  exact cosine re-rank within candidates. Bucketing is a vectorized pandas
-  UDF (one matrix multiply per Arrow batch); candidate-join keys are
-  uniform hashes → no skew. Pair space shrinks from N·M to N·M/2^H per
-  probe.
+  exact cosine re-rank within candidates. Both bucket through one
+  vectorized pandas UDF site (``_hyperplane_buckets``, one matrix
+  multiply per Arrow batch) and probe through ``_probes``; candidate-join
+  keys are uniform hashes → no skew. Pair space shrinks from N·M to
+  N·M/2^H per probe.
 * IVF — ``build_ivf_index`` trains a k-means coarse quantizer and persists
   the corpus partitioned by home cell; ``ivf_search`` probes a query
   batch's ``n_probe`` nearest cells only, with data-adaptive cells (better
   recall than hyperplanes on clustered embeddings). ``update_ivf_index``
   maintains the index from a CDC delta, one atomic generation at a time.
+  Build and update commit through one ``_publish_generation``: each
+  writer fills its own ``cells-g{N}-{uuid8}`` directory and flips
+  ``meta.json`` only if its parent generation is still current; it
+  deletes its own directory on failure and, after committing N, only
+  generations ≤ N other than its own and its parent's.
 
-The LSH and IVF paths score candidates JVM-side in double precision:
-``_dot`` over norms precomputed once per vector (``_norm``).
+Every top-k ranks through one window (``_rank_topk``). The LSH and IVF
+paths score candidates JVM-side in double precision: ``_dot`` over norms
+precomputed once per vector (``_norm``).
 """
 
 from __future__ import annotations
+
+import functools
+import re
 
 import numpy as np
 import pandas as pd
@@ -83,6 +94,13 @@ _TOPK_SCHEMA = T.StructType(
         T.StructField("cos", T.DoubleType()),
     ]
 )
+_PAIRS_SCHEMA = T.StructType(
+    [
+        T.StructField("id_a", T.LongType()),
+        T.StructField("id_b", T.LongType()),
+        T.StructField("cos", T.DoubleType()),
+    ]
+)
 
 
 def _query_chunks(
@@ -117,6 +135,59 @@ def _query_chunks(
         base.unpersist()
 
 
+def _exact_scan(
+    corpus: DataFrame,
+    src: DataFrame,
+    id_col: str,
+    vec_col: str,
+    max_rows: int,
+    emit,
+    schema: T.StructType,
+) -> DataFrame:
+    """The exact cosine scan both exact operators share: ``src`` is
+    broadcast in chunks of at most ``max_rows`` rows (``_query_chunks``);
+    per chunk, ONE ``mapInPandas`` stage streams ``corpus`` once,
+    normalizes each Arrow batch and computes its batch × chunk BLAS matmul
+    in float64. ``emit(c_ids, q_ids, sims)`` turns one (batch, chunk)
+    similarity block into the rows (``schema``) the operator keeps, so the
+    pair space is never materialized and the corpus never shuffles. The
+    chunk outputs are unioned directly — no empty seed frame, which would
+    add an empty-relation branch to every plan."""
+    sc = corpus.sparkSession.sparkContext
+    chunk_outputs = []
+    for q_ids, qm in _query_chunks(src, id_col, vec_col, max_rows):
+        bc = sc.broadcast((q_ids, qm))
+
+        def scan(batches, _bc=bc):
+            q_ids_l, qm_l = _bc.value
+            for pdf in batches:
+                cm = _safe_normalize(
+                    np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+                )
+                yield emit(pdf[id_col].to_numpy(), q_ids_l, cm @ qm_l.T)
+
+        chunk_outputs.append(corpus.mapInPandas(scan, schema=schema))
+    if not chunk_outputs:  # empty corpus/query set → empty result
+        return corpus.sparkSession.createDataFrame([], schema)
+    return functools.reduce(DataFrame.unionByName, chunk_outputs)
+
+
+def _rank_topk(scored: DataFrame, id_col: str, k: int) -> DataFrame:
+    """Global top-k per query over scored (q_id, c_id, cos) candidates →
+    (id_col, neighbor_id, rank); rank 1 = most similar, ties broken by
+    neighbor id for determinism."""
+    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            F.col("q_id").alias(id_col),
+            F.col("c_id").alias("neighbor_id"),
+            F.col("rank"),
+        )
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame | None = None,
@@ -130,63 +201,34 @@ def brute_force_topk(
     Returns (vec_id, neighbor_id, rank) — rank 1 = most similar; ties
     broken by neighbor_id for determinism.
 
-    Physical strategy: the query set is broadcast in chunks of at most
-    ``max_broadcast_rows`` rows (so self-search NEVER collects the whole
-    corpus to the driver — the round-1 driver-OOM path); per chunk, a
-    ``mapInPandas`` stage streams the corpus once, computing an Arrow-batch
-    × query BLAS matmul in float64 and emitting only each batch's local
-    top-k candidates per query (k · n_batches rows, not n_corpus · n_query
-    pairs). A final window over the tiny candidate union picks the global
-    top-k. The corpus never shuffles; the pair space is never materialized.
-    For huge self-search sets prefer ``lsh_ann_topk`` — chunked brute force
-    is exact but O(N²/chunks) scans.
+    Physical strategy (``_exact_scan``): the query set is broadcast in
+    chunks of at most ``max_broadcast_rows`` rows (so self-search NEVER
+    collects the whole corpus to the driver); each corpus batch emits only
+    its local top-k candidates per query (k · n_batches rows, not
+    n_corpus · n_query pairs), and a final window over the tiny candidate
+    union picks the global top-k. For huge self-search sets prefer
+    ``lsh_ann_topk`` — chunked brute force is exact but O(N²/chunks) scans.
     """
+
+    def local_topk(c_ids, q_ids, sims):
+        sims[c_ids[:, None] == q_ids[None, :]] = -np.inf  # self
+        kk = min(k, sims.shape[0])
+        top = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (kk, nq)
+        out = pd.DataFrame(
+            {
+                "q_id": np.repeat(q_ids[None, :], kk, axis=0).ravel(),
+                "c_id": c_ids[top].ravel(),
+                "cos": np.take_along_axis(sims, top, axis=0).ravel(),
+            }
+        )
+        return out[np.isfinite(out["cos"])]
+
     src = corpus if queries is None else queries
-    corpus = ensure_min_parallelism(corpus)
-    sc = corpus.sparkSession.sparkContext
-    chunk_outputs = []
-    for q_ids, qm in _query_chunks(src, id_col, vec_col, max_broadcast_rows):
-        bc = sc.broadcast((q_ids, qm))
-
-        def local_topk(batches, _bc=bc):
-            q_ids_l, qm_l = _bc.value
-            for pdf in batches:
-                c_ids = pdf[id_col].to_numpy()
-                cm = _safe_normalize(
-                    np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                )
-                sims = cm @ qm_l.T  # (batch, nq)
-                sims[c_ids[:, None] == q_ids_l[None, :]] = -np.inf  # self
-                kk = min(k, sims.shape[0])
-                top = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (kk, nq)
-                rows = {
-                    "q_id": np.repeat(q_ids_l[None, :], kk, axis=0).ravel(),
-                    "c_id": c_ids[top].ravel(),
-                    "cos": np.take_along_axis(sims, top, axis=0).ravel(),
-                }
-                out = pd.DataFrame(rows)
-                yield out[np.isfinite(out["cos"])]
-
-        chunk_outputs.append(corpus.mapInPandas(local_topk, schema=_TOPK_SCHEMA))
-    if not chunk_outputs:  # empty corpus/query set → empty result, not IndexError
-        return corpus.sparkSession.createDataFrame([], _TOPK_SCHEMA).select(
-            F.col("q_id").alias(id_col),
-            F.col("c_id").alias("neighbor_id"),
-            F.lit(1).alias("rank"),
-        )
-    cand = chunk_outputs[0]
-    for extra in chunk_outputs[1:]:
-        cand = cand.unionByName(extra)
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("q_id").alias(id_col),
-            F.col("c_id").alias("neighbor_id"),
-            F.col("rank"),
-        )
+    cand = _exact_scan(
+        ensure_min_parallelism(corpus), src, id_col, vec_col,
+        max_broadcast_rows, local_topk, _TOPK_SCHEMA,
     )
+    return _rank_topk(cand, id_col, k)
 
 
 def exact_neardup_pairs(
@@ -199,110 +241,24 @@ def exact_neardup_pairs(
     """EXACT embedding-cosine near-duplicate pairs (id_a < id_b,
     cos ≥ threshold) — the accuracy oracle for the LSH variant.
 
-    Same chunked-broadcast block-matmul shape as ``brute_force_topk``: the
-    corpus streams through mapInPandas once per query chunk; only pairs
-    over the threshold are ever materialized. Exact but O(N²/chunk) work —
-    at 100 TB use ``embedding_neardup_pairs`` (hyperplane LSH) and reserve
-    this for candidate verification / small corpora.
+    Same chunked-broadcast scan as ``brute_force_topk`` (``_exact_scan``);
+    only pairs over the threshold are ever materialized. Exact but
+    O(N²/chunk) work — at 100 TB use ``embedding_neardup_pairs``
+    (hyperplane LSH) and reserve this for candidate verification / small
+    corpora.
     """
-    sc = corpus.sparkSession.sparkContext
+
+    def pairs(c_ids, q_ids, sims):
+        # id_a < id_b keeps each pair once, and drops self-pairs
+        keep = (sims >= threshold) & (c_ids[:, None] < q_ids[None, :])
+        ci, qi = np.nonzero(keep)
+        return pd.DataFrame(
+            {"id_a": c_ids[ci], "id_b": q_ids[qi], "cos": sims[ci, qi]}
+        )
+
     corpus = ensure_min_parallelism(corpus)
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cos", T.DoubleType()),
-        ]
-    )
-    chunk_outputs = []
-    for q_ids, qm in _query_chunks(corpus, id_col, vec_col, max_broadcast_rows):
-        bc = sc.broadcast((q_ids, qm))
-
-        def pairs(batches, _bc=bc):
-            q_ids_l, qm_l = _bc.value
-            for pdf in batches:
-                c_ids = pdf[id_col].to_numpy()
-                cm = _safe_normalize(
-                    np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                )
-                sims = cm @ qm_l.T  # (batch, nq)
-                # id_a < id_b keeps each pair once, and drops self-pairs
-                keep = (sims >= threshold) & (c_ids[:, None] < q_ids_l[None, :])
-                ci, qi = np.nonzero(keep)
-                yield pd.DataFrame(
-                    {
-                        "id_a": c_ids[ci],
-                        "id_b": q_ids_l[qi],
-                        "cos": sims[ci, qi],
-                    }
-                )
-
-        chunk_outputs.append(corpus.mapInPandas(pairs, schema=out_schema))
-    if not chunk_outputs:  # empty corpus → empty result, not IndexError
-        return corpus.sparkSession.createDataFrame([], out_schema)
-    out = chunk_outputs[0]
-    for extra in chunk_outputs[1:]:
-        out = out.unionByName(extra)
-    return out
-
-
-def embedding_neardup_pairs(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    seed: int = 42,
-    max_bucket_size: int = 5000,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id_a < id_b, cos ≥ threshold).
-
-    Scale path: hyperplane-LSH bucketing (near-identical vectors share
-    sign buckets with overwhelming probability at high thresholds) +
-    exact cosine verification within candidates — the vector analog of
-    MinHash-LSH text dedup. Buckets above ``max_bucket_size`` are dropped
-    (observable metric ``embedding_bucket_cap``) — the degenerate-bucket
-    guard (e.g. the all-zeros vector every encoder failure emits). For an
-    exact answer at small N use ``exact_neardup_pairs``."""
-    dim = len(corpus.select(vec_col).first()[0])
-    planes = make_hyperplanes(dim, n_planes, seed)
-    corpus = ensure_min_parallelism(corpus)
-    bucketed = corpus.select(
-        F.col(id_col), F.col(vec_col),
-        _norm(F.col(vec_col)).alias("_nrm"),  # once per vector, see _norm
-        _bucket_udf(planes)(F.col(vec_col)).alias("b"),
-    ).localCheckpoint(eager=True)
-    bucketed = cap_key_frequency(bucketed, ["b"], max_bucket_size, "embedding_bucket")
-    probes = bucketed.select(
-        id_col, vec_col, "_nrm",
-        F.explode(
-            F.array(
-                F.col("b"),
-                *[
-                    F.col("b").bitwiseXOR(F.lit(1 << p)).cast("long")
-                    for p in range(n_planes)
-                ],
-            )
-        ).alias("pb"),
-    )
-    a = probes.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
-        F.col("_nrm").alias("na"), F.col("pb").alias("b"),
-    )
-    c = bucketed.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
-        F.col("_nrm").alias("nb"), F.col("b"),
-    )
-    # at-most-one match per ordered pair: id_b's home bucket is unique and
-    # id_a's probe list is n_planes+1 distinct buckets, so the old
-    # pair-dedup aggregate was a no-op shuffling both vectors — score at
-    # the join output directly (guide §2.3/§8)
-    return (
-        a.join(c, "b")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", _dot("va", "vb") / (F.col("na") * F.col("nb")))
-        .filter(F.col("cos") >= threshold)
-        .select("id_a", "id_b", "cos")
+    return _exact_scan(
+        corpus, corpus, id_col, vec_col, max_broadcast_rows, pairs, _PAIRS_SCHEMA
     )
 
 
@@ -323,6 +279,82 @@ def _bucket_udf(planes: np.ndarray):
     return bucket
 
 
+def _hyperplane_buckets(
+    corpus: DataFrame, id_col: str, vec_col: str, n_planes: int, seed: int
+) -> DataFrame:
+    """The one hyperplane bucketing site: (id, vec, _nrm, b) with ``b`` the
+    sign-bit bucket under ``n_planes`` seeded hyperplanes (dim read from
+    the data). Checkpointed — both LSH operators join it against itself.
+    ``_nrm`` is computed once per vector, not once per candidate pair
+    (see ``_norm``)."""
+    dim = len(corpus.select(vec_col).first()[0])
+    planes = make_hyperplanes(dim, n_planes, seed)
+    return (
+        ensure_min_parallelism(corpus)
+        .select(
+            F.col(id_col), F.col(vec_col),
+            _norm(F.col(vec_col)).alias("_nrm"),
+            _bucket_udf(planes)(F.col(vec_col)).alias("b"),
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
+def _probes(n_planes: int) -> F.Column:
+    """Multi-probe explode over a bucketed frame's ``b``: the home bucket
+    plus the ``n_planes`` buckets one bit away — n_planes+1 DISTINCT
+    buckets, so a vector whose home bucket is unique matches a probing
+    vector at most once (no pair-dedup aggregate is needed)."""
+    return F.explode(
+        F.array(
+            F.col("b"),
+            *[F.col("b").bitwiseXOR(F.lit(1 << p)).cast("long") for p in range(n_planes)],
+        )
+    )
+
+
+def embedding_neardup_pairs(
+    corpus: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    threshold: float = 0.95,
+    n_planes: int = 8,
+    seed: int = 42,
+    max_bucket_size: int = 5000,
+) -> DataFrame:
+    """Embedding-cosine near-duplicate pairs (id_a < id_b, cos ≥ threshold).
+
+    Scale path: hyperplane-LSH bucketing (near-identical vectors share
+    sign buckets with overwhelming probability at high thresholds) +
+    exact cosine verification within candidates — the vector analog of
+    MinHash-LSH text dedup. Buckets above ``max_bucket_size`` are dropped
+    from both sides (observable metric ``embedding_bucket_cap``) — the
+    degenerate-bucket guard (e.g. the all-zeros vector every encoder
+    failure emits). For an exact answer at small N use
+    ``exact_neardup_pairs``."""
+    bucketed = cap_key_frequency(
+        _hyperplane_buckets(corpus, id_col, vec_col, n_planes, seed),
+        ["b"], max_bucket_size, "embedding_bucket",
+    )
+    a = bucketed.select(
+        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"),
+        F.col("_nrm").alias("na"), _probes(n_planes).alias("b"),
+    )
+    c = bucketed.select(
+        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"),
+        F.col("_nrm").alias("nb"), F.col("b"),
+    )
+    # score at the join output directly: at most one match per ordered
+    # pair (see _probes), so no pair-dedup aggregate (guide §2.3/§8)
+    return (
+        a.join(c, "b")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .withColumn("cos", _dot("va", "vb") / (F.col("na") * F.col("nb")))
+        .filter(F.col("cos") >= threshold)
+        .select("id_a", "id_b", "cos")
+    )
+
+
 def lsh_ann_topk(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -330,7 +362,6 @@ def lsh_ann_topk(
     k: int = 5,
     n_planes: int = 10,
     seed: int = 42,
-    dim: int | None = None,
     max_bucket_size: int = 5000,
 ) -> DataFrame:
     """Approximate self-search top-k: bucket by hyperplane sign bits,
@@ -340,50 +371,21 @@ def lsh_ann_topk(
 
     Recall is tested against ``brute_force_topk`` in tests/test_similarity.py.
     """
-    if dim is None:
-        dim = len(corpus.select(vec_col).first()[0])
-    planes = make_hyperplanes(dim, n_planes, seed)
-    corpus = ensure_min_parallelism(corpus)
-    # _nrm precomputed once per vector (20k folds), not once per candidate
-    # pair (14M at sf1.0) — see _norm
-    bucketed = corpus.select(
-        F.col(id_col), F.col(vec_col),
-        _norm(F.col(vec_col)).alias("_nrm"),
-        _bucket_udf(planes)(F.col(vec_col)).alias("b"),
-    ).localCheckpoint(eager=True)  # barrier: self-joined twice below
+    bucketed = _hyperplane_buckets(corpus, id_col, vec_col, n_planes, seed)
     # the cap applies to the CANDIDATE side only — every vector keeps its
     # query role even if its home bucket is degenerate
-    candidates = cap_key_frequency(bucketed, ["b"], max_bucket_size, "ann_bucket")
-    # multi-probe: each vector also probes the n_planes buckets one bit away
-    probes = bucketed.select(
-        id_col,
-        vec_col,
-        "_nrm",
-        F.explode(
-            F.array(
-                F.col("b"),
-                *[
-                    F.col("b").bitwiseXOR(F.lit(1 << p)).cast("long")
-                    for p in range(n_planes)
-                ],
-            )
-        ).alias("probe_b"),
-    )
-    a = candidates.select(
+    a = cap_key_frequency(bucketed, ["b"], max_bucket_size, "ann_bucket").select(
         F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"),
         F.col("_nrm").alias("c_nrm"), F.col("b"),
     )
-    q = probes.select(
+    q = bucketed.select(
         F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"),
-        F.col("_nrm").alias("q_nrm"), F.col("probe_b").alias("b"),
+        F.col("_nrm").alias("q_nrm"), _probes(n_planes).alias("b"),
     )
-    # A (q, c) pair can match at most ONCE: c appears in exactly one home-
-    # bucket row and q's probe list {b} ∪ {b ^ 1<<p} is n_planes+1 DISTINCT
-    # buckets — so the pair-dedup aggregate the old plan paid here was a
-    # no-op that shuffled both full vectors (~1 KB/row at dim 64) through a
-    # second exchange. Score at the join output and project to
-    # (q_id, c_id, cos) before the top-k window instead (guide §2.3/§8:
-    # every exchange after the join moves three scalars, not payloads).
+    # score at the join output (at most one match per (q, c), see _probes)
+    # and project to (q_id, c_id, cos) before the top-k window: every
+    # exchange after the join moves three scalars, not payloads
+    # (guide §2.3/§8)
     scored = (
         q.join(a, "b")
         .filter(F.col("q_id") != F.col("c_id"))
@@ -392,16 +394,7 @@ def lsh_ann_topk(
             (_dot("q_vec", "c_vec") / (F.col("q_nrm") * F.col("c_nrm"))).alias("cos"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("q_id").alias(id_col),
-            F.col("c_id").alias("neighbor_id"),
-            F.col("rank"),
-        )
-    )
+    return _rank_topk(scored, id_col, k)
 
 
 # --- IVF (inverted-file) ANN ----------------------------------------------------
@@ -474,21 +467,25 @@ def build_ivf_index(
     (reference orchestrator.py:137-153).
 
     Returns the meta dict (also written to ``<index_path>/meta.json``).
-    Deterministic: same corpus + seed ⇒ identical index across sessions.
+    Deterministic: same corpus + seed ⇒ identical index contents across
+    sessions.
 
-    GENERATIONS (round 5): the cells layout lives in a per-generation
-    directory (``cells-g{N}``) named by ``meta.json``, which is the
-    index's atomic commit pointer. A rebuild (or incremental update)
-    writes a complete NEW generation beside the old one and then
+    GENERATIONS: the cells layout lives in a per-generation directory
+    ``cells-g{N}-{uuid8}`` named by ``meta.json``, which is the index's
+    atomic commit pointer. A rebuild (or incremental update) writes a
+    complete NEW generation into a directory only that writer uses, checks
+    that the generation it started from is still current, and then
     atomically replaces meta.json — so a reader that loaded the old meta
-    keeps a fully consistent old layout (its files are never modified),
-    a reader loading after the flip sees the new one, and a crash at ANY
-    point leaves the old generation current (the half-written new dir is
-    unreferenced garbage, GC'd by the next successful writer). The one
-    stale generation preceding the current one is retained as a grace
-    window for in-flight readers; older ones are GC'd. (On an object
-    store the same design holds with a per-cell path manifest instead of
-    directory renames — the pointer flip is the commit either way.)
+    keeps a fully consistent old layout (its files are never modified), a
+    reader loading after the flip sees the new one, and a crash or a lost
+    race at ANY point leaves the committed generation current. A writer
+    deletes only its own directory (when it loses the race) and, after it
+    commits generation N, the directories numbered ≤ N other than its own
+    and its parent's — the parent is kept as the grace window for
+    in-flight readers, and a newer writer's in-flight directory (> N) is
+    never touched. (On an object store the same design holds with a
+    per-cell path manifest instead of directory renames — the pointer flip
+    is the commit either way.)
     """
     import os as _os
 
@@ -497,38 +494,14 @@ def build_ivf_index(
     )
     _os.makedirs(index_path, exist_ok=True)
     try:
-        prev_meta = load_ivf_meta(index_path)
+        parent = load_ivf_meta(index_path)
     except FileNotFoundError:
-        prev_meta = None
-    gen = (prev_meta.get("generation", 0) + 1) if prev_meta else 0
-    cells_rel = f"cells-g{gen}"
-    cells_abs = _os.path.join(index_path, cells_rel)
-    # a crashed earlier writer may have left this generation dir behind;
-    # it is unreferenced (meta still points before it) — clear and reuse
-    import shutil as _shutil
-
-    _shutil.rmtree(cells_abs, ignore_errors=True)
+        parent = None
     assigned = corpus.select(
         F.col(id_col),
         F.col(vec_col),
         _ivf_assign_udf(centroids, 1)(F.col(vec_col)).getItem(0).alias("cell"),
     )
-    (
-        # repartition by cell first: one file per cell instead of up to
-        # (tasks × cells) shards — a probe then opens exactly its cells'
-        # files, and small-scale read overhead stays O(cells)
-        assigned.repartition(F.col("cell"))
-        .write.partitionBy("cell")
-        .parquet(cells_abs)
-    )
-    # cell sizes at build time = the drift baseline for recommend_rebuild;
-    # read back column-pruned (cell is the partition column — this touches
-    # footers/dirnames, not vector data)
-    spark = corpus.sparkSession
-    cell_counts = {
-        str(r["cell"]): r["count"]
-        for r in spark.read.parquet(cells_abs).groupBy("cell").count().collect()
-    }
     meta = {
         "id_col": id_col,
         "vec_col": vec_col,
@@ -537,18 +510,8 @@ def build_ivf_index(
         "train_sample": train_sample,
         "seed": seed,
         "centroids": centroids.tolist(),
-        "generation": gen,
-        "cells_rel": cells_rel,
-        "cell_counts": cell_counts,
-        "built_rows": int(sum(cell_counts.values())),
-        "built_cell_counts": cell_counts,
     }
-    _commit_ivf_meta(index_path, meta)
-    _gc_ivf_generations(
-        index_path,
-        keep={cells_rel} | ({prev_meta["cells_rel"]} if prev_meta and "cells_rel" in prev_meta else {"cells"}),
-    )
-    return meta
+    return _publish_generation(index_path, meta, parent, assigned)
 
 
 def _commit_ivf_meta(index_path: str, meta: dict) -> None:
@@ -559,15 +522,100 @@ def _commit_ivf_meta(index_path: str, meta: dict) -> None:
     write_json_atomic(_os.path.join(index_path, "meta.json"), meta)
 
 
-def _gc_ivf_generations(index_path: str, keep: set) -> None:
-    """Remove generation dirs not in ``keep`` (current + one stale
-    generation as the in-flight-reader grace window)."""
+_GENERATION_DIR = re.compile(r"cells-g(\d+)(-[0-9a-f]{8})?")
+
+
+def _publish_generation(
+    index_path: str,
+    meta: dict,
+    parent: dict | None,
+    rows: DataFrame,
+    touched: list | None = None,
+) -> dict:
+    """The one IVF generation commit (see build_ivf_index GENERATIONS).
+
+    Writes ``rows`` (id, vec, cell) by cell into this writer's own
+    ``cells-g{N}-{uuid8}`` (N = parent's generation + 1, 0 for a first
+    build), hardlinks the parent's cells outside ``touched`` across
+    (metadata-only, no data copy; ``touched=None`` rewrites every cell),
+    and commits ``meta`` with the new generation, directory and cell
+    counts — iff ``parent`` is still the current generation. Returns the
+    committed meta."""
     import os as _os
     import shutil as _shutil
+    import uuid as _uuid
 
+    gen = parent["generation"] + 1 if parent else 0
+    cells_rel = f"cells-g{gen}-{_uuid.uuid4().hex[:8]}"
+    cells_abs = _os.path.join(index_path, cells_rel)
+    try:
+        # repartition by cell first: one file per cell instead of up to
+        # (tasks × cells) shards — a probe then opens exactly its cells'
+        # files, and small-scale read overhead stays O(cells)
+        rows.repartition(F.col("cell")).write.partitionBy("cell").parquet(cells_abs)
+        # written cell sizes (the drift stats of recommend_rebuild), read
+        # back column-pruned: cell is the partition column, so this touches
+        # footers/dirnames, not vector data. A delta that only deletes can
+        # empty every cell it touches — then no cell dir was written.
+        counts = {}
+        if any(e.startswith("cell=") for e in _os.listdir(cells_abs)):
+            counts = {
+                str(r["cell"]): r["count"]
+                for r in rows.sparkSession.read.parquet(cells_abs)
+                .groupBy("cell").count().collect()
+            }
+        if touched is not None:
+            kept = {f"cell={c}" for c in touched}
+            parent_abs = ivf_cells_path(index_path, parent)
+            for entry in _os.listdir(parent_abs):
+                if not entry.startswith("cell=") or entry in kept:
+                    continue
+                dst_dir = _os.path.join(cells_abs, entry)
+                _os.makedirs(dst_dir)
+                for fname in _os.listdir(_os.path.join(parent_abs, entry)):
+                    _os.link(
+                        _os.path.join(parent_abs, entry, fname),
+                        _os.path.join(dst_dir, fname),
+                    )
+            # untouched cells carry their counts over; an emptied touched
+            # cell has none
+            counts = {
+                **{c: n for c, n in parent["cell_counts"].items()
+                   if f"cell={c}" not in kept},
+                **counts,
+            }
+        # the expected-parent check (GinTable commits make the same one):
+        # two writers both derive generation N from one parent — the loser
+        # must fail loudly instead of silently discarding the winner's work
+        try:
+            current = load_ivf_meta(index_path)
+        except FileNotFoundError:
+            current = None
+
+        def pointer(m):
+            return m and (m["generation"], m["cells_rel"])
+
+        if pointer(current) != pointer(parent):
+            raise RuntimeError(
+                "concurrent IVF update: index generation moved "
+                f"{pointer(parent)} -> {pointer(current)} while this write "
+                "ran — re-read the index and re-apply"
+            )
+    except BaseException:
+        _shutil.rmtree(cells_abs, ignore_errors=True)  # only ever our own
+        raise
+    new_meta = {**meta, "generation": gen, "cells_rel": cells_rel, "cell_counts": counts}
+    if touched is None:
+        new_meta["built_rows"] = int(sum(counts.values()))
+    # THE commit: readers before this see the parent generation (intact),
+    # readers after see the new one
+    _commit_ivf_meta(index_path, new_meta)
+    keep = {cells_rel, parent and parent["cells_rel"]}
     for name in _os.listdir(index_path):
-        if (name == "cells" or name.startswith("cells-g")) and name not in keep:
+        m = _GENERATION_DIR.fullmatch(name)
+        if m and int(m.group(1)) <= gen and name not in keep:
             _shutil.rmtree(_os.path.join(index_path, name), ignore_errors=True)
+    return new_meta
 
 
 def update_ivf_index(
@@ -583,31 +631,27 @@ def update_ivf_index(
     instead of a full ``build_ivf_index`` rebuild.
 
     ``changes`` carries (id_col, vec_col, change_type_col) with change
-    types ``upsert`` | ``delete`` (vec may be null for deletes).
+    types ``upsert`` | ``delete`` (vec may be null for deletes); other
+    columns are ignored, so a ``table_changes`` frame is passed as is.
 
     Physical shape, sized for a large corpus: ONE column-pruned (id, cell)
     scan of the index finds the changed ids' old cells (ids can live
     anywhere — no pruning possible for the lookup, but only the two slim
     columns are read); everything after is ∝ touched cells: their rows are
     re-read, changed ids anti-joined out, re-assigned upserts unioned in,
-    and ONLY those cells are physically rewritten — into a NEW generation
-    directory whose untouched cells are hardlinked from the old one
-    (metadata-only, no data copy), committed by one atomic meta.json
-    replace (see build_ivf_index GENERATIONS). Crash-safe (the old
-    generation stays current until the flip) and reader-safe (a reader's
-    loaded generation is never modified; one stale generation is retained
-    as a grace window). The quantizer is NOT retrained — use
+    and ONLY those cells are physically rewritten — into this writer's own
+    new generation directory, whose untouched cells are hardlinked from the
+    parent's, committed by one atomic meta.json replace iff no other
+    writer committed meanwhile (``_publish_generation``; see
+    build_ivf_index GENERATIONS). The quantizer is NOT retrained — use
     ``recommend_rebuild`` on the update-maintained cell-size stats to
     decide when sustained drift warrants a periodic full rebuild.
 
-    Returns {"touched_cells", "upserts", "deletes", "generation"} stats.
+    Returns {"touched_cells", "upserts", "deletes", "generation"} stats;
+    raises RuntimeError if another writer committed while this one ran.
     """
-    import os as _os
-    import shutil as _shutil
-
     meta = load_ivf_meta(index_path)
     centroids = np.asarray(meta["centroids"], dtype=np.float64)
-    cells_path = ivf_cells_path(index_path, meta)
     spark = changes.sparkSession
 
     # fail-fast on unknown change types: a caller feeding Delta-CDF
@@ -652,7 +696,7 @@ def update_ivf_index(
         _ivf_assign_udf(centroids, 1)(F.col(vec_col)).getItem(0).alias("cell"),
     ).localCheckpoint(eager=True)  # cell stats + keep-union + write
 
-    existing = spark.read.parquet(cells_path)
+    existing = spark.read.parquet(ivf_cells_path(index_path, meta))
     # old homes of changed ids: semi join over the slim (id, cell)
     # projection — deliberately NOT hint-broadcast (the delta can be
     # large; AQE picks broadcast when it is actually small)
@@ -673,7 +717,7 @@ def update_ivf_index(
     if not touched:
         return {
             "touched_cells": 0, "upserts": 0, "deletes": 0,
-            "generation": meta.get("generation", 0),
+            "generation": meta["generation"],
         }
 
     keep = (
@@ -681,104 +725,20 @@ def update_ivf_index(
         .join(changed_ids, id_col, "left_anti")
         .select(id_col, vec_col, "cell")
     )
-    replacement = keep.unionByName(
-        assigned_new.select(id_col, vec_col, "cell")
+    # ONE write of the touched cells into the next generation (reading and
+    # overwriting the same path in one job is unsafe anyway); a touched
+    # cell whose rows were all removed simply has no dir there
+    committed = _publish_generation(
+        index_path, meta, meta,
+        keep.unionByName(assigned_new.select(id_col, vec_col, "cell")),
+        touched,
     )
-    # ONE write action into the NEXT generation dir (reading and
-    # overwriting the same path in one job is unsafe anyway); only the
-    # touched cells materialize there. A touched cell whose rows were all
-    # removed simply has no dir in the new generation.
-    gen = meta.get("generation", 0) + 1
-    new_rel = f"cells-g{gen}"
-    new_abs = _os.path.join(index_path, new_rel)
-    _shutil.rmtree(new_abs, ignore_errors=True)  # crashed-writer leftover
-    (
-        replacement.repartition(F.col("cell"))
-        .write.partitionBy("cell")
-        .parquet(new_abs)
-    )
-    # touched-cell sizes for the drift stats: column-pruned count over the
-    # just-written partitions (footer-level work)
-    try:
-        touched_counts = {
-            str(r["cell"]): r["count"]
-            for r in spark.read.parquet(new_abs).groupBy("cell").count().collect()
-        }
-    except Exception:  # deletes-only delta emptied every touched cell:
-        touched_counts = {}  # the write left no parquet to infer from
-    # hardlink every UNTOUCHED cell's files across (metadata-only: no data
-    # copy, old files immutable — object-store variant would reference the
-    # old paths in a per-cell manifest instead)
-    touched_set = {f"cell={c}" for c in touched}
-    if _os.path.isdir(cells_path):
-        for entry in _os.listdir(cells_path):
-            if not entry.startswith("cell=") or entry in touched_set:
-                continue
-            src_dir = _os.path.join(cells_path, entry)
-            dst_dir = _os.path.join(new_abs, entry)
-            _os.makedirs(dst_dir, exist_ok=True)
-            for fname in _os.listdir(src_dir):
-                _os.link(
-                    _os.path.join(src_dir, fname), _os.path.join(dst_dir, fname)
-                )
-    # update the maintained cell-size stats: touched cells take their new
-    # counts (absent ⇒ emptied ⇒ 0 rows ⇒ dropped), untouched carry over
-    cell_counts = dict(meta.get("cell_counts", meta.get("built_cell_counts", {})))
-    for c in touched:
-        n = touched_counts.get(str(c), 0)
-        if n:
-            cell_counts[str(c)] = n
-        else:
-            cell_counts.pop(str(c), None)
-    new_meta = {
-        **meta,
-        "generation": gen,
-        "cells_rel": new_rel,
-        "cell_counts": cell_counts,
-    }
-    # THE commit: readers before this see the old generation (intact),
-    # readers after see the new one; a crash before this line changes
-    # nothing durable. Re-read-and-abort first: two concurrent updaters
-    # both derive generation+1 from the same parent — the loser must fail
-    # loudly instead of silently discarding the winner's delta (ADVICE
-    # round 5; GinTable commits make the same expected-parent check).
-    current = load_ivf_meta(index_path)
-    if current.get("generation", 0) != meta.get("generation", 0):
-        _shutil.rmtree(new_abs, ignore_errors=True)
-        raise RuntimeError(
-            f"concurrent IVF update: index generation moved "
-            f"{meta.get('generation', 0)} -> {current.get('generation', 0)} "
-            "while this update ran — re-read the index and re-apply the delta"
-        )
-    _commit_ivf_meta(index_path, new_meta)
-    _gc_ivf_generations(index_path, keep={new_rel, meta.get("cells_rel", "cells")})
     return {
         "touched_cells": len(touched),
         "upserts": int(n_upserts),
         "deletes": int(n_deletes),
-        "generation": gen,
+        "generation": committed["generation"],
     }
-
-
-def update_ivf_index_from_table(
-    table,
-    index_path: str,
-    from_version: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Sync a persisted IVF index with a GinTable of vectors: consume the
-    table's CDC-out delta since ``from_version`` (sources/gintable.py::
-    table_changes — work ∝ changed buckets) and apply it incrementally
-    (``update_ivf_index``). The index serves reads continuously; only
-    changed vectors are reassigned. ``id_col`` is the table's merge key."""
-    from opengin_ingestion_spark.sources.gintable import table_changes
-
-    delta = table_changes(table, from_version, key=id_col)
-    changes = delta.select(
-        F.col(id_col), F.col(vec_col), F.col("_change_type")
-    )
-    return update_ivf_index(changes, index_path, id_col, vec_col)
 
 
 def load_ivf_meta(index_path: str) -> dict:
@@ -797,13 +757,13 @@ def load_ivf_centroids(index_path: str) -> np.ndarray:
 
 
 def ivf_cells_path(index_path: str, meta: dict | None = None) -> str:
-    """Absolute path of the CURRENT generation's cells directory (legacy
-    pre-generation indexes resolve to the old fixed ``cells`` dir)."""
+    """Absolute path of the cells directory of ``meta``'s generation
+    (default: the current one)."""
     import os as _os
 
     if meta is None:
         meta = load_ivf_meta(index_path)
-    return _os.path.join(index_path, meta.get("cells_rel", "cells"))
+    return _os.path.join(index_path, meta["cells_rel"])
 
 
 def ivf_index_stats(index_path: str) -> dict:
@@ -917,14 +877,5 @@ def ivf_search(
         "q_id", "c_id",
         (_dot("q_vec", "c_vec") / (F.col("q_nrm") * F.col("c_nrm"))).alias("cos"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("q_id").alias(id_col),
-            F.col("c_id").alias("neighbor_id"),
-            F.col("rank"),
-        )
-    )
+    return _rank_topk(scored, id_col, k)
 

@@ -15,9 +15,11 @@ checkpoint written AFTER the apply (temp+rename, same atomic-publish
 convention as every other commit in the engine). A crash between apply
 and checkpoint re-delivers the same `(from, to]` delta on restart — so
 the consumer must be idempotent over a replayed delta. The shipped
-consumer (`sync_ivf_index`) is: `update_ivf_index` removes changed ids
-wherever they live before re-adding them, so re-applying a delta
-converges to the same index generation content.
+consumer (`sync_ivf_index`) is: it passes each `table_changes` frame
+straight to `update_ivf_index` (which reads only the key, vector and
+`_change_type` columns), and that removes changed ids wherever they live
+before re-adding them, so re-applying a delta converges to the same index
+generation content.
 
 Work per poll ∝ changed buckets (table_changes' manifest diff), never
 table size — a quiet table costs one manifest read per poll.
@@ -114,20 +116,11 @@ def sync_ivf_index(
     anti-joins its ids out before re-adding them, and the index's own
     generation commit makes each apply atomic for readers.
     """
-    from pyspark.sql import functions as F
-
     from opengin_ingestion_spark.operators.similarity import update_ivf_index
 
     id_col = table.key_col()
 
     def apply_delta(delta, _from_v, _to_v):
-        update_ivf_index(
-            delta.select(
-                F.col(id_col), F.col(vec_col), F.col("_change_type")
-            ),
-            index_path,
-            id_col=id_col,
-            vec_col=vec_col,
-        )
+        update_ivf_index(delta, index_path, id_col=id_col, vec_col=vec_col)
 
     return follow_changes(table, apply_delta, checkpoint_path, **follow_kwargs)

@@ -103,8 +103,8 @@ def test_cli_fold(spark, tiny_log, tmp_path, capsys):
 
 
 def test_cli_ivf_update_arg_parsing(monkeypatch, capsys):
-    """`cli ivf-update` routes its flags to update_ivf_index_from_table
-    (the operator itself is covered in test_similarity.py)."""
+    """`cli ivf-update` routes its flags to cmd_ivf_update (the
+    operator itself is covered in test_similarity.py)."""
     import opengin_ingestion_spark.cli as cli_mod
 
     seen = {}

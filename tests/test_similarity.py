@@ -328,9 +328,10 @@ def test_incremental_ivf_update_equals_direct_assignment(spark, tmp_path):
 
 def test_incremental_ivf_from_gintable_changes(spark, tmp_path):
     """End-to-end with the lake layer: vectors live in a GinTable, a merge
-    applies upserts + deletes, update_ivf_index_from_table consumes the
-    CDC-out delta — the index then equals a direct assignment of the
-    table's current state under the persisted quantizer."""
+    applies upserts + deletes, and update_ivf_index consumes the
+    table_changes delta as is (the shipped cli/follow path) — the index
+    then equals a direct assignment of the table's current state under the
+    persisted quantizer."""
     import datetime as dt
 
     from pyspark.sql import functions as F
@@ -341,9 +342,9 @@ def test_incremental_ivf_from_gintable_changes(spark, tmp_path):
         _ivf_assign_udf,
         build_ivf_index,
         load_ivf_centroids,
-        update_ivf_index_from_table,
+        update_ivf_index,
     )
-    from opengin_ingestion_spark.sources.gintable import GinTable
+    from opengin_ingestion_spark.sources.gintable import GinTable, table_changes
 
     schema = T.StructType([
         T.StructField("vec_key", T.StringType(), False),
@@ -395,7 +396,9 @@ def test_incremental_ivf_from_gintable_changes(spark, tmp_path):
         ]
     )
     merge_batch(table, batch(upd_rows), batch_id=1)
-    stats = update_ivf_index_from_table(table, idx, v0, id_col="vec_key")
+    stats = update_ivf_index(
+        table_changes(table, v0, key="vec_key"), idx, id_col="vec_key"
+    )
     assert stats["upserts"] == 8 and stats["deletes"] == 5
 
     cent = load_ivf_centroids(idx)
@@ -487,15 +490,17 @@ def test_ivf_generation_commit_torn_update_invisible(spark, tmp_path):
     # search still serves the committed generation
     assert ivf_search(df.limit(5), idx, k=3).count() > 0
 
-    # a real update now reuses/clears the torn dir and commits atomically
+    # a real update writes its own directory, commits atomically and
+    # GCs the torn dir
     delta = spark.createDataFrame(
         [(0, [float(x) for x in centers[1]], "upsert")],
         "vec_id long, embedding array<float>, _change_type string",
     )
     stats = update_ivf_index(delta, idx)
     assert stats["generation"] == 1
-    assert load_ivf_meta(idx)["cells_rel"] == "cells-g1"
-    assert ivf_cells_path(idx).endswith("cells-g1")
+    assert load_ivf_meta(idx)["cells_rel"].startswith("cells-g1-")
+    assert os.path.basename(ivf_cells_path(idx)).startswith("cells-g1-")
+    assert not os.path.exists(torn)  # the torn writer's garbage is GC'd
     assert 0 in {v for v, _, _ in _cells_state(spark, idx)}
 
 
@@ -532,7 +537,97 @@ def test_ivf_update_reader_grace_window(spark, tmp_path):
 
     update_ivf_index(delta(1), idx)
     assert not os.path.isdir(old_path)  # GC'd after the next commit
-    assert ivf_cells_path(idx).endswith("cells-g2")
+    assert os.path.basename(ivf_cells_path(idx)).startswith("cells-g2-")
+
+
+def test_ivf_losing_concurrent_writer_keeps_winners_generation(
+    spark, tmp_path, monkeypatch
+):
+    """Two updaters start from generation 0; the first commits generation 1
+    while the second still holds the stale meta. The loser must raise and
+    delete only its own directory: the winner's committed cells (and so
+    every search) must survive the lost race."""
+    import os
+
+    import pytest
+
+    import opengin_ingestion_spark.operators.similarity as sim
+
+    df, centers, rng = _clustered_corpus(spark, seed=47, n=80)
+    idx = str(tmp_path / "ivf_race")
+    sim.build_ivf_index(df, idx, n_centroids=4, seed=42)
+    stale = sim.load_ivf_meta(idx)
+
+    def delta(i):
+        return spark.createDataFrame(
+            [(i, [float(x) for x in centers[(i + 1) % 4]], "upsert")],
+            "vec_id long, embedding array<float>, _change_type string",
+        )
+
+    sim.update_ivf_index(delta(0), idx)  # the winner commits generation 1
+    winner = sim.ivf_cells_path(idx)
+    n_winner = spark.read.parquet(winner).count()
+
+    real_loader = sim.load_ivf_meta
+    calls = []
+
+    def stale_first_load(path):
+        calls.append(path)
+        return stale if len(calls) == 1 else real_loader(path)
+
+    monkeypatch.setattr(sim, "load_ivf_meta", stale_first_load)
+    with pytest.raises(RuntimeError, match="concurrent IVF update"):
+        sim.update_ivf_index(delta(1), idx)
+    monkeypatch.setattr(sim, "load_ivf_meta", real_loader)
+
+    assert sim.ivf_cells_path(idx) == winner and os.path.isdir(winner)
+    assert spark.read.parquet(winner).count() == n_winner
+    assert sim.ivf_search(df.limit(5), idx, k=3).count() > 0
+    # the loser's own generation-1 directory is gone; the winner's and its
+    # parent (the grace window) remain
+    assert sorted(n for n in os.listdir(idx) if n.startswith("cells-g")) == sorted(
+        [os.path.basename(winner), stale["cells_rel"]]
+    )
+
+
+def test_ivf_deletes_only_delta_keeps_stats_equal_to_cells(spark, tmp_path):
+    """A delta with only deletes can empty every cell it touches (no cell
+    directory is written at all): the maintained stats must still equal a
+    scan of the committed cells — first for a delta that empties one cell,
+    then for one that only shrinks another."""
+    from opengin_ingestion_spark.operators.similarity import (
+        build_ivf_index,
+        ivf_index_stats,
+        update_ivf_index,
+    )
+
+    df, _, _ = _clustered_corpus(spark, seed=53, n=80)
+    idx = str(tmp_path / "ivf_deletes")
+    build_ivf_index(df, idx, n_centroids=4, seed=42)
+    by_cell = {}
+    for v, c, _ in _cells_state(spark, idx):
+        by_cell.setdefault(c, []).append(v)
+    emptied, shrunk = sorted(by_cell)[:2]
+
+    def deletes(ids):
+        return spark.createDataFrame(
+            [(i, None, "delete") for i in ids],
+            "vec_id long, embedding array<float>, _change_type string",
+        )
+
+    for ids in (by_cell[emptied], by_cell[shrunk][:3]):
+        stats = update_ivf_index(deletes(ids), idx)
+        assert stats["touched_cells"] == 1 and stats["upserts"] == 0
+        state = _cells_state(spark, idx)
+        cells = {c for _, c, _ in state}
+        s = ivf_index_stats(idx)
+        assert s["total_rows"] == len(state)
+        assert s["n_cells"] == len(cells)
+        assert s["max_cell"] == max(
+            sum(1 for _, c, _ in state if c == cell) for cell in cells
+        )
+    assert emptied not in {c for _, c, _ in _cells_state(spark, idx)}
+    assert ivf_index_stats(idx)["total_rows"] == 80 - len(by_cell[emptied]) - 3
 
 
 def test_ivf_recommend_rebuild_signals(spark, tmp_path):
